@@ -173,13 +173,14 @@ def load_table(
     and no exchange is added either way."""
     path = table_path(sf_dir, name)
     sig = _freshness_signature(path)
-    key = (spark.sparkContext.applicationId, path, fanout)
+    # a fan-out frame's plan depends on the slot count it was built under
+    slots = spark.sparkContext.defaultParallelism if fanout else None
+    key = (spark.sparkContext.applicationId, path, slots)
     cached = _TABLE_CACHE.get(key)
     if cached is not None and sig is not None and cached[0] == sig:
         return cached[1]
     df = normalize_event_time(spark.read.parquet(path), name)
     if fanout:
-        slots = spark.sparkContext.defaultParallelism
         splits = _scan_splits(path, sig)
         if splits is not None:
             n_rows, n_groups = splits

@@ -15,8 +15,12 @@ The reference's 4-line API maps to:
 
 Phase ordering is preserved: data loads BEFORE index/FK DDL emission
 (bulk-load speed; FK targets must exist — SURVEY.md §3.1 step 2).
-Each table is one lazy DataFrame plan: a stats pass (one agg job) and a
-write pass. Per-table phase timings mirror ``print_timings`` (O2).
+Each table is one lazy DataFrame plan. On DuckDB and SQLite targets it
+is read once: the standardizer's stats ride the CSV stage write and the
+loader applies the decisions (sources/bulkload.py). File and JDBC
+targets must cast before they write, so they run a stats pass (one agg
+job) and then the write pass. Per-table phase timings mirror
+``print_timings`` (O2).
 """
 
 from __future__ import annotations
@@ -109,12 +113,16 @@ class Target:
 
 @dataclass
 class TableReport:
-    """O2 per-table metrics. Caveat on ``phase_seconds``: Spark is
-    lazy, so 'extract'/'transform' time only plan construction plus the
-    standardizer's stats action ('standardize'); the extract+transform
-    COMPUTE executes inside the write and is billed to 'load' — unlike
-    the reference's eager row pipeline, where each phase did its own
-    work."""
+    """O2 per-table metrics. ``n_rows`` is the rows this run loaded
+    (in append mode, not the table's total), except on file targets,
+    which re-count the written files. Caveat on ``phase_seconds``:
+    Spark is lazy, so 'extract'/'transform' time only plan construction
+    plus the standardizer's stats action ('standardize'); the
+    extract+transform COMPUTE executes inside the write and is billed
+    to 'load' — unlike the reference's eager row pipeline, where each
+    phase did its own work. On DuckDB and SQLite targets the stats ride
+    the stage write, so 'standardize' is about 0 and stats time is
+    billed to 'load' too."""
 
     table: str
     dest_table: str
@@ -430,10 +438,10 @@ class Migration:
             t_rules = time.monotonic()
 
             decisions = []
-            if self.standardize_types:
-                df, decisions = standardize(
-                    df, (self.rules.ignored_col_suffixes if self.rules else None)
-                )
+            suffixes = self.rules.ignored_col_suffixes if self.rules else None
+            bulk = self.target.fmt in ("duckdb", "sqlite")
+            if self.standardize_types and not bulk:
+                df, decisions = standardize(df, suffixes)
             t_std = time.monotonic()
 
             n_loaded: int | None = None
@@ -455,11 +463,14 @@ class Migration:
                     varchar_meta=varchar_metadata(decisions),
                 )
                 n_loaded = int(obs.get["rows"])
-            elif self.target.fmt in ("duckdb", "sqlite"):
+            elif bulk:
                 # W3 native bulk path: per-partition dialect CSV +
                 # native loader into the embedded destination DB
-                # (duckdb COPY FROM / sqlite .import-equivalent)
+                # (duckdb INSERT … SELECT FROM read_csv / sqlite
+                # .import-equivalent). One source read: standardize's
+                # stats ride the stage write, the loader applies them.
                 from etlalchemy_spark.sources.bulkload import (
+                    LoadReport,
                     bulk_load_duckdb,
                     bulk_load_sqlite,
                 )
@@ -467,13 +478,20 @@ class Migration:
                 loader = (
                     bulk_load_duckdb if self.target.fmt == "duckdb" else bulk_load_sqlite
                 )
-                n_loaded = loader(
+                load = LoadReport()
+                loader(
                     df,
                     self.target.path,
                     dest_name,
                     f"{self.target.path}.csv_stage/{dest_name}",
                     mode=table_mode,
+                    standardize_types=self.standardize_types,
+                    ignored_suffixes=suffixes,
+                    report=load,
                 )
+                n_loaded, df = load.rows, load.loaded
+                if self.standardize_types:
+                    decisions = load.decisions
             else:
                 write_file(
                     df, f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",

@@ -12,12 +12,17 @@ caveat): observe the data, then
 - T9  drop columns by name suffix (rule-driven, no scan)
 
 The reference fetches every row into driver memory and loops in Python.
-Here ALL observation happens in ONE distributed aggregate pass per
-table (a single ``df.agg`` with 2–4 expressions per column → one job,
-no shuffle beyond the final partial-merge), and decisions compile to
-``cast``/``drop`` — so the whole pass scales to 100 TB: cost is one
-full scan, bandwidth-bound, with column pruning inapplicable (we need
-every column) but predicate-free.
+Here ALL observation is one set of aggregate expressions per table
+(``stats_exprs``: 2–4 per column), and decisions compile to
+``cast``/``drop``. Two ways to run them:
+
+- ``standardize`` (file and JDBC targets, which must cast before they
+  write): one ``df.agg`` job, then the write reads the source again.
+- the embedded bulk loaders (sources/bulkload.py) attach the same
+  expressions as an ``Observation`` to the CSV stage write, so the
+  stats ride the scan that has to run anyway; they ``decide`` from that
+  one observed row and apply the casts and drops on the destination
+  side. One source read per table.
 """
 
 from __future__ import annotations
@@ -58,34 +63,42 @@ class ColumnDecision:
     stats: dict = field(default_factory=dict)
 
 
+def _q(name: str) -> str:
+    """Backquoted Spark SQL identifier (embedded backquotes doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def stats_exprs(df: DataFrame) -> list:
-    """The single-pass observation expressions for every column."""
+    """The single-pass observation expressions for every column.
+
+    Built as SQL text, one ``F.expr`` per aggregate: composing each
+    from Column calls costs ~10 Py4J round trips per expression, which
+    on small tables cost more than the scan the stats ride."""
     # total row count: distinguishes a 0-ROW table (standardize is a
     # no-op — dropping every column of an empty partition would destroy
     # the schema) from a populated table with all-NULL columns (T8's
     # actual target)
-    exprs: list = [F.count(F.lit(1)).alias("__total")]
+    exprs = ["count(1) AS __total"]
     for f in df.schema.fields:
-        c, dt = f.name, f.dataType
-        exprs.append(F.count(F.col(c)).alias(f"{c}__n"))
+        c, dt = _q(f.name), f.dataType
+        exprs.append(f"count({c}) AS {_q(f.name + '__n')}")
         if isinstance(dt, INT_TYPES):
-            exprs.append(F.min(c).alias(f"{c}__min"))
-            exprs.append(F.max(c).alias(f"{c}__max"))
+            exprs.append(f"min({c}) AS {_q(f.name + '__min')}")
+            exprs.append(f"max({c}) AS {_q(f.name + '__max')}")
             # all-01: max(0/1 indicator of "value outside {0,1}") == 0.
-            # NULL must count as inside (isin alone yields NULL for NULL
-            # input → otherwise(1) would block inference on any
-            # nullable flag column)
+            # NULL must count as inside (IN alone yields NULL for NULL
+            # input → ELSE 1 would block inference on any nullable
+            # flag column)
             exprs.append(
-                F.max(
-                    F.when(F.col(c).isNull() | F.col(c).isin(0, 1), 0).otherwise(1)
-                ).alias(f"{c}__not01")
+                f"max(CASE WHEN {c} IS NULL OR {c} IN (0, 1) THEN 0 ELSE 1 END) "
+                f"AS {_q(f.name + '__not01')}"
             )
         elif isinstance(dt, T.StringType):
-            exprs.append(F.max(F.length(c)).alias(f"{c}__maxlen"))
+            exprs.append(f"max(length({c})) AS {_q(f.name + '__maxlen')}")
         # floats/decimals: no stats — decide() passes them through
         # unconditionally (T5), so min/max here was dead aggregate work
         # on the one-pass scan this module advertises as the cost center
-    return exprs
+    return [F.expr(e) for e in exprs]
 
 
 def observe(df: DataFrame) -> dict:
@@ -98,6 +111,17 @@ def observe(df: DataFrame) -> dict:
     return row.asDict()
 
 
+def is_ignored(name: str, ignored_suffixes: list[str] | None) -> bool:
+    """T9: the column is dropped by name suffix (no scan needed)."""
+    return bool(ignored_suffixes) and any(name.endswith(s) for s in ignored_suffixes)
+
+
+def keep_all(df: DataFrame) -> list[ColumnDecision]:
+    """A "keep" decision for every column: the 0-row outcome, and what
+    a bulk load without standardization applies."""
+    return [ColumnDecision(f.name, f.dataType.simpleString(), "keep") for f in df.schema.fields]
+
+
 def decide(df: DataFrame, stats: dict, ignored_suffixes: list[str] | None = None) -> list[ColumnDecision]:
     """Compile observed stats into per-column decisions (T2/T3/T4/T8/T9).
 
@@ -106,15 +130,12 @@ def decide(df: DataFrame, stats: dict, ignored_suffixes: list[str] | None = None
     (all counts 0 → drop_empty everywhere) returned a zero-column
     frame that destroyed the table schema on empty partitions."""
     if stats.get("__total") == 0:
-        return [
-            ColumnDecision(f.name, f.dataType.simpleString(), "keep")
-            for f in df.schema.fields
-        ]
+        return keep_all(df)
     out: list[ColumnDecision] = []
     for f in df.schema.fields:
         c, dt = f.name, f.dataType
         src = dt.simpleString()
-        if ignored_suffixes and any(c.endswith(s) for s in ignored_suffixes):
+        if is_ignored(c, ignored_suffixes):
             out.append(ColumnDecision(c, src, "drop_suffix"))
             continue
         n = stats.get(f"{c}__n", 0)
@@ -148,16 +169,17 @@ def decide(df: DataFrame, stats: dict, ignored_suffixes: list[str] | None = None
 
 
 def apply_decisions(df: DataFrame, decisions: list[ColumnDecision]) -> DataFrame:
-    """Compile decisions to a single ``select`` (casts + drops)."""
+    """Compile decisions to a single ``select`` (casts + drops), as one
+    ``selectExpr`` call."""
     cols = []
     for d in decisions:
         if d.action in ("drop_empty", "drop_suffix"):
             continue
         if d.action == "cast":
-            cols.append(F.col(d.name).cast(d.target_type).alias(d.name))
+            cols.append(f"CAST({_q(d.name)} AS {d.target_type}) AS {_q(d.name)}")
         else:
-            cols.append(F.col(d.name))
-    return df.select(*cols)
+            cols.append(_q(d.name))
+    return df.selectExpr(*cols)
 
 
 def standardize(df: DataFrame, ignored_suffixes: list[str] | None = None) -> tuple[DataFrame, list[ColumnDecision]]:

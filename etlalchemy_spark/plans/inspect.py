@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import io
 import re
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 from pyspark.sql import DataFrame
 
@@ -134,6 +134,30 @@ def pinned_plan_fingerprint(name: str, df: DataFrame, spark, sf_dir: str) -> str
     import hashlib
 
     return hashlib.md5(pinned_plan_text(name, df, spark, sf_dir).encode()).hexdigest()[:16]
+
+
+@contextmanager
+def fixed_default_parallelism(spark, n: int):
+    """Build plans inside the block as if the context had ``n`` task
+    slots: every ``sparkContext.defaultParallelism`` read (spread
+    guards, keyed repartitions, file split sizing) returns ``n``. A
+    plan's shape can depend on that count — an exchange is elided when
+    a repartition's width happens to equal the shuffle partitions — so
+    plan pins are taken and checked under one recorded value, not the
+    host's core count. Sets ``spark.default.parallelism`` on the live
+    context conf, which the scheduler backend reads on every call, and
+    restores it on exit."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    key = "spark.default.parallelism"
+    prev = conf.get(key) if conf.contains(key) else None
+    conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.remove(key)
+        else:
+            conf.set(key, prev)
 
 
 def has_wholestage_codegen(df: DataFrame) -> bool:

@@ -754,9 +754,10 @@ SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer
 def etl_bulk_load_roundtrip(spark, sf_dir):
     """W3 executed end-to-end (upstream ``send_data`` ≈L750–850): Spark
     writes the dialect CSV one file per partition, the destination
-    engine (embedded DuckDB — the one DBMS with a native ``COPY FROM``
-    in this sandbox) creates the table and bulk-loads every partition
-    file with ``COPY``, then exports what it loaded; Spark re-reads
+    engine (embedded DuckDB, an in-process DBMS with a native CSV
+    loader) creates the table and bulk-loads every partition
+    file in one ``INSERT … SELECT FROM read_csv`` with the ``COPY``
+    CSV options, then exports what it loaded; Spark re-reads
     that export and the oracle hash-compares it against the source
     table — proving the loader conventions (NULL marker, quoting,
     escapes, float text round-trip) are lossless. Postgres/MySQL run
@@ -1062,7 +1063,8 @@ def etl_migrate_duckdb_roundtrip(spark, sf_dir):
     destination database file (``drop_destination=True``, upstream
     ETLAlchemyTarget ≈L20–60), reflects nation+region, standardizes,
     and loads each table through the NATIVE bulk path (per-partition
-    CSV + DuckDB ``COPY FROM``); the loaded nation table is exported
+    CSV + DuckDB ``read_csv``, standardize's stats riding the stage
+    write); the loaded nation table is exported
     back and hash-compared against the source — the full
     reflect→transform→bulk-load→verify lifecycle executed, not mocked."""
     import os

@@ -14,26 +14,46 @@ Spark-first re-expression:
    for the destination dialect (pure string generation — auditable,
    and exactly what a deployment issues through its DB connection).
 3. ``bulk_load_duckdb`` EXECUTES the path end-to-end against an
-   embedded DuckDB database (the only DBMS with a native ``COPY FROM``
-   available in this sandbox): create table → one ``COPY table FROM
-   file`` per partition file → row-count audit. Postgres/MySQL legs
-   run the same two phases with their statements from (2) through any
-   DBAPI/JDBC connection — only statement execution differs.
+   embedded DuckDB database (an in-process DBMS with a native CSV
+   loader): stage → ``CREATE TABLE`` → one ``INSERT
+   INTO table SELECT … FROM read_csv([every partition file], …)`` →
+   row-count audit, the DROP/CREATE/INSERT in one transaction.
+   ``bulk_load_sqlite`` is the same for SQLite through the stdlib
+   driver. Postgres/MySQL legs run the per-file statements from (2)
+   through any DBAPI/JDBC connection.
 
-Scale note: the COPY statements per file are independent — a real
+One Spark pass per table: the stage write is the only job that reads
+the source. When asked to standardize, the loaders attach the
+standardizer's stats (operators/standardize.py ``stats_exprs``) to that
+write as an ``Observation``, ``decide`` from the one observed row, and
+apply the decisions on the destination side: ``CREATE TABLE`` gets the
+narrowed or boolean types without the dropped columns, and the load
+casts and skips columns on the way in. Suffix-ignored columns (T9)
+need no stats and are never staged.
+
+Scale note: the per-file statements of (2) are independent — a real
 deployment fans them out (one loader session per partition file, as
-``mysqlimport --use-threads`` does); the embedded executor here runs
-them serially through one connection, which is the sandbox-local
-equivalent, not a design limit.
+``mysqlimport --use-threads`` does); the embedded DuckDB executor reads
+every file in one statement, which DuckDB itself parallelizes.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
+from etlalchemy_spark.operators.standardize import (
+    ColumnDecision,
+    apply_decisions,
+    decide,
+    is_ignored,
+    keep_all,
+    stats_exprs,
+)
 from etlalchemy_spark.sources.files import CSV_DIALECT_OPTIONS, write_csv_for_bulk_load
 
 # Spark simpleString → destination column type for CREATE TABLE before
@@ -140,25 +160,29 @@ def _quote_ident(name: str, dialect: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
-def _sql_path(path: str) -> str:
-    """File path as a SQL single-quoted literal body (quotes doubled)."""
-    return path.replace("'", "''")
+def _sql_str(text: str) -> str:
+    """A file path or name as a SQL single-quoted literal body (quotes
+    doubled)."""
+    return text.replace("'", "''")
+
+
+def _ddl_type(dtype, dialect: str) -> str:
+    """Destination column type for one Spark type."""
+    s = dtype.simpleString()
+    if s.startswith("decimal"):
+        # sqlite NUMERIC affinity coerces through float — keep
+        # decimals as TEXT there (re-typed on export)
+        return "TEXT" if dialect == "sqlite" else "DECIMAL" + s[len("decimal"):]
+    return _BULK_DDL_TYPES[dialect].get(s, "VARCHAR" if dialect == "duckdb" else "TEXT")
 
 
 def schema_ddl(df: DataFrame, table: str, dialect: str = "duckdb") -> str:
     """``CREATE TABLE`` straight from the DataFrame schema (the
     pre-load half of upstream ``Table.create``, W4)."""
-    tmap = _BULK_DDL_TYPES[dialect]
-    cols = []
-    for f in df.schema.fields:
-        s = f.dataType.simpleString()
-        if s.startswith("decimal"):
-            # sqlite NUMERIC affinity coerces through float — keep
-            # decimals as TEXT there (re-typed on export)
-            ddl_t = "TEXT" if dialect == "sqlite" else "DECIMAL" + s[len("decimal"):]
-        else:
-            ddl_t = tmap.get(s, "VARCHAR" if dialect == "duckdb" else "TEXT")
-        cols.append(f"{_quote_ident(f.name, dialect)} {ddl_t}")
+    cols = [
+        f"{_quote_ident(f.name, dialect)} {_ddl_type(f.dataType, dialect)}"
+        for f in df.schema.fields
+    ]
     return f"CREATE TABLE {_quote_ident(table, dialect)} ({', '.join(cols)})"
 
 
@@ -300,7 +324,7 @@ def bulk_load_statements(
     for f in partition_files(csv_dir):
         if dialect == "mysql":
             stmts.append(
-                f"LOAD DATA LOCAL INFILE '{_sql_path(f)}' INTO TABLE {q} "
+                f"LOAD DATA LOCAL INFILE '{_sql_str(f)}' INTO TABLE {q} "
                 f"FIELDS TERMINATED BY '{delim}' OPTIONALLY ENCLOSED BY '\"' "
                 f"ESCAPED BY '\\\\'"
                 + collist
@@ -310,14 +334,14 @@ def bulk_load_statements(
             # mirror of the "duckdb" writer conventions (lossless for
             # NULL vs '' vs a literal nullstr-lookalike)
             stmts.append(
-                f"COPY {q}{collist} FROM '{_sql_path(f)}' "
+                f"COPY {q}{collist} FROM '{_sql_str(f)}' "
                 f"(FORMAT CSV, HEADER FALSE, DELIMITER '{delim}', "
                 f"QUOTE '\"', ESCAPE '\"', NULLSTR '{nullv}', "
                 f"ALLOW_QUOTED_NULLS FALSE)"
             )
         elif dialect == "postgresql":
             stmts.append(
-                f"COPY {q}{collist} FROM '{_sql_path(f)}' WITH "
+                f"COPY {q}{collist} FROM '{_sql_str(f)}' WITH "
                 f"(FORMAT csv, HEADER false, DELIMITER '{delim}', "
                 f"QUOTE '\"', ESCAPE '\\', NULL '{nullv}')"
             )
@@ -345,61 +369,142 @@ def bulk_load_statements(
     return stmts
 
 
+@dataclass
+class LoadReport:
+    """What one bulk load observed while staging; the loaders fill it
+    in when passed as ``report=``."""
+
+    decisions: list[ColumnDecision] = field(default_factory=list)
+    rows: int = 0  # rows this load inserted (the stage Observation's count)
+    loaded: DataFrame | None = None  # the frame with the decisions applied
+
+
+def _preflight(table: str, mode: str, have: list[str] | None, want: list[str], exact: bool = True) -> None:
+    """Mode checks against the destination table's columns ``have``
+    (None: no such table). ``want`` is what the load writes; with
+    ``exact=False`` standardization may still drop some of it, so only
+    a destination column the frame lacks is drift."""
+    if have is None:
+        return
+    if mode == "error":
+        raise ValueError(f"table {table} already exists (mode=error)")
+    drift = sorted(have) != sorted(want) if exact else not set(have) <= set(want)
+    if mode == "append" and drift:
+        raise ValueError(
+            f"append into {table}: existing columns {sorted(have)} "
+            f"!= DataFrame columns {sorted(want)} — the names must "
+            "match as a set"
+        )
+
+
+def _stage(
+    df: DataFrame,
+    csv_dir: str,
+    dialect: str,
+    standardize_types: bool,
+    ignored_suffixes: list[str] | None,
+) -> tuple[DataFrame, DataFrame, int, list[ColumnDecision]]:
+    """Stage ``df`` in one Spark job, the standardizer's stats riding
+    it as an Observation. Returns the staged frame; the frame to load
+    (``df`` with the decided casts and drops: a lazy plan whose schema
+    costs no job); the rows staged; and the decisions."""
+    suffixes = ignored_suffixes if standardize_types else None
+    ignored = [c for c in df.columns if is_ignored(c, suffixes)]
+    staged = df.drop(*ignored) if ignored else df
+    obs = Observation()
+    exprs = stats_exprs(staged) if standardize_types else [F.expr("count(1) AS __total")]
+    write_csv_for_bulk_load(staged, csv_dir, dialect=dialect, observe=(obs, exprs))
+    stats = obs.get
+    decisions = decide(df, stats, suffixes) if standardize_types else keep_all(df)
+    return staged, apply_decisions(df, decisions), stats["__total"], decisions
+
+
+def _duckdb_insert(table: str, staged: DataFrame, loaded: DataFrame, files: list[str]) -> str:
+    """One DuckDB ``INSERT … SELECT`` over every partition file. The
+    stage is read with its own (source) types and the ``COPY`` CSV
+    options of ``bulk_load_statements``, so NULL, '' and quotes stay
+    lossless; decided casts apply on the way in, dropped columns are
+    never selected."""
+    src = {f.name: f.dataType for f in staged.schema.fields}
+    columns = ", ".join(
+        f"'{_sql_str(f.name)}': '{_ddl_type(f.dataType, 'duckdb')}'" for f in staged.schema.fields
+    )
+    names, exprs = [], []
+    for f in loaded.schema.fields:
+        c = _quote_ident(f.name, "duckdb")
+        names.append(c)
+        exprs.append(
+            c if f.dataType == src[f.name] else f"CAST({c} AS {_ddl_type(f.dataType, 'duckdb')}) AS {c}"
+        )
+    opts = CSV_DIALECT_OPTIONS["duckdb"]
+    paths = ", ".join(f"'{_sql_str(p)}'" for p in files)
+    return (
+        f"INSERT INTO {_quote_ident(table, 'duckdb')} ({', '.join(names)}) "
+        f"SELECT {', '.join(exprs)} FROM read_csv([{paths}], columns={{{columns}}}, "
+        f"header=false, delim='{opts['delimiter']}', quote='\"', escape='\"', "
+        f"nullstr='{opts['nullValue']}', allow_quoted_nulls=false, auto_detect=false)"
+    )
+
+
 def bulk_load_duckdb(
     df: DataFrame,
     db_path: str,
     table: str,
     csv_dir: str,
     mode: str = "overwrite",
+    standardize_types: bool = False,
+    ignored_suffixes: list[str] | None = None,
+    report: LoadReport | None = None,
 ) -> int:
     """Execute the W3 path end-to-end into an embedded DuckDB database:
-    dialect CSV per partition → ``CREATE TABLE`` → native ``COPY FROM``
-    per file → loaded row count. ``mode``: overwrite (drop+create),
-    append (create if absent; existing column names must match the
-    DataFrame's, checked BEFORE any file lands), error (fail if table
-    exists). Mode/existence checks run before the CSV stage is written
-    so a doomed load fails before the expensive work."""
+    dialect CSV per partition → ``CREATE TABLE`` → one ``INSERT …
+    SELECT FROM read_csv`` over every file → the table's row count.
+    ``mode``: overwrite (drop+create), append (create if absent;
+    existing column names must match the loaded columns), error (fail
+    if table exists). Mode/existence checks run before the CSV stage is
+    written so a doomed load fails before the expensive work (only the
+    exact append column match waits for the standardizer's drops, and
+    still runs before the destination is touched); the DROP, CREATE
+    and INSERT run in one transaction, so a failed load leaves the old
+    table and its rows in place.
+
+    ``standardize_types`` applies the standardizer (T2–T4, T8, and T9
+    for ``ignored_suffixes``) from stats observed on the stage write;
+    ``report`` receives its decisions and the rows this load
+    inserted."""
     import duckdb
 
     con = duckdb.connect(db_path)
     try:
-        exists = bool(
-            con.execute(
-                "SELECT 1 FROM information_schema.tables WHERE table_name = ?",
+        have = [
+            r[0]
+            for r in con.execute(
+                "SELECT column_name FROM information_schema.columns "
+                "WHERE table_name = ? ORDER BY ordinal_position",
                 [table],
             ).fetchall()
+        ] or None
+        _preflight(table, mode, have, df.columns, exact=not standardize_types)
+        staged, loaded, rows, decisions = _stage(
+            df, csv_dir, "duckdb", standardize_types, ignored_suffixes
         )
-        want = [f.name for f in df.schema.fields]
-        columns: list[str] | None = None
-        if exists and mode == "error":
-            raise ValueError(f"table {table} already exists (mode=error)")
-        if exists and mode == "append":
-            have = [
-                r[0]
-                for r in con.execute(
-                    "SELECT column_name FROM information_schema.columns "
-                    "WHERE table_name = ? ORDER BY ordinal_position",
-                    [table],
-                ).fetchall()
-            ]
-            if sorted(have) != sorted(want):
-                raise ValueError(
-                    f"append into {table}: existing columns {sorted(have)} "
-                    f"!= DataFrame columns {sorted(want)} — the names must "
-                    "match as a set"
-                )
-            if have != want:
-                # same names, different physical order: map BY NAME via
-                # an explicit COPY column list instead of refusing
-                columns = want
-        write_csv_for_bulk_load(df, csv_dir, dialect="duckdb")
-        if mode == "overwrite":
-            con.execute(f"DROP TABLE IF EXISTS {_quote_ident(table, 'duckdb')}")
-            exists = False
-        if not exists:
-            con.execute(schema_ddl(df, table, "duckdb"))
-        for stmt in bulk_load_statements(table, csv_dir, "duckdb", columns=columns):
-            con.execute(stmt)
+        _preflight(table, mode, have, loaded.columns)
+        files = partition_files(csv_dir)
+        con.begin()
+        try:
+            if mode == "overwrite":
+                con.execute(f"DROP TABLE IF EXISTS {_quote_ident(table, 'duckdb')}")
+                have = None
+            if have is None:
+                con.execute(schema_ddl(loaded, table, "duckdb"))
+            if files:  # a 0-row stage leaves no non-empty file
+                con.execute(_duckdb_insert(table, staged, loaded, files))
+            con.commit()
+        except BaseException:
+            con.rollback()
+            raise
+        if report is not None:
+            report.decisions, report.rows, report.loaded = decisions, rows, loaded
         return con.execute(
             f"SELECT COUNT(*) FROM {_quote_ident(table, 'duckdb')}"
         ).fetchall()[0][0]
@@ -417,7 +522,7 @@ def export_duckdb_table(db_path: str, table: str, parquet_path: str) -> None:
     try:
         con.execute(
             f"COPY {_quote_ident(table, 'duckdb')} TO "
-            f"'{_sql_path(parquet_path)}' (FORMAT PARQUET)"
+            f"'{_sql_str(parquet_path)}' (FORMAT PARQUET)"
         )
     finally:
         con.close()
@@ -427,7 +532,7 @@ def export_duckdb_table(db_path: str, table: str, parquet_path: str) -> None:
 #
 # Python's stdlib sqlite3 is the second destination engine available in
 # this sandbox, so W3 gets a second EXECUTED leg: the .import-equivalent
-# (CREATE TABLE + batched positional INSERTs fed from the dialect CSV
+# (CREATE TABLE + batched INSERTs fed from the dialect CSV
 # files) driven through the DBAPI connection. NULL convention: the
 # staged files distinguish NULL (unquoted empty field) from the empty
 # string (quoted '""') — same lossless set as the duckdb leg — and the
@@ -556,6 +661,11 @@ def _parse_rfc4180(fh, delimiter: str = ","):
     assert not pending
 
 
+# boolean text as staged: Spark booleans render true/false, the 0/1
+# integers the standardizer infers as boolean (T3) render 0/1
+_SQLITE_BOOL = {"true": 1, "false": 0, "1": 1, "0": 0}
+
+
 def _sqlite_converters(df: DataFrame):
     """Per-column text→python converters for the typed INSERT (sqlite
     is affinity-typed; feeding ints/floats as python objects preserves
@@ -568,13 +678,39 @@ def _sqlite_converters(df: DataFrame):
         elif s in ("float", "double"):
             fn = float
         elif s == "boolean":
-            fn = lambda v: 1 if v == "true" else 0  # noqa: E731
+            fn = _SQLITE_BOOL.__getitem__
         elif s == "binary":
             raise ValueError("binary columns are not supported on the sqlite CSV leg")
         else:  # string / timestamp / date / decimal ride as TEXT
             fn = str
         convs.append(fn)
     return convs
+
+
+def _sqlite_insert(con, q: str, staged: DataFrame, loaded: DataFrame, files: list[str], batch_rows: int) -> None:
+    """Batched INSERTs of the loaded columns from the staged files:
+    dropped columns are skipped by field index, the columns are named
+    so values map by name into any existing column order."""
+    pos = {c: i for i, c in enumerate(staged.columns)}
+    idx = [pos[c] for c in loaded.columns]
+    convs = _sqlite_converters(loaded)
+    cols = ", ".join(_quote_ident(c, "sqlite") for c in loaded.columns)
+    ins = f"INSERT INTO {q} ({cols}) VALUES ({', '.join('?' for _ in convs)})"
+    for path in files:
+        with open(path, newline="") as fh:
+            batch = []
+            for rec in _parse_rfc4180(fh):
+                batch.append(
+                    tuple(
+                        None if (v == "" and not was_quoted) else fn(v)
+                        for fn, (v, was_quoted) in zip(convs, (rec[i] for i in idx))
+                    )
+                )
+                if len(batch) >= batch_rows:
+                    con.executemany(ins, batch)
+                    batch = []
+            if batch:
+                con.executemany(ins, batch)
 
 
 def bulk_load_sqlite(
@@ -584,72 +720,47 @@ def bulk_load_sqlite(
     csv_dir: str,
     mode: str = "overwrite",
     batch_rows: int = 10_000,
+    standardize_types: bool = False,
+    ignored_suffixes: list[str] | None = None,
+    report: LoadReport | None = None,
 ) -> int:
     """Execute the sqlite leg of W3 end-to-end: dialect CSV per
     partition → CREATE TABLE → ``executemany`` batches per file (the
     driver-level equivalent of the CLI ``.import`` the statement
-    generator emits). Same mode semantics and pre-flight ordering as
-    ``bulk_load_duckdb``, and the same losslessness: NULL is the
-    UNQUOTED empty field, the quoted '""' is the empty string — the
-    quote-aware parser preserves what csv.reader would collapse."""
+    generator emits). Same mode semantics, pre-flight ordering,
+    transaction and standardization as ``bulk_load_duckdb``: dropped
+    columns are skipped by field index and the converters follow the
+    decided types. The same losslessness too: NULL is the UNQUOTED
+    empty field, the quoted '""' is the empty string — the quote-aware
+    parser preserves what csv.reader would collapse."""
     import sqlite3
 
-    con = sqlite3.connect(db_path)
+    q = _quote_ident(table, "sqlite")
+    con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN below
     try:
-        exists = bool(
-            con.execute(
-                "SELECT 1 FROM sqlite_master WHERE type='table' AND name=?", [table]
-            ).fetchall()
+        have = [r[1] for r in con.execute(f"PRAGMA table_info({q})")] or None
+        _preflight(table, mode, have, df.columns, exact=not standardize_types)
+        staged, loaded, rows, decisions = _stage(
+            df, csv_dir, "sqlite", standardize_types, ignored_suffixes
         )
-        want = [f.name for f in df.schema.fields]
-        collist = ""
-        if exists and mode == "error":
-            raise ValueError(f"table {table} already exists (mode=error)")
-        if exists and mode == "append":
-            have = [r[1] for r in con.execute(f"PRAGMA table_info({_quote_ident(table, 'sqlite')})")]
-            if sorted(have) != sorted(want):
-                raise ValueError(
-                    f"append into {table}: existing columns {sorted(have)} "
-                    f"!= DataFrame columns {sorted(want)} — the names must "
-                    "match as a set"
-                )
-            if have != want:
-                # same names, different physical order: name the INSERT
-                # columns so values map BY NAME
-                collist = (
-                    " (" + ", ".join(_quote_ident(c, "sqlite") for c in want) + ")"
-                )
-        write_csv_for_bulk_load(df, csv_dir, dialect="sqlite")
-        if mode == "overwrite":
-            con.execute(f"DROP TABLE IF EXISTS {_quote_ident(table, 'sqlite')}")
-            exists = False
-        if not exists:
-            con.execute(schema_ddl(df, table, "sqlite"))
-        convs = _sqlite_converters(df)
-        placeholders = ", ".join("?" for _ in convs)
-        ins = (
-            f"INSERT INTO {_quote_ident(table, 'sqlite')}{collist} "
-            f"VALUES ({placeholders})"
-        )
-        for path in partition_files(csv_dir):
-            with open(path, newline="") as fh:
-                batch = []
-                for row in _parse_rfc4180(fh):
-                    batch.append(
-                        tuple(
-                            None if (v == "" and not was_quoted) else fn(v)
-                            for fn, (v, was_quoted) in zip(convs, row)
-                        )
-                    )
-                    if len(batch) >= batch_rows:
-                        con.executemany(ins, batch)
-                        batch = []
-                if batch:
-                    con.executemany(ins, batch)
-        con.commit()
-        return con.execute(
-            f"SELECT COUNT(*) FROM {_quote_ident(table, 'sqlite')}"
-        ).fetchall()[0][0]
+        _preflight(table, mode, have, loaded.columns)
+        files = partition_files(csv_dir)
+        con.execute("BEGIN")
+        try:
+            if mode == "overwrite":
+                con.execute(f"DROP TABLE IF EXISTS {q}")
+                have = None
+            if have is None:
+                con.execute(schema_ddl(loaded, table, "sqlite"))
+            if files:
+                _sqlite_insert(con, q, staged, loaded, files, batch_rows)
+            con.execute("COMMIT")
+        except BaseException:
+            con.execute("ROLLBACK")
+            raise
+        if report is not None:
+            report.decisions, report.rows, report.loaded = decisions, rows, loaded
+        return con.execute(f"SELECT COUNT(*) FROM {q}").fetchall()[0][0]
     finally:
         con.close()
 

@@ -1,0 +1,177 @@
+"""The fused bulk-load path: on DuckDB and SQLite targets the
+standardizer's stats ride the CSV stage write (one Spark pass per
+table) and the loader applies the decisions on the destination side.
+
+The property checks it against the two-pass path it replaces —
+``standardize()`` followed by the per-file ``COPY`` statements (DuckDB)
+or a plain load of the standardized frame (SQLite) — on decisions,
+destination columns and types, and content. The example tests pin the
+single source read, rows-loaded accounting and atomic overwrite."""
+
+import os
+import sqlite3
+
+import duckdb
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from etlalchemy_spark.migrate import FileSource, Migration, Target
+from etlalchemy_spark.operators import standardize as std
+from etlalchemy_spark.operators.rules import SchemaRules
+from etlalchemy_spark.sources import bulkload
+from etlalchemy_spark.sources.bulkload import (
+    bulk_load_duckdb,
+    bulk_load_sqlite,
+    bulk_load_statements,
+    schema_ddl,
+)
+from etlalchemy_spark.sources.files import write_csv_for_bulk_load
+
+from conftest import SF_DIR
+
+_SUFFIX = "_ign"
+# `tag` reaches the loader as `tag_ign` (renamed by rule), so the
+# suffix drop happens there; `raw_ign` is dropped by the rules already
+_RULES = dict(
+    column_csv="Table Name, Column Name, New Column Name\nt, tag, tag_ign\n",
+    ignored_col_suffixes=[_SUFFIX],
+)
+_SCHEMA = "id int, n long, small long, flag long, empty long, s string, tag string, raw_ign string"
+
+_EDGES = [-(2**31) - 1, -(2**31), -(2**15), -129, -128, -1, 0, 1, 127, 128, 2**15 - 1, 2**15, 2**31 - 1, 2**31]
+_ints = st.one_of(st.sampled_from(_EDGES), st.integers(-(2**62), 2**62), st.none())
+_small = st.one_of(st.integers(-300, 300), st.none())
+_flags = st.sampled_from([0, 1, None])
+_texts = st.one_of(st.none(), st.text(alphabet=list('ab ,"\n\'\\'), max_size=8))
+_rows = st.lists(st.tuples(_ints, _small, _flags, _texts, _texts), min_size=0, max_size=12)
+
+
+def _duck_table(db):
+    con = duckdb.connect(db, read_only=True)
+    try:
+        cols = [(r[0], r[1]) for r in con.execute("DESCRIBE t").fetchall()]
+        return cols, sorted(con.execute("SELECT * FROM t").fetchall(), key=repr)
+    finally:
+        con.close()
+
+
+def _sqlite_table(db):
+    con = sqlite3.connect(db)
+    try:
+        cols = [(r[1], r[2]) for r in con.execute("PRAGMA table_info(t)")]
+        return cols, sorted(con.execute("SELECT * FROM t").fetchall(), key=repr)
+    finally:
+        con.close()
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=_rows)
+def test_fused_load_matches_standardize_then_load(spark, tmp_path_factory, rows):
+    tmp = tmp_path_factory.mktemp("fused")
+    data = [(i, n, sm, f, None, s, t, "x") for i, (n, sm, f, s, t) in enumerate(rows)]
+    spark.createDataFrame(data, _SCHEMA).write.parquet(str(tmp / "src" / "t.parquet"))
+    rules = SchemaRules.from_csv(**_RULES)
+
+    # the two-pass reference: stats job, then stage + load
+    src = rules.transform("t", spark.read.parquet(str(tmp / "src" / "t.parquet")))
+    std_df, want_decisions = std.standardize(src, [_SUFFIX])
+    write_csv_for_bulk_load(std_df, str(tmp / "ref_csv"), dialect="duckdb")
+    con = duckdb.connect(str(tmp / "ref.duckdb"))
+    con.execute(schema_ddl(std_df, "t", "duckdb"))
+    for stmt in bulk_load_statements("t", str(tmp / "ref_csv"), "duckdb"):
+        con.execute(stmt)
+    con.close()
+    bulk_load_sqlite(std_df, str(tmp / "ref.sqlite"), "t", str(tmp / "ref_csv_sqlite"))
+
+    for fmt, read_back in (("duckdb", _duck_table), ("sqlite", _sqlite_table)):
+        db = str(tmp / f"dest.{fmt}")
+        reports, _ = Migration(
+            FileSource(str(tmp / "src")), Target(db, fmt=fmt), rules=rules
+        ).run(spark)
+        assert reports[0].decisions == want_decisions, fmt
+        assert reports[0].n_rows == len(rows)
+        assert read_back(db) == read_back(str(tmp / f"ref.{fmt}")), fmt
+
+
+def test_duckdb_migration_reads_the_source_once(spark, tmp_path, monkeypatch):
+    """No separate stats pass: once the source table is open, the only
+    Spark job is the stage write that carries the stats."""
+    import etlalchemy_spark.migrate as migmod
+
+    def no_stats_pass(df):
+        raise AssertionError("standardize.observe ran a separate stats job")
+
+    monkeypatch.setattr(std, "observe", no_stats_pass)
+    sc = spark.sparkContext
+    group = "fused-stage-one-pass"
+    real_read = migmod.read_file
+
+    def read_then_tag(*args, **kwargs):
+        df = real_read(*args, **kwargs)  # schema resolution is not a data read
+        sc.setJobGroup(group, "jobs after the source table is opened")
+        return df
+
+    monkeypatch.setattr(migmod, "read_file", read_then_tag)
+    try:
+        reports, _ = Migration(
+            FileSource(SF_DIR, included_tables=["nation"]),
+            Target(str(tmp_path / "one.duckdb"), fmt="duckdb"),
+        ).run(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert reports[0].n_rows == 25
+    # the decisions still narrowed the keys (0..24 -> TINYINT)
+    assert {d.name: d.target_type for d in reports[0].decisions}["n_nationkey"] == "tinyint"
+
+
+@pytest.mark.parametrize("fmt", ["duckdb", "sqlite"])
+def test_append_reports_rows_loaded_by_this_run(spark, tmp_path, fmt):
+    db = str(tmp_path / f"app.{fmt}")
+    mk = lambda: Migration(
+        FileSource(SF_DIR, included_tables=["region"]),
+        Target(db, fmt=fmt, mode="append"),
+    )
+    reports = mk().run(spark)[0] + mk().run(spark)[0]
+    assert [r.n_rows for r in reports] == [5, 5]
+    assert mk()._load_manifest()["region"]["rows"] == 5
+    con = duckdb.connect(db) if fmt == "duckdb" else sqlite3.connect(db)
+    assert con.execute("SELECT COUNT(*) FROM region").fetchall()[0][0] == 10
+    con.close()
+
+
+@pytest.mark.parametrize("load", [bulk_load_duckdb, bulk_load_sqlite], ids=["duckdb", "sqlite"])
+def test_failed_overwrite_keeps_the_old_table(spark, tmp_path, monkeypatch, load):
+    """DROP, CREATE and INSERT are one transaction: a load that fails
+    after the DROP leaves the old table and its rows in place."""
+    db = str(tmp_path / "atomic.db")
+    old = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+    assert load(old, db, "t", str(tmp_path / "csv1")) == 2
+
+    real_files = bulkload.partition_files
+
+    def with_broken_file(csv_dir):
+        bad = os.path.join(csv_dir, "part-99999-broken.csv")
+        with open(bad, "w") as fh:
+            fh.write("not-a-number,x\n")
+        return real_files(csv_dir) + [bad]
+
+    monkeypatch.setattr(bulkload, "partition_files", with_broken_file)
+    new = spark.createDataFrame([(3, "c"), (4, "d")], "id long, s string")
+    with pytest.raises(Exception, match="not-a-number|Could not convert|invalid literal"):
+        load(new, db, "t", str(tmp_path / "csv2"), mode="overwrite")
+
+    if load is bulk_load_duckdb:
+        con = duckdb.connect(db, read_only=True)
+    else:
+        con = sqlite3.connect(db)
+    try:
+        assert sorted(con.execute("SELECT id, s FROM t").fetchall()) == [(1, "a"), (2, "b")]
+    finally:
+        con.close()

@@ -4,6 +4,10 @@ unintentional plan change fails here with a structural diff. After an
 INTENTIONAL plan change, refresh the pins:
 
     python tools/plan_fingerprints.py --update
+
+Plans are built under the default parallelism the pins were taken at
+(recorded in the pin file), so the result does not depend on the
+host's core count.
 """
 
 import difflib
@@ -13,6 +17,7 @@ import os
 import pytest
 
 from etlalchemy_spark.plans.inspect import (
+    fixed_default_parallelism,
     pinned_plan_fingerprint,
     pinned_plan_text,
 )
@@ -23,6 +28,7 @@ PIN_SF_DIR = "/root/testdata/sf0.01"
 
 with open(PIN_FILE) as _fh:
     PINNED = json.load(_fh)
+PIN_PARALLELISM = PINNED.pop("_pinned_under")["default_parallelism"]
 
 BENCH = sorted(n for n, q in all_queries().items() if "bench" in q.tags)
 
@@ -40,9 +46,11 @@ def test_every_bench_query_is_pinned():
 def test_bench_plan_shape_unchanged(spark, name):
     if name not in PINNED:
         pytest.skip("unpinned (covered by test_every_bench_query_is_pinned)")
-    df = all_queries()[name].fn(spark, PIN_SF_DIR)
-    got_tree = pinned_plan_text(name, df, spark, PIN_SF_DIR)
-    if pinned_plan_fingerprint(name, df, spark, PIN_SF_DIR) == PINNED[name]["fingerprint"]:
+    with fixed_default_parallelism(spark, PIN_PARALLELISM):
+        df = all_queries()[name].fn(spark, PIN_SF_DIR)
+        got_tree = pinned_plan_text(name, df, spark, PIN_SF_DIR)
+        got = pinned_plan_fingerprint(name, df, spark, PIN_SF_DIR)
+    if got == PINNED[name]["fingerprint"]:
         return
     diff = "\n".join(
         difflib.unified_diff(

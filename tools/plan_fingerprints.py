@@ -21,6 +21,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etlalchemy_spark.plans.inspect import (
+    fixed_default_parallelism,
     pinned_plan_fingerprint,
     pinned_plan_text,
 )
@@ -35,6 +36,10 @@ PIN_FILE = os.path.join(
 # plans are pinned at one fixed SF: stats-driven choices (broadcast
 # thresholds, AQE) may legitimately differ across scale factors
 PIN_SF_DIR = "/root/testdata/sf0.01"
+# plans are built under this default parallelism whatever the host's
+# core count (recorded in the pin file as "_pinned_under"): a plan's
+# shape can depend on it
+PIN_PARALLELISM = 32
 
 
 def current() -> dict[str, dict[str, str]]:
@@ -44,14 +49,15 @@ def current() -> dict[str, dict[str, str]]:
     # than the tripwire runs under manufactures phantom diffs
     spark = get_spark("plan_fingerprints", shuffle_partitions=4)
     out: dict[str, dict[str, str]] = {}
-    for name, q in sorted(all_queries().items()):
-        if "bench" not in q.tags:
-            continue
-        df = q.fn(spark, PIN_SF_DIR)
-        out[name] = {
-            "fingerprint": pinned_plan_fingerprint(name, df, spark, PIN_SF_DIR),
-            "tree": pinned_plan_text(name, df, spark, PIN_SF_DIR),
-        }
+    with fixed_default_parallelism(spark, PIN_PARALLELISM):
+        for name, q in sorted(all_queries().items()):
+            if "bench" not in q.tags:
+                continue
+            df = q.fn(spark, PIN_SF_DIR)
+            out[name] = {
+                "fingerprint": pinned_plan_fingerprint(name, df, spark, PIN_SF_DIR),
+                "tree": pinned_plan_text(name, df, spark, PIN_SF_DIR),
+            }
     return out
 
 
@@ -59,11 +65,13 @@ def main() -> None:
     now = current()
     if "--update" in sys.argv:
         with open(PIN_FILE, "w") as fh:
-            json.dump(now, fh, indent=1, sort_keys=True)
+            pinned_under = {"default_parallelism": PIN_PARALLELISM}
+            json.dump({**now, "_pinned_under": pinned_under}, fh, indent=1, sort_keys=True)
         print(f"pinned {len(now)} bench-query plans -> {PIN_FILE}")
         return
     with open(PIN_FILE) as fh:
         pinned = json.load(fh)
+    pinned.pop("_pinned_under")
     drift = sorted(
         set(now) ^ set(pinned)
         | {n for n in set(now) & set(pinned) if now[n]["fingerprint"] != pinned[n]["fingerprint"]}
