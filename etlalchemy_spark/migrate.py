@@ -15,6 +15,14 @@ The reference's 4-line API maps to:
 
 Phase ordering is preserved: data loads BEFORE index/FK DDL emission
 (bulk-load speed; FK targets must exist — SURVEY.md §3.1 step 2).
+Unlike the reference's one-table-at-a-time loop, independent tables
+migrate concurrently: reflection and every resume decision run first,
+serially; then each table's read → rules → standardize → write chain
+runs on a pool of ``min(tables, defaultParallelism)`` driver threads
+that inherit the caller's job group. A table is marked 'loading' in the
+manifest when its own load starts and 'loaded' when it ends; the first
+failure stops new tables from starting, lets the ones in flight finish,
+and is re-raised. Reports and DDL keep reflection order.
 Each table is one lazy DataFrame plan. On DuckDB and SQLite targets it
 is read once: the standardizer's stats ride the CSV stage write and the
 loader applies the decisions (sources/bulkload.py). File and JDBC
@@ -26,10 +34,13 @@ job) and then the write pass. Per-table phase timings mirror
 from __future__ import annotations
 
 import logging
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etlalchemy_spark.operators.ddl import DDLEpilogue, FKSpec, IndexSpec, fk_orphan_count
@@ -37,7 +48,7 @@ from etlalchemy_spark.operators.rules import SchemaRules
 from etlalchemy_spark.operators.standardize import standardize, varchar_metadata
 from etlalchemy_spark.sources.files import read_file, write_file
 from etlalchemy_spark.sources.jdbc import read_jdbc_partitioned, write_jdbc
-from etlalchemy_spark.sources.reflection import reflect_dir, reflect_jdbc
+from etlalchemy_spark.sources.reflection import TableInfo, reflect_dir, reflect_jdbc
 
 log = logging.getLogger("etlalchemy_spark.migrate")
 
@@ -122,7 +133,9 @@ class TableReport:
     to 'load' — unlike the reference's eager row pipeline, where each
     phase did its own work. On DuckDB and SQLite targets the stats ride
     the stage write, so 'standardize' is about 0 and stats time is
-    billed to 'load' too."""
+    billed to 'load' too. The phases are each table's own wall clock;
+    tables load concurrently, so phases of different tables overlap and
+    do not sum to the run's time."""
 
     table: str
     dest_table: str
@@ -325,27 +338,203 @@ class Migration:
             os.path.join(t.path, f"{dest_name}.{t.fmt}")
         )
 
+    def _load_concurrently(
+        self,
+        spark: SparkSession,
+        plan: list[tuple[TableInfo, str, str]],
+        manifest: dict,
+    ) -> list[tuple[TableReport, DataFrame]]:
+        """Run ``_load_table`` for every planned table on a bounded
+        pool; results in plan order. After the first failure no table
+        starts (queued ones return untouched), the ones in flight
+        finish, and that first failure is re-raised."""
+        lock = threading.Lock()  # guards manifest and its file
+        failures: list[BaseException] = []  # in the order they happened
+
+        def work(info, dest_name, mode):
+            if failures:
+                return None
+            try:
+                return self._load_table(spark, info, dest_name, mode, manifest, lock)
+            except BaseException as e:
+                failures.append(e)
+                raise
+
+        width = max(1, min(len(plan), spark.sparkContext.defaultParallelism))
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            # wrapped per table: each worker gets its own copy of the
+            # caller's local properties (job group included) — one
+            # shared copy would carry a table's SQL execution id into
+            # another table's jobs
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(work), *p) for p in plan
+            ]
+        if failures:
+            for e in failures[1:]:
+                log.warning("another table failed too: %r", e)
+            raise failures[0]
+        return [f.result() for f in futures]
+
+    def _load_table(
+        self,
+        spark: SparkSession,
+        info: TableInfo,
+        dest_name: str,
+        table_mode: str,
+        manifest: dict,
+        lock: threading.Lock,
+    ) -> tuple[TableReport, DataFrame]:
+        """One table's read → rules → standardize → write → audit chain,
+        bracketed by its 'loading' and 'loaded' manifest entries."""
+        t0 = time.monotonic()
+        name = info.name
+        with lock:
+            manifest[name] = {"phase": "loading", "dest": dest_name}
+            self._save_manifest(manifest)
+        if info.fmt == "jdbc":
+            df = read_jdbc_partitioned(
+                spark,
+                self.source.url,
+                info.location,
+                partition_column=self.source.partition_columns.get(name),
+                num_partitions=self.source.num_partitions,
+                where=self.source.table_filters.get(name),
+                **self.source.options,
+            )
+        else:
+            df = read_file(spark, info.location, info.fmt)
+        t_read = time.monotonic()
+
+        if self.rules:
+            df = self.rules.transform(name, df)
+        t_rules = time.monotonic()
+
+        decisions = []
+        suffixes = self.rules.ignored_col_suffixes if self.rules else None
+        bulk = self.target.fmt in ("duckdb", "sqlite")
+        if self.standardize_types and not bulk:
+            df, decisions = standardize(df, suffixes)
+        t_std = time.monotonic()
+
+        n_loaded: int | None = None
+        if self.target.fmt == "jdbc":
+            # O2 metrics from the WRITE job itself: an Observation
+            # node rides the plan the jdbc write executes, so the
+            # row count comes out of the same single pass — the old
+            # df.count() here lazily re-executed the whole
+            # read→rules→standardize pipeline a second time per
+            # table (2x source scans at any scale).
+            from pyspark.sql import Observation
+
+            obs = Observation(f"migrate_{dest_name}")
+            write_jdbc(
+                df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                self.target.path,
+                dest_name,
+                mode="errorifexists" if table_mode == "error" else table_mode,
+                varchar_meta=varchar_metadata(decisions),
+            )
+            n_loaded = int(obs.get["rows"])
+        elif bulk:
+            # W3 native bulk path: per-partition dialect CSV +
+            # native loader into the embedded destination DB
+            # (duckdb INSERT … SELECT FROM read_csv / sqlite
+            # .import-equivalent). One source read: standardize's
+            # stats ride the stage write, the loader applies them.
+            from etlalchemy_spark.sources.bulkload import (
+                LoadReport,
+                bulk_load_duckdb,
+                bulk_load_sqlite,
+            )
+
+            loader = (
+                bulk_load_duckdb if self.target.fmt == "duckdb" else bulk_load_sqlite
+            )
+            load = LoadReport()
+            loader(
+                df,
+                self.target.path,
+                dest_name,
+                f"{self.target.path}.csv_stage/{dest_name}",
+                mode=table_mode,
+                standardize_types=self.standardize_types,
+                ignored_suffixes=suffixes,
+                report=load,
+            )
+            n_loaded, df = load.rows, load.loaded
+            if self.standardize_types:
+                decisions = load.decisions
+        else:
+            write_file(
+                df, f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",
+                fmt=self.target.fmt,
+                mode="errorifexists" if table_mode == "error" else table_mode,
+            )
+        t_write = time.monotonic()
+
+        if n_loaded is not None:
+            n_rows = n_loaded
+        else:
+            # count from the WRITTEN files (parquet/orc footers, csv
+            # line scan) — a df.count() here would lazily re-execute
+            # the whole read→rules→standardize pipeline a second time
+            n_rows = read_file(
+                spark,
+                f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",
+                fmt=self.target.fmt,
+            ).count()
+        with lock:
+            manifest[name] = {"phase": "loaded", "dest": dest_name, "rows": n_rows}
+            self._save_manifest(manifest)
+        report = TableReport(
+            table=name,
+            dest_table=dest_name,
+            n_rows=n_rows,
+            n_cols=len(df.columns),
+            phase_seconds={
+                "extract": round(t_read - t0, 3),
+                "transform": round(t_rules - t_read, 3),
+                "standardize": round(t_std - t_rules, 3),
+                "load": round(t_write - t_std, 3),
+            },
+            decisions=decisions,
+        )
+        return report, df
+
     def run(
         self, spark: SparkSession, resume: bool = False
     ) -> tuple[list[TableReport], list[str]]:
         """Execute the migration; returns (per-table reports, DDL strings).
 
-        Matches the reference's phase order per table and defers all
-        index/FK DDL until every table is loaded.
+        A serial plan step drops the destination if asked, reflects the
+        source and decides every table's fate: deleted by rule, skipped
+        on resume, or loaded in which mode. The tables to load then run
+        concurrently, each its own read → rules → standardize → write
+        chain (``_load_table``), on ``min(tables, defaultParallelism)``
+        driver threads: Spark's task slots bound the source and
+        destination connections, the threads only overlap each table's
+        latency-bound steps. Workers inherit the caller's Spark local
+        properties (job group included), so cancelling the caller's
+        group cancels the migration's jobs. Reports, DDL and the FK
+        epilogue follow reflection order, never completion order, and
+        all index/FK DDL waits until every table is loaded (the
+        reference's phase order).
+
+        On the first failure no further table starts; tables already in
+        flight finish and record 'loaded', then the first error is
+        re-raised — the most completed work is kept for a resume.
 
         ``resume=True`` continues a previous run of the SAME migration:
         tables the manifest records as 'loaded' are skipped outright,
         tables caught mid-load ('loading' — partial rows may exist at
         the destination) are re-run with overwrite semantics regardless
-        of ``target.mode``, and unseen tables run normally. The
-        manifest is written on every run (resume or not) so any run is
-        resumable after a crash.
+        of ``target.mode``, and unseen tables run normally. A table is
+        marked 'loading' only when its own load starts, so a table that
+        never started has no entry. The manifest is written on every
+        run (resume or not) so any run is resumable after a crash.
         """
         import os
 
-        reports: list[TableReport] = []
-        loaded = {}
-        skipped: dict[str, str] = {}  # dest_name -> source name (resume skips)
         if self.target.drop_destination:
             self._drop_destination(spark)
             mp = self._manifest_path()
@@ -371,8 +560,12 @@ class Migration:
                 self.source.excluded_tables,
                 with_schema=False,
             )
+        # Every resume decision is made here, before any load starts:
+        # the destination probes (a read-only DuckDB open conflicts with
+        # a load's read-write one) and the append-partial refusal.
+        plan: list[tuple[TableInfo, str, str]] = []  # (info, dest_name, mode)
+        skipped: dict[str, str] = {}  # dest_name -> source name (resume skips)
         for info in tables:
-            t0 = time.monotonic()
             name = info.name
             dest_name = self.rules.transform_table_name(name) if self.rules else name
             if dest_name is None:  # X2: table deleted by rule
@@ -416,120 +609,13 @@ class Migration:
                     "use mode='overwrite' if the destination table is "
                     "exclusively this migration's) and re-run."
                 )
-            table_mode = "overwrite" if partial else self.target.mode
-            manifest[name] = {"phase": "loading", "dest": dest_name}
-            self._save_manifest(manifest)
-            if info.fmt == "jdbc":
-                df = read_jdbc_partitioned(
-                    spark,
-                    self.source.url,
-                    info.location,
-                    partition_column=self.source.partition_columns.get(name),
-                    num_partitions=self.source.num_partitions,
-                    where=self.source.table_filters.get(name),
-                    **self.source.options,
-                )
-            else:
-                df = read_file(spark, info.location, info.fmt)
-            t_read = time.monotonic()
+            plan.append((info, dest_name, "overwrite" if partial else self.target.mode))
 
-            if self.rules:
-                df = self.rules.transform(name, df)
-            t_rules = time.monotonic()
-
-            decisions = []
-            suffixes = self.rules.ignored_col_suffixes if self.rules else None
-            bulk = self.target.fmt in ("duckdb", "sqlite")
-            if self.standardize_types and not bulk:
-                df, decisions = standardize(df, suffixes)
-            t_std = time.monotonic()
-
-            n_loaded: int | None = None
-            if self.target.fmt == "jdbc":
-                # O2 metrics from the WRITE job itself: an Observation
-                # node rides the plan the jdbc write executes, so the
-                # row count comes out of the same single pass — the old
-                # df.count() here lazily re-executed the whole
-                # read→rules→standardize pipeline a second time per
-                # table (2x source scans at any scale).
-                from pyspark.sql import Observation
-
-                obs = Observation(f"migrate_{dest_name}")
-                write_jdbc(
-                    df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                    self.target.path,
-                    dest_name,
-                    mode="errorifexists" if table_mode == "error" else table_mode,
-                    varchar_meta=varchar_metadata(decisions),
-                )
-                n_loaded = int(obs.get["rows"])
-            elif bulk:
-                # W3 native bulk path: per-partition dialect CSV +
-                # native loader into the embedded destination DB
-                # (duckdb INSERT … SELECT FROM read_csv / sqlite
-                # .import-equivalent). One source read: standardize's
-                # stats ride the stage write, the loader applies them.
-                from etlalchemy_spark.sources.bulkload import (
-                    LoadReport,
-                    bulk_load_duckdb,
-                    bulk_load_sqlite,
-                )
-
-                loader = (
-                    bulk_load_duckdb if self.target.fmt == "duckdb" else bulk_load_sqlite
-                )
-                load = LoadReport()
-                loader(
-                    df,
-                    self.target.path,
-                    dest_name,
-                    f"{self.target.path}.csv_stage/{dest_name}",
-                    mode=table_mode,
-                    standardize_types=self.standardize_types,
-                    ignored_suffixes=suffixes,
-                    report=load,
-                )
-                n_loaded, df = load.rows, load.loaded
-                if self.standardize_types:
-                    decisions = load.decisions
-            else:
-                write_file(
-                    df, f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",
-                    fmt=self.target.fmt,
-                    mode="errorifexists" if table_mode == "error" else table_mode,
-                )
-            t_write = time.monotonic()
-
-            if n_loaded is not None:
-                n_rows = n_loaded
-            else:
-                # count from the WRITTEN files (parquet/orc footers, csv
-                # line scan) — a df.count() here would lazily re-execute
-                # the whole read→rules→standardize pipeline a second time
-                n_rows = read_file(
-                    spark,
-                    f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",
-                    fmt=self.target.fmt,
-                ).count()
-            manifest[name] = {"phase": "loaded", "dest": dest_name, "rows": n_rows}
-            self._save_manifest(manifest)
-            loaded[dest_name] = df
-            reports.append(
-                TableReport(
-                    table=name,
-                    dest_table=dest_name,
-                    n_rows=n_rows,
-                    n_cols=len(df.columns),
-                    phase_seconds={
-                        "extract": round(t_read - t0, 3),
-                        "transform": round(t_rules - t_read, 3),
-                        "standardize": round(t_std - t_rules, 3),
-                        "load": round(t_write - t_std, 3),
-                    },
-                    decisions=decisions,
-                )
-            )
-            log.info("migrated %s → %s (%d rows)", name, dest_name, n_rows)
+        results = self._load_concurrently(spark, plan, manifest)
+        reports = [report for report, _ in results]
+        loaded = {r.dest_table: df for r, df in results}
+        for r in reports:
+            log.info("migrated %s → %s (%d rows)", r.table, r.dest_table, r.n_rows)
 
         # DDL epilogue AFTER all data (reference phase order).
         epilogue = DDLEpilogue(self.target.dialect)

@@ -9,8 +9,8 @@ Table rules CSV header:
 Column rules CSV header:
     Table Name, Column Name, New Column Name, New Column Type, Delete
 
-Rules compile to pure DataFrame transforms (``withColumnRenamed`` /
-``cast`` / ``drop``) applied BEFORE data-driven standardization, exactly
+Rules compile to one DataFrame select (renames, casts and drops as SQL
+text) applied BEFORE data-driven standardization, exactly
 like the reference's ordering (SURVEY.md §3.3).
 """
 
@@ -21,7 +21,8 @@ import io
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from etlalchemy_spark.operators.standardize import _q
 
 # Reference type names (SQLAlchemy generics) → Spark cast targets.
 TYPE_MAP = {
@@ -136,10 +137,13 @@ class SchemaRules:
         return table
 
     def transform(self, table: str, df: DataFrame) -> DataFrame:
-        """X3/X4 + T9/T10 compiled to one select over the input."""
-        cols = []
+        """X3/X4 + T9/T10 compiled to one select over the input, built
+        as SQL text (one ``selectExpr`` call, not three Py4J calls per
+        column). Identifiers are backtick-quoted, so names with dots,
+        spaces or backticks resolve as the literal column."""
+        exprs = []
         for c in df.columns:
-            name, col, keep = c, F.col(c), True
+            name, expr, keep = c, _q(c), True
             for r in self.column_rules:
                 if r.table not in ("*", table) or r.column != c:
                     continue
@@ -147,7 +151,7 @@ class SchemaRules:
                     keep = False
                     break
                 if r.new_type:
-                    col = col.cast(r.new_type)
+                    expr = f"CAST({expr} AS {r.new_type})"
                 if r.new_name:
                     name = r.new_name
             if keep and self.ignored_col_suffixes:
@@ -159,5 +163,5 @@ class SchemaRules:
                         name = name[: -len(sfx)] + new_sfx
                         break
             if keep:
-                cols.append(col.alias(name))
-        return df.select(*cols)
+                exprs.append(f"{expr} AS {_q(name)}")
+        return df.selectExpr(*exprs)

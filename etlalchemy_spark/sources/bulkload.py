@@ -41,6 +41,8 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
+from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -713,6 +715,18 @@ def _sqlite_insert(con, q: str, staged: DataFrame, loaded: DataFrame, files: lis
                 con.executemany(ins, batch)
 
 
+# SQLite has one writer per database file, and a second writer waits at
+# most the driver's 5 s busy timeout: concurrent loads into one file
+# (Migration.run loads tables concurrently) take turns per file.
+_SQLITE_WRITERS: defaultdict[str, threading.Lock] = defaultdict(threading.Lock)
+_SQLITE_WRITERS_GUARD = threading.Lock()
+
+
+def _sqlite_writer(db_path: str) -> threading.Lock:
+    with _SQLITE_WRITERS_GUARD:
+        return _SQLITE_WRITERS[os.path.realpath(db_path)]
+
+
 def bulk_load_sqlite(
     df: DataFrame,
     db_path: str,
@@ -732,35 +746,40 @@ def bulk_load_sqlite(
     columns are skipped by field index and the converters follow the
     decided types. The same losslessness too: NULL is the UNQUOTED
     empty field, the quoted '""' is the empty string — the quote-aware
-    parser preserves what csv.reader would collapse."""
+    parser preserves what csv.reader would collapse. Loads into one
+    database file take turns on its single writer for their reads and
+    transaction; the stage write runs outside that turn."""
     import sqlite3
 
     q = _quote_ident(table, "sqlite")
     con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN below
     try:
-        have = [r[1] for r in con.execute(f"PRAGMA table_info({q})")] or None
+        with _sqlite_writer(db_path):  # a spilled writer would block the read
+            have = [r[1] for r in con.execute(f"PRAGMA table_info({q})")] or None
         _preflight(table, mode, have, df.columns, exact=not standardize_types)
         staged, loaded, rows, decisions = _stage(
             df, csv_dir, "sqlite", standardize_types, ignored_suffixes
         )
         _preflight(table, mode, have, loaded.columns)
         files = partition_files(csv_dir)
-        con.execute("BEGIN")
-        try:
-            if mode == "overwrite":
-                con.execute(f"DROP TABLE IF EXISTS {q}")
-                have = None
-            if have is None:
-                con.execute(schema_ddl(loaded, table, "sqlite"))
-            if files:
-                _sqlite_insert(con, q, staged, loaded, files, batch_rows)
-            con.execute("COMMIT")
-        except BaseException:
-            con.execute("ROLLBACK")
-            raise
+        with _sqlite_writer(db_path):
+            con.execute("BEGIN")
+            try:
+                if mode == "overwrite":
+                    con.execute(f"DROP TABLE IF EXISTS {q}")
+                    have = None
+                if have is None:
+                    con.execute(schema_ddl(loaded, table, "sqlite"))
+                if files:
+                    _sqlite_insert(con, q, staged, loaded, files, batch_rows)
+                con.execute("COMMIT")
+            except BaseException:
+                con.execute("ROLLBACK")
+                raise
+            n = con.execute(f"SELECT COUNT(*) FROM {q}").fetchall()[0][0]
         if report is not None:
             report.decisions, report.rows, report.loaded = decisions, rows, loaded
-        return con.execute(f"SELECT COUNT(*) FROM {q}").fetchall()[0][0]
+        return n
     finally:
         con.close()
 

@@ -374,3 +374,234 @@ def test_jdbc_manifest_keyed_on_source_and_destination():
     # explicit manifest_path still wins
     e = Target(path="jdbc:derby:memory:manifestkey", fmt="jdbc", manifest_path="/x/m.json")
     assert Migration(source=a.source, target=e)._manifest_path() == "/x/m.json"
+
+
+# --- concurrent table loads ---------------------------------------------------
+
+
+def _write_tables(path, n):
+    """``n`` small parquet tables t0..t{n-1}; table i holds ids 0..10(i+1)-1."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    for i in range(n):
+        ids = list(range(10 * (i + 1)))
+        pq.write_table(
+            pa.table({"id": ids, "name": [f"n-{v}" for v in ids]}),
+            os.path.join(path, f"t{i}.parquet"),
+        )
+    return {f"t{i}": 10 * (i + 1) for i in range(n)}
+
+
+def _duckdb_content(db):
+    import duckdb
+
+    con = duckdb.connect(db, read_only=True)
+    try:
+        out = {}
+        for (t,) in con.execute("SELECT table_name FROM information_schema.tables").fetchall():
+            out[t] = sorted(r[0] for r in con.execute(f'SELECT id FROM "{t}"').fetchall())
+        return out
+    finally:
+        con.close()
+
+
+def _fail_one_table_mid_flight(spark, tmp_path, mode):
+    """Migrate width + 2 tables into DuckDB; the first ``width`` tables
+    meet at a barrier inside the loader, then t1 raises while the rest
+    load. Returns (migration factory, expected rows per table, db path)."""
+    import threading
+
+    import pytest
+
+    from etlalchemy_spark.sources import bulkload
+
+    width = spark.sparkContext.defaultParallelism
+    want = _write_tables(str(tmp_path / "src"), width + 2)
+    db = str(tmp_path / "dest.duckdb")
+    mk = lambda: Migration(
+        source=FileSource(str(tmp_path / "src")),
+        target=Target(db, fmt="duckdb", mode=mode),
+    )
+    real = bulkload.bulk_load_duckdb
+    barrier = threading.Barrier(width, timeout=60)
+
+    def loader(df, db_path, table, *a, **kw):
+        barrier.wait()
+        if table == "t1":
+            raise RuntimeError("injected load failure")
+        return real(df, db_path, table, *a, **kw)
+
+    bulkload.bulk_load_duckdb = loader
+    try:
+        with pytest.raises(RuntimeError, match="injected load failure"):
+            mk().run(spark)
+    finally:
+        bulkload.bulk_load_duckdb = real
+
+    manifest = mk()._load_manifest()
+    started = [f"t{i}" for i in range(width)]
+    for t in started:
+        if t != "t1":
+            assert manifest[t] == {"phase": "loaded", "dest": t, "rows": want[t]}
+    assert manifest["t1"]["phase"] == "loading"
+    assert set(manifest) == set(started)  # the rest never started
+    got = _duckdb_content(db)
+    assert got == {t: list(range(want[t])) for t in started if t != "t1"}
+    return mk, want, db
+
+
+def test_concurrent_failure_then_resume_overwrite(spark, tmp_path):
+    """One table fails while others are in flight: the first error is
+    re-raised, finished tables are recorded 'loaded', the failed one
+    'loading', unstarted ones not at all; resume completes the run
+    exactly, with no duplicate rows."""
+    mk, want, db = _fail_one_table_mid_flight(spark, tmp_path, "overwrite")
+    width = spark.sparkContext.defaultParallelism
+    reports, _ = mk().run(spark, resume=True)
+    redo = ["t1", f"t{width}", f"t{width + 1}"]
+    assert [(r.table, r.n_rows) for r in reports] == [(t, want[t]) for t in redo]
+    assert _duckdb_content(db) == {t: list(range(n)) for t, n in want.items()}
+    assert all(e["phase"] == "loaded" for e in mk()._load_manifest().values())
+
+
+def test_concurrent_failure_then_resume_append(spark, tmp_path):
+    """In append mode resume refuses only the table caught mid-load;
+    once that one is cleaned up, the tables that never started load
+    normally and the loaded ones are not appended twice."""
+    import json
+
+    import pytest
+
+    mk, want, db = _fail_one_table_mid_flight(spark, tmp_path, "append")
+    with pytest.raises(ValueError, match="'t1' was mid-load in append mode"):
+        mk().run(spark, resume=True)
+    # the cleanup the refusal asks for: t1 holds no rows (the failure hit
+    # before its load touched the destination), so forget its entry
+    mp = mk()._manifest_path()
+    m = json.loads(open(mp).read())
+    del m["t1"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    width = spark.sparkContext.defaultParallelism
+    reports, _ = mk().run(spark, resume=True)
+    assert [r.table for r in reports] == ["t1", f"t{width}", f"t{width + 1}"]
+    assert _duckdb_content(db) == {t: list(range(n)) for t, n in want.items()}
+
+
+def test_concurrent_tables_inherit_callers_job_group(spark, tmp_path):
+    """Workers carry the caller's job group: every table's jobs are
+    billed to it (and cancelJobGroup reaches them)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "concurrent migrate")
+    try:
+        reports, _ = Migration(
+            source=FileSource(SF_DIR, included_tables=["nation", "region", "supplier"]),
+            target=Target(str(tmp_path / "dest.duckdb"), fmt="duckdb"),
+        ).run(spark)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(reports) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup("g")) >= len(reports)
+
+
+def test_concurrent_sqlite_loads_take_turns(spark, tmp_path):
+    """Overlapping loads into one SQLite file take turns on its single
+    writer: no 'database is locked' even with a near-zero busy timeout,
+    exact content, and reports in reflection order although the first
+    table finishes last."""
+    import sqlite3
+    import threading
+    import time
+
+    import etlalchemy_spark.migrate as migmod
+    from etlalchemy_spark.sources import bulkload
+
+    tables = ["nation", "region", "supplier"]
+    db = str(tmp_path / "dest.sqlite")
+    spans: dict[str, tuple[float, float]] = {}
+    real_insert, real_read, real_connect = (
+        bulkload._sqlite_insert, migmod.read_file, sqlite3.connect,
+    )
+
+    def slow_insert(con, q, *a, **kw):
+        t0 = time.monotonic()
+        time.sleep(0.5)  # hold the write transaction open
+        real_insert(con, q, *a, **kw)
+        spans[q] = (t0, time.monotonic())
+
+    def slow_first_read(spark_, location, fmt="parquet"):
+        if location.endswith("nation.parquet"):
+            time.sleep(1.5)
+        return real_read(spark_, location, fmt)
+
+    bulkload._sqlite_insert = slow_insert
+    migmod.read_file = slow_first_read
+    sqlite3.connect = lambda *a, **kw: real_connect(*a, **{**kw, "timeout": 0.05})
+    try:
+        reports, ddl = Migration(
+            source=FileSource(SF_DIR, included_tables=tables),
+            target=Target(db, fmt="sqlite"),
+            indexes=[IndexSpec("nation", ["n_nationkey"]), IndexSpec("region", ["r_regionkey"])],
+        ).run(spark)
+    finally:
+        bulkload._sqlite_insert = real_insert
+        migmod.read_file = real_read
+        sqlite3.connect = real_connect
+
+    assert [r.table for r in reports] == tables
+    assert len(ddl) == 2 and '"nation"' in ddl[0] and '"region"' in ddl[1]
+    assert len(spans) == 3
+    ordered = sorted(spans.values())
+    assert all(a[1] <= b[0] for a, b in zip(ordered, ordered[1:]))  # one writer at a time
+    want = {
+        t: read_file(spark, os.path.join(SF_DIR, f"{t}.parquet")).count() for t in tables
+    }
+    con = real_connect(db)
+    try:
+        for t in tables:
+            assert con.execute(f'SELECT COUNT(*) FROM "{t}"').fetchone()[0] == want[t]
+    finally:
+        con.close()
+    assert {r.table: r.n_rows for r in reports} == want
+
+
+def test_concurrent_manifest_updates_are_not_lost(spark, tmp_path):
+    """Stress the shared manifest: many tables, a tiny switch interval,
+    a loader that returns at once. Every table must end 'loaded' with
+    its own row count (a lost or torn update breaks that)."""
+    import sys
+    import threading
+
+    from etlalchemy_spark.sources import bulkload
+
+    n = 40
+    want = _write_tables(str(tmp_path / "src"), n)
+    real = bulkload.bulk_load_duckdb
+
+    def instant(df, db_path, table, *a, report=None, **kw):
+        report.rows, report.loaded, report.decisions = want[table], df, []
+        return want[table]
+
+    mig = Migration(
+        source=FileSource(str(tmp_path / "src")),
+        target=Target(str(tmp_path / "dest.duckdb"), fmt="duckdb"),
+    )
+    out: dict = {}
+    interval = sys.getswitchinterval()
+    bulkload.bulk_load_duckdb = instant
+    sys.setswitchinterval(1e-6)
+    try:
+        t = threading.Thread(target=lambda: out.update(reports=mig.run(spark)[0]))
+        t.start()
+        t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+        bulkload.bulk_load_duckdb = real
+    assert not t.is_alive()
+    assert [(r.table, r.n_rows) for r in out["reports"]] == sorted(want.items())
+    assert mig._load_manifest() == {
+        t: {"phase": "loaded", "dest": t, "rows": rows} for t, rows in want.items()
+    }
