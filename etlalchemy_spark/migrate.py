@@ -24,11 +24,11 @@ manifest when its own load starts and 'loaded' when it ends; the first
 failure stops new tables from starting, lets the ones in flight finish,
 and is re-raised. Reports and DDL keep reflection order.
 Each table is one lazy DataFrame plan. On DuckDB and SQLite targets it
-is read once: the standardizer's stats ride the CSV stage write and the
-loader applies the decisions (sources/bulkload.py). File and JDBC
-targets must cast before they write, so they run a stats pass (one agg
-job) and then the write pass. Per-table phase timings mirror
-``print_timings`` (O2).
+is read once, by the CSV stage write; the loader computes the
+standardizer's stats in the destination and applies the decisions
+there (sources/bulkload.py). File and JDBC targets must cast before
+they write, so they run a stats pass (one agg job) and then the write
+pass. Per-table phase timings mirror ``print_timings`` (O2).
 """
 
 from __future__ import annotations
@@ -131,11 +131,11 @@ class TableReport:
     plus the standardizer's stats action ('standardize'); the
     extract+transform COMPUTE executes inside the write and is billed
     to 'load' — unlike the reference's eager row pipeline, where each
-    phase did its own work. On DuckDB and SQLite targets the stats ride
-    the stage write, so 'standardize' is about 0 and stats time is
-    billed to 'load' too. The phases are each table's own wall clock;
-    tables load concurrently, so phases of different tables overlap and
-    do not sum to the run's time."""
+    phase did its own work. On DuckDB and SQLite targets the stats run
+    in the destination inside the load, so 'standardize' is about 0 and
+    stats time is billed to 'load' too. The phases are each table's own
+    wall clock; tables load concurrently, so phases of different tables
+    overlap and do not sum to the run's time."""
 
     table: str
     dest_table: str
@@ -439,8 +439,9 @@ class Migration:
             # W3 native bulk path: per-partition dialect CSV +
             # native loader into the embedded destination DB
             # (duckdb INSERT … SELECT FROM read_csv / sqlite
-            # .import-equivalent). One source read: standardize's
-            # stats ride the stage write, the loader applies them.
+            # .import-equivalent). One source read: the loader
+            # computes standardize's stats in the destination from the
+            # staged rows and applies the decisions there.
             from etlalchemy_spark.sources.bulkload import (
                 LoadReport,
                 bulk_load_duckdb,

@@ -12,17 +12,18 @@ caveat): observe the data, then
 - T9  drop columns by name suffix (rule-driven, no scan)
 
 The reference fetches every row into driver memory and loops in Python.
-Here ALL observation is one set of aggregate expressions per table
-(``stats_exprs``: 2–4 per column), and decisions compile to
-``cast``/``drop``. Two ways to run them:
+Here ALL observation is one aggregate query per table (``stat_terms``:
+2–4 terms per column, SQL text quoted for the engine that runs it),
+and decisions compile to ``cast``/``drop``. Two engines run it:
 
-- ``standardize`` (file and JDBC targets, which must cast before they
-  write): one ``df.agg`` job, then the write reads the source again.
-- the embedded bulk loaders (sources/bulkload.py) attach the same
-  expressions as an ``Observation`` to the CSV stage write, so the
-  stats ride the scan that has to run anyway; they ``decide`` from that
-  one observed row and apply the casts and drops on the destination
-  side. One source read per table.
+- Spark, in ``standardize`` (file and JDBC targets, which must cast
+  before they write): one ``df.agg`` job over ``stats_exprs``, then the
+  write reads the source again.
+- the destination, in the embedded bulk loaders (sources/bulkload.py):
+  the staged rows land in a temporary table, the same terms run there
+  as one SQL aggregate, and the loader ``decide``s from that row and
+  applies the casts and drops in its ``INSERT … SELECT``. The CSV
+  stage write is the table's only Spark job.
 """
 
 from __future__ import annotations
@@ -68,37 +69,50 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def stats_exprs(df: DataFrame) -> list:
-    """The single-pass observation expressions for every column.
-
-    Built as SQL text, one ``F.expr`` per aggregate: composing each
-    from Column calls costs ~10 Py4J round trips per expression, which
-    on small tables cost more than the scan the stats ride."""
+def stat_terms(schema: T.StructType, quote) -> list[str]:
+    """The stats of every column of ``schema`` as SQL text, one
+    ``<aggregate> AS <name>`` term each; ``quote`` quotes an identifier
+    for the engine that runs them. Every term is standard SQL that
+    Spark, DuckDB and SQLite evaluate alike (``length`` counts code
+    points in all three), so the bulk loaders compute in the
+    destination what ``observe`` computes in Spark. One exception:
+    SQLite's ``length`` stops at a NUL character, so a string holding
+    one can get a smaller ``varchar_n`` there (recorded only; SQLite
+    columns are TEXT)."""
     # total row count: distinguishes a 0-ROW table (standardize is a
     # no-op — dropping every column of an empty partition would destroy
     # the schema) from a populated table with all-NULL columns (T8's
     # actual target)
-    exprs = ["count(1) AS __total"]
-    for f in df.schema.fields:
-        c, dt = _q(f.name), f.dataType
-        exprs.append(f"count({c}) AS {_q(f.name + '__n')}")
+    terms = ["count(1) AS __total"]
+    for f in schema.fields:
+        c, dt = quote(f.name), f.dataType
+        terms.append(f"count({c}) AS {quote(f.name + '__n')}")
         if isinstance(dt, INT_TYPES):
-            exprs.append(f"min({c}) AS {_q(f.name + '__min')}")
-            exprs.append(f"max({c}) AS {_q(f.name + '__max')}")
+            terms.append(f"min({c}) AS {quote(f.name + '__min')}")
+            terms.append(f"max({c}) AS {quote(f.name + '__max')}")
             # all-01: max(0/1 indicator of "value outside {0,1}") == 0.
             # NULL must count as inside (IN alone yields NULL for NULL
             # input → ELSE 1 would block inference on any nullable
             # flag column)
-            exprs.append(
+            terms.append(
                 f"max(CASE WHEN {c} IS NULL OR {c} IN (0, 1) THEN 0 ELSE 1 END) "
-                f"AS {_q(f.name + '__not01')}"
+                f"AS {quote(f.name + '__not01')}"
             )
         elif isinstance(dt, T.StringType):
-            exprs.append(f"max(length({c})) AS {_q(f.name + '__maxlen')}")
+            terms.append(f"max(length({c})) AS {quote(f.name + '__maxlen')}")
         # floats/decimals: no stats — decide() passes them through
         # unconditionally (T5), so min/max here was dead aggregate work
         # on the one-pass scan this module advertises as the cost center
-    return [F.expr(e) for e in exprs]
+    return terms
+
+
+def stats_exprs(df: DataFrame) -> list:
+    """``stat_terms`` as Spark aggregate Columns.
+
+    Built as SQL text, one ``F.expr`` per aggregate: composing each
+    from Column calls costs ~10 Py4J round trips per expression, which
+    on small tables cost more than the scan itself."""
+    return [F.expr(e) for e in stat_terms(df.schema, _q)]
 
 
 def observe(df: DataFrame) -> dict:

@@ -394,9 +394,12 @@ class SqlStages:
 # chained calls (st passed in) — the caller's pre-added stage list,
 # which is a tuple of deterministic strings and therefore a valid
 # cache key. The cache stores the compacted stage list; every hit
-# returns a FRESH SqlStages carrying copies (including the auto-name
-# counter, so appended stages never collide with cached names), so
-# callers that mutate the returned object behave exactly as before.
+# returns a FRESH SqlStages carrying copies, so callers that mutate the
+# returned object behave exactly as before. The auto-name counter
+# ``_n`` is stored too, but every ``_*_pvalue_build`` ends with ``compact()``,
+# whose fresh SqlStages restarts it at 0: an auto-named stage appended
+# to a returned chain could reuse a surviving stage's name (no caller
+# appends one today).
 _FRONTEND_MEMO: dict[tuple, tuple[list, set, str, int]] = {}
 
 

@@ -15,21 +15,21 @@ Spark-first re-expression:
    and exactly what a deployment issues through its DB connection).
 3. ``bulk_load_duckdb`` EXECUTES the path end-to-end against an
    embedded DuckDB database (an in-process DBMS with a native CSV
-   loader): stage → ``CREATE TABLE`` → one ``INSERT
-   INTO table SELECT … FROM read_csv([every partition file], …)`` →
-   row-count audit, the DROP/CREATE/INSERT in one transaction.
-   ``bulk_load_sqlite`` is the same for SQLite through the stdlib
-   driver. Postgres/MySQL legs run the per-file statements from (2)
-   through any DBAPI/JDBC connection.
+   loader): stage → a temporary table filled by one ``read_csv([every
+   partition file], …)`` → ``CREATE TABLE`` → ``INSERT INTO table
+   SELECT … FROM`` the temporary table → row-count audit, all of it
+   after the stage in one transaction. ``bulk_load_sqlite`` is the
+   same for SQLite through the stdlib driver. Postgres/MySQL legs run
+   the per-file statements from (2) through any DBAPI/JDBC connection.
 
-One Spark pass per table: the stage write is the only job that reads
-the source. When asked to standardize, the loaders attach the
-standardizer's stats (operators/standardize.py ``stats_exprs``) to that
-write as an ``Observation``, ``decide`` from the one observed row, and
-apply the decisions on the destination side: ``CREATE TABLE`` gets the
-narrowed or boolean types without the dropped columns, and the load
-casts and skips columns on the way in. Suffix-ignored columns (T9)
-need no stats and are never staged.
+One Spark job per table: the stage write is the only job that reads
+the source. When asked to standardize, the loaders compute the
+standardizer's stats in the destination — one SQL aggregate of
+``stat_terms`` (operators/standardize.py) over the temporary table —
+``decide`` from that row, and apply the decisions there: ``CREATE
+TABLE`` gets the narrowed or boolean types without the dropped
+columns, and the ``INSERT … SELECT`` casts and skips columns. Suffix-
+ignored columns (T9) need no stats and are never staged.
 
 Scale note: the per-file statements of (2) are independent — a real
 deployment fans them out (one loader session per partition file, as
@@ -45,8 +45,7 @@ import threading
 from collections import defaultdict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from etlalchemy_spark.operators.standardize import (
     ColumnDecision,
@@ -54,7 +53,7 @@ from etlalchemy_spark.operators.standardize import (
     decide,
     is_ignored,
     keep_all,
-    stats_exprs,
+    stat_terms,
 )
 from etlalchemy_spark.sources.files import CSV_DIALECT_OPTIONS, write_csv_for_bulk_load
 
@@ -178,14 +177,17 @@ def _ddl_type(dtype, dialect: str) -> str:
     return _BULK_DDL_TYPES[dialect].get(s, "VARCHAR" if dialect == "duckdb" else "TEXT")
 
 
+def _column_defs(df: DataFrame, dialect: str) -> str:
+    return ", ".join(
+        f"{_quote_ident(f.name, dialect)} {_ddl_type(f.dataType, dialect)}"
+        for f in df.schema.fields
+    )
+
+
 def schema_ddl(df: DataFrame, table: str, dialect: str = "duckdb") -> str:
     """``CREATE TABLE`` straight from the DataFrame schema (the
     pre-load half of upstream ``Table.create``, W4)."""
-    cols = [
-        f"{_quote_ident(f.name, dialect)} {_ddl_type(f.dataType, dialect)}"
-        for f in df.schema.fields
-    ]
-    return f"CREATE TABLE {_quote_ident(table, dialect)} ({', '.join(cols)})"
+    return f"CREATE TABLE {_quote_ident(table, dialect)} ({_column_defs(df, dialect)})"
 
 
 def partition_files(csv_dir: str) -> list[str]:
@@ -373,11 +375,11 @@ def bulk_load_statements(
 
 @dataclass
 class LoadReport:
-    """What one bulk load observed while staging; the loaders fill it
-    in when passed as ``report=``."""
+    """What one bulk load decided and inserted; the loaders fill it in
+    when passed as ``report=``."""
 
     decisions: list[ColumnDecision] = field(default_factory=list)
-    rows: int = 0  # rows this load inserted (the stage Observation's count)
+    rows: int = 0  # rows this load inserted (the INSERT's own count)
     loaded: DataFrame | None = None  # the frame with the decisions applied
 
 
@@ -405,32 +407,60 @@ def _stage(
     dialect: str,
     standardize_types: bool,
     ignored_suffixes: list[str] | None,
-) -> tuple[DataFrame, DataFrame, int, list[ColumnDecision]]:
-    """Stage ``df`` in one Spark job, the standardizer's stats riding
-    it as an Observation. Returns the staged frame; the frame to load
-    (``df`` with the decided casts and drops: a lazy plan whose schema
-    costs no job); the rows staged; and the decisions."""
+) -> tuple[DataFrame, list[str]]:
+    """Stage the columns the load may keep, in the table's one Spark
+    job (suffix-ignored columns are never staged). Returns the staged
+    frame and its non-empty partition files."""
     suffixes = ignored_suffixes if standardize_types else None
     ignored = [c for c in df.columns if is_ignored(c, suffixes)]
     staged = df.drop(*ignored) if ignored else df
-    obs = Observation()
-    exprs = stats_exprs(staged) if standardize_types else [F.expr("count(1) AS __total")]
-    write_csv_for_bulk_load(staged, csv_dir, dialect=dialect, observe=(obs, exprs))
-    stats = obs.get
-    decisions = decide(df, stats, suffixes) if standardize_types else keep_all(df)
-    return staged, apply_decisions(df, decisions), stats["__total"], decisions
+    write_csv_for_bulk_load(staged, csv_dir, dialect=dialect)
+    return staged, partition_files(csv_dir)
 
 
-def _duckdb_insert(table: str, staged: DataFrame, loaded: DataFrame, files: list[str]) -> str:
-    """One DuckDB ``INSERT … SELECT`` over every partition file. The
-    stage is read with its own (source) types and the ``COPY`` CSV
-    options of ``bulk_load_statements``, so NULL, '' and quotes stay
-    lossless; decided casts apply on the way in, dropped columns are
-    never selected."""
-    src = {f.name: f.dataType for f in staged.schema.fields}
+def _decide(
+    con,
+    tmp: str,
+    df: DataFrame,
+    staged: DataFrame,
+    dialect: str,
+    standardize: bool,
+    ignored_suffixes: list[str] | None,
+) -> tuple[list[ColumnDecision], DataFrame]:
+    """The decisions, from one SQL aggregate of ``stat_terms`` over the
+    staged rows in the temporary table ``tmp`` when ``standardize``,
+    and ``df`` with them applied (a lazy plan whose schema costs no
+    job). ``con`` is a DuckDB or sqlite3 connection."""
+    if not standardize:
+        decisions = keep_all(df)
+    else:
+        terms = stat_terms(staged.schema, lambda n: _quote_ident(n, dialect))
+        cur = con.execute(f"SELECT {', '.join(terms)} FROM {tmp}")
+        stats = dict(zip((d[0] for d in cur.description), cur.fetchone()))
+        decisions = decide(df, stats, ignored_suffixes)
+    return decisions, apply_decisions(df, decisions)
+
+
+def _duckdb_read_csv(staged: DataFrame, files: list[str]) -> str:
+    """``read_csv`` over every partition file with the stage's own
+    (source) types and the ``COPY`` CSV options of
+    ``bulk_load_statements``, so NULL, '' and quotes stay lossless."""
     columns = ", ".join(
         f"'{_sql_str(f.name)}': '{_ddl_type(f.dataType, 'duckdb')}'" for f in staged.schema.fields
     )
+    opts = CSV_DIALECT_OPTIONS["duckdb"]
+    paths = ", ".join(f"'{_sql_str(p)}'" for p in files)
+    return (
+        f"read_csv([{paths}], columns={{{columns}}}, "
+        f"header=false, delim='{opts['delimiter']}', quote='\"', escape='\"', "
+        f"nullstr='{opts['nullValue']}', allow_quoted_nulls=false, auto_detect=false)"
+    )
+
+
+def _duckdb_insert(table: str, tmp: str, staged: DataFrame, loaded: DataFrame) -> str:
+    """One DuckDB ``INSERT … SELECT`` from the temporary table: decided
+    casts apply on the way in, dropped columns are never selected."""
+    src = {f.name: f.dataType for f in staged.schema.fields}
     names, exprs = [], []
     for f in loaded.schema.fields:
         c = _quote_ident(f.name, "duckdb")
@@ -438,13 +468,9 @@ def _duckdb_insert(table: str, staged: DataFrame, loaded: DataFrame, files: list
         exprs.append(
             c if f.dataType == src[f.name] else f"CAST({c} AS {_ddl_type(f.dataType, 'duckdb')}) AS {c}"
         )
-    opts = CSV_DIALECT_OPTIONS["duckdb"]
-    paths = ", ".join(f"'{_sql_str(p)}'" for p in files)
     return (
         f"INSERT INTO {_quote_ident(table, 'duckdb')} ({', '.join(names)}) "
-        f"SELECT {', '.join(exprs)} FROM read_csv([{paths}], columns={{{columns}}}, "
-        f"header=false, delim='{opts['delimiter']}', quote='\"', escape='\"', "
-        f"nullstr='{opts['nullValue']}', allow_quoted_nulls=false, auto_detect=false)"
+        f"SELECT {', '.join(exprs)} FROM {tmp}"
     )
 
 
@@ -459,21 +485,22 @@ def bulk_load_duckdb(
     report: LoadReport | None = None,
 ) -> int:
     """Execute the W3 path end-to-end into an embedded DuckDB database:
-    dialect CSV per partition → ``CREATE TABLE`` → one ``INSERT …
-    SELECT FROM read_csv`` over every file → the table's row count.
+    dialect CSV per partition → one ``read_csv`` over every file into a
+    temporary table → ``CREATE TABLE`` → one ``INSERT … SELECT`` → the
+    table's row count.
     ``mode``: overwrite (drop+create), append (create if absent;
     existing column names must match the loaded columns), error (fail
     if table exists). Mode/existence checks run before the CSV stage is
     written so a doomed load fails before the expensive work (only the
     exact append column match waits for the standardizer's drops, and
-    still runs before the destination is touched); the DROP, CREATE
-    and INSERT run in one transaction, so a failed load leaves the old
-    table and its rows in place.
+    still runs before the destination is touched); the temporary table,
+    DROP, CREATE and INSERT run in one transaction, so a failed load
+    leaves the old table and its rows in place.
 
     ``standardize_types`` applies the standardizer (T2–T4, T8, and T9
-    for ``ignored_suffixes``) from stats observed on the stage write;
-    ``report`` receives its decisions and the rows this load
-    inserted."""
+    for ``ignored_suffixes``) from stats computed in DuckDB over the
+    staged rows; ``report`` receives its decisions and the rows this
+    load inserted."""
     import duckdb
 
     con = duckdb.connect(db_path)
@@ -487,20 +514,25 @@ def bulk_load_duckdb(
             ).fetchall()
         ] or None
         _preflight(table, mode, have, df.columns, exact=not standardize_types)
-        staged, loaded, rows, decisions = _stage(
-            df, csv_dir, "duckdb", standardize_types, ignored_suffixes
-        )
-        _preflight(table, mode, have, loaded.columns)
-        files = partition_files(csv_dir)
+        staged, files = _stage(df, csv_dir, "duckdb", standardize_types, ignored_suffixes)
+        tmp = _quote_ident(f"__stage_{table}", "duckdb")
+        rows = 0
         con.begin()
         try:
+            if files:  # a 0-row stage leaves no non-empty file
+                con.execute(f"CREATE TEMP TABLE {tmp} AS SELECT * FROM {_duckdb_read_csv(staged, files)}")
+            decisions, loaded = _decide(
+                con, tmp, df, staged, "duckdb", standardize_types and bool(files), ignored_suffixes
+            )
+            _preflight(table, mode, have, loaded.columns)
             if mode == "overwrite":
                 con.execute(f"DROP TABLE IF EXISTS {_quote_ident(table, 'duckdb')}")
                 have = None
             if have is None:
                 con.execute(schema_ddl(loaded, table, "duckdb"))
-            if files:  # a 0-row stage leaves no non-empty file
-                con.execute(_duckdb_insert(table, staged, loaded, files))
+            if files:
+                rows = con.execute(_duckdb_insert(table, tmp, staged, loaded)).fetchone()[0]
+                con.execute(f"DROP TABLE {tmp}")
             con.commit()
         except BaseException:
             con.rollback()
@@ -690,9 +722,10 @@ def _sqlite_converters(df: DataFrame):
 
 
 def _sqlite_insert(con, q: str, staged: DataFrame, loaded: DataFrame, files: list[str], batch_rows: int) -> None:
-    """Batched INSERTs of the loaded columns from the staged files:
-    dropped columns are skipped by field index, the columns are named
-    so values map by name into any existing column order."""
+    """Batched INSERTs of ``loaded``'s columns from the staged files
+    into the table ``q``: other staged columns are skipped by field
+    index, the columns are named so values map by name into any
+    column order, and each value is converted for its loaded type."""
     pos = {c: i for i, c in enumerate(staged.columns)}
     idx = [pos[c] for c in loaded.columns]
     convs = _sqlite_converters(loaded)
@@ -742,36 +775,45 @@ def bulk_load_sqlite(
     partition → CREATE TABLE → ``executemany`` batches per file (the
     driver-level equivalent of the CLI ``.import`` the statement
     generator emits). Same mode semantics, pre-flight ordering,
-    transaction and standardization as ``bulk_load_duckdb``: dropped
-    columns are skipped by field index and the converters follow the
-    decided types. The same losslessness too: NULL is the UNQUOTED
-    empty field, the quoted '""' is the empty string — the quote-aware
-    parser preserves what csv.reader would collapse. Loads into one
-    database file take turns on its single writer for their reads and
-    transaction; the stage write runs outside that turn."""
+    transaction and standardization as ``bulk_load_duckdb``: the staged
+    files fill a temporary table through typed batches, the stats run
+    there, and one ``INSERT … SELECT`` copies the kept columns (SQLite
+    needs no casts: a narrowed or boolean integer is still INTEGER).
+    The same losslessness too: NULL is the UNQUOTED empty field, the
+    quoted '""' is the empty string — the quote-aware parser preserves
+    what csv.reader would collapse. Loads into one database file take
+    turns on its single writer for their reads and transaction; the
+    stage write runs outside that turn."""
     import sqlite3
 
     q = _quote_ident(table, "sqlite")
+    tmp = _quote_ident(f"__stage_{table}", "sqlite")
     con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN below
     try:
         with _sqlite_writer(db_path):  # a spilled writer would block the read
             have = [r[1] for r in con.execute(f"PRAGMA table_info({q})")] or None
         _preflight(table, mode, have, df.columns, exact=not standardize_types)
-        staged, loaded, rows, decisions = _stage(
-            df, csv_dir, "sqlite", standardize_types, ignored_suffixes
-        )
-        _preflight(table, mode, have, loaded.columns)
-        files = partition_files(csv_dir)
+        staged, files = _stage(df, csv_dir, "sqlite", standardize_types, ignored_suffixes)
+        rows = 0
         with _sqlite_writer(db_path):
             con.execute("BEGIN")
             try:
+                if files:
+                    con.execute(f"CREATE TEMP TABLE {tmp} ({_column_defs(staged, 'sqlite')})")
+                    _sqlite_insert(con, tmp, staged, staged, files, batch_rows)
+                decisions, loaded = _decide(
+                    con, tmp, df, staged, "sqlite", standardize_types and bool(files), ignored_suffixes
+                )
+                _preflight(table, mode, have, loaded.columns)
                 if mode == "overwrite":
                     con.execute(f"DROP TABLE IF EXISTS {q}")
                     have = None
                 if have is None:
                     con.execute(schema_ddl(loaded, table, "sqlite"))
                 if files:
-                    _sqlite_insert(con, q, staged, loaded, files, batch_rows)
+                    cols = ", ".join(_quote_ident(c, "sqlite") for c in loaded.columns)
+                    rows = con.execute(f"INSERT INTO {q} ({cols}) SELECT {cols} FROM {tmp}").rowcount
+                    con.execute(f"DROP TABLE {tmp}")
                 con.execute("COMMIT")
             except BaseException:
                 con.execute("ROLLBACK")

@@ -223,18 +223,11 @@ def write_csv_for_bulk_load(
     path: str,
     dialect: str = "postgresql",
     validate: bool = True,
-    observe: tuple | None = None,
     **overrides,
 ) -> None:
     """W1: dialect-convention CSV dump, one file per partition (the
     scalable version of the reference's single dump file — each
-    partition feeds a parallel loader invocation).
-
-    ``observe=(observation, exprs)`` attaches aggregate metrics to the
-    write job itself (``DataFrame.observe``), so they cost no extra
-    pass. Only the write carries them: the validation jobs run on the
-    plain frame, or their partial scans would fill the observation
-    first."""
+    partition feeds a parallel loader invocation)."""
     opts = dict(CSV_DIALECT_OPTIONS.get(dialect, CSV_DIALECT_OPTIONS["postgresql"]))
     # Spark's CSV WRITER trims leading/trailing whitespace by default
     # (univocity ignore*WhiteSpace=true), silently corrupting values
@@ -278,7 +271,4 @@ def write_csv_for_bulk_load(
                         "path (write_jdbc) or add a surrogate column; "
                         "validate=False accepts the loss knowingly."
                     )
-    if observe is not None:
-        obs, exprs = observe
-        df = df.observe(obs, *exprs)
     df.write.mode("overwrite").options(**opts).csv(path)

@@ -7,6 +7,12 @@ partitioned JDBC scan: N executors each pull one key range. W2/W3
 dialect-tuned batching; W4 (DDL) to ``createTableColumnTypes`` built
 from the standardizer's VARCHAR metadata.
 
+Metadata queries — the partitioned read's MIN/MAX bounds probe and
+reflection's table listing — are not Spark jobs: ``driver_jdbc`` runs
+them on the driver over one connection opened through Spark's own
+dialect connection factory, from the option map the reader gets. Only
+the scans that move rows are jobs.
+
 Every code path here executes live against embedded Derby (the JDBC
 engine on Spark's own classpath): tests/test_jdbc_live.py and the
 ``etl_jdbc_*`` / ``etl_migrate_jdbc*`` gate queries run the real
@@ -17,6 +23,8 @@ quirks beyond Derby's) is documented in README "Honest boundaries".
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,6 +47,67 @@ def dialect_of(url: str) -> str:
     return {"sqlserver": "mssql", "mariadb": "mysql", "oracle": "oracle"}.get(sub, sub)
 
 
+@contextmanager
+def driver_jdbc(spark: SparkSession, options: dict[str, str]):
+    """One JDBC connection on the driver for metadata queries, opened
+    the way Spark's JDBC reader opens its own: ``options`` is the
+    reader's option map (``url`` plus ``dbtable`` or ``query``,
+    credentials, ``driver``, ...), the connection comes from the URL's
+    dialect connection factory and runs ``sessionInitStatement`` first.
+    Yields ``(dialect, query)``; ``query(sql)`` returns the result's
+    column labels and rows. No Spark job runs. Each use opens and closes
+    its own connection (``java.sql.Connection`` is not thread-safe)."""
+    jvm = spark._jvm
+    jopts = jvm.org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions(
+        jvm.PythonUtils.toScalaMap(options)
+    )
+    dialect = jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(jopts.url())
+    conn = dialect.createConnectionFactory(jopts).apply(-1)  # -1: the driver
+
+    def query(sql: str) -> tuple[list[str], list[tuple]]:
+        st = conn.createStatement()
+        try:
+            rs = st.executeQuery(sql)
+            md = rs.getMetaData()
+            cols = range(1, md.getColumnCount() + 1)
+            labels = [md.getColumnLabel(i) for i in cols]
+            rows = []
+            while rs.next():
+                rows.append(tuple(rs.getObject(i) for i in cols))
+            return labels, rows
+        finally:
+            st.close()
+
+    try:
+        init = jopts.sessionInitStatement()
+        if init.isDefined():
+            st = conn.createStatement()
+            try:
+                st.execute(init.get())
+            finally:
+                st.close()
+        yield dialect, query
+    finally:
+        conn.close()
+
+
+def _probe_bounds(spark: SparkSession, options: dict[str, str], table: str, column: str):
+    """MIN/MAX of ``column`` over the whole ``table`` (filters ignored)
+    as strings Spark parses for ``lowerBound``/``upperBound`` (numbers,
+    and JDBC DATE/TIMESTAMP rendered ``yyyy-mm-dd[ hh:mm:ss.f]``);
+    None for NULL. The column is resolved to its catalog spelling the
+    way Spark resolves ``partitionColumn`` — case-insensitively against
+    the table's schema — and quoted by the dialect: quoting the user's
+    spelling verbatim breaks case-folding catalogs (Derby and Oracle
+    store unquoted DDL uppercase)."""
+    with driver_jdbc(spark, options) as (dialect, query):
+        labels, _ = query(dialect.getSchemaQuery(table))  # a zero-row query
+        actual = next((c for c in labels if c.lower() == column.lower()), column)
+        qc = dialect.quoteIdentifier(actual)
+        _, [bounds] = query(f"SELECT MIN({qc}), MAX({qc}) FROM {table}")
+    return tuple(None if v is None else str(v) for v in bounds)
+
+
 def read_jdbc_partitioned(
     spark: SparkSession,
     url: str,
@@ -52,9 +121,9 @@ def read_jdbc_partitioned(
     push_down_predicate: bool = True,
     **options,
 ) -> DataFrame:
-    """S2 at scale: when bounds are not supplied, probe them with a
-    1-row min/max pushdown query, then issue ``num_partitions`` range
-    scans in parallel.
+    """S2 at scale: when bounds are not supplied, probe them with one
+    MIN/MAX query on the driver (no Spark job), then run
+    ``num_partitions`` range scans in parallel.
 
     ``where`` is a Spark SQL condition applied to the scan; with
     ``push_down_predicate`` (Spark's default, made explicit here)
@@ -71,52 +140,21 @@ def read_jdbc_partitioned(
     probe runs against the unfiltered table: bounds may be looser than
     the filtered extent, costing only empty range partitions, never
     correctness."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("fetchsize", str(fetchsize))
-        .option("pushDownPredicate", str(bool(push_down_predicate)).lower())
-    )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
+    opts = {
+        "url": url,
+        "dbtable": table,
+        "fetchsize": str(fetchsize),
+        "pushDownPredicate": str(bool(push_down_predicate)).lower(),
+        **{k: str(v) for k, v in options.items()},
+    }
+    reader = spark.read.format("jdbc").options(**opts)
     if partition_column:
         if lower_bound is None or upper_bound is None:
-            # resolve the column's exact catalog spelling the way Spark
-            # resolves partitionColumn — case-insensitively against the
-            # table schema — then quote THAT. Quoting the user's
-            # spelling verbatim breaks case-folding catalogs (Derby/
-            # Oracle store unquoted DDL uppercase, Spark-created tables
-            # are quoted lowercase); the schema probe is a zero-row
-            # metadata query.
-            actual = next(
-                (
-                    f.name
-                    for f in reader.load().schema.fields
-                    if f.name.lower() == partition_column.lower()
-                ),
-                partition_column,
-            )
-            qc = (
-                f"`{actual}`" if dialect_of(url) == "mysql" else f'"{actual}"'
-            )
-            bounds_query = (
-                f"(SELECT MIN({qc}) AS lo, MAX({qc}) AS hi FROM {table}) b"
-            )
-            probe = (
-                spark.read.format("jdbc")
-                .option("url", url)
-                .option("dbtable", bounds_query)
-            )
-            # the probe needs the SAME connection options (credentials,
-            # driver, ssl...) as the main reader
-            for k, v in options.items():
-                probe = probe.option(k, str(v))
-            # positional access: case-folding catalogs (Derby, Oracle)
-            # uppercase the lo/hi aliases
-            row = probe.load().collect()[0]
-            lower_bound = row[0] if lower_bound is None else lower_bound
-            upper_bound = row[1] if upper_bound is None else upper_bound
+            # the probe gets the reader's own options (credentials,
+            # driver, ssl...)
+            lo, hi = _probe_bounds(spark, opts, table, partition_column)
+            lower_bound = lo if lower_bound is None else lower_bound
+            upper_bound = hi if upper_bound is None else upper_bound
         if lower_bound is None or upper_bound is None:
             # empty table: MIN/MAX are NULL — partitioning is moot,
             # issue the plain (single-partition) scan of the empty table

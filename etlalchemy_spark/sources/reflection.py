@@ -90,22 +90,19 @@ def reflect_jdbc(
     **options,
 ) -> list[TableInfo]:
     """S1+S3 over a LIVE JDBC catalog: enumerate base tables through
-    the engine's system tables, filter, and (optionally) resolve each
-    table's Spark schema with a zero-row probe. Name matching is
-    case-insensitive — case-folding catalogs (Derby, Oracle) store
-    unquoted identifiers uppercased; ``TableInfo.name`` is normalized
-    to lowercase for destination naming while ``location`` keeps the
-    catalog's exact spelling for reads."""
-    from etlalchemy_spark.sources.jdbc import dialect_of
+    the engine's system tables (one query on the driver, no Spark
+    job), filter, and (optionally) resolve each table's Spark schema
+    with a zero-row probe. Name matching is case-insensitive —
+    case-folding catalogs (Derby, Oracle) store unquoted identifiers
+    uppercased; ``TableInfo.name`` is normalized to lowercase for
+    destination naming while ``location`` keeps the catalog's exact
+    spelling for reads."""
+    from etlalchemy_spark.sources.jdbc import dialect_of, driver_jdbc
 
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", system_tables_query(dialect_of(url), catalog, schema))
-    )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    names = sorted(r[0] for r in reader.load().collect())
+    listing = system_tables_query(dialect_of(url), catalog, schema)
+    opts = {"url": url, "dbtable": listing, **{k: str(v) for k, v in options.items()}}
+    with driver_jdbc(spark, opts) as (_, query):
+        names = sorted(r[0] for r in query(f"SELECT * FROM {listing}")[1])
     inc = {n.lower() for n in included_tables} if included_tables else None
     exc = {n.lower() for n in excluded_tables} if excluded_tables else set()
     out: list[TableInfo] = []

@@ -175,3 +175,44 @@ def test_failed_overwrite_keeps_the_old_table(spark, tmp_path, monkeypatch, load
         assert sorted(con.execute("SELECT id, s FROM t").fetchall()) == [(1, "a"), (2, "b")]
     finally:
         con.close()
+
+
+@pytest.mark.parametrize("fmt", ["duckdb", "sqlite"])
+def test_bulk_migration_attaches_no_observation(spark, tmp_path, monkeypatch, fmt):
+    """The stats run in the destination: nothing on the bulk path
+    observes a Spark frame."""
+    from pyspark.sql import DataFrame
+
+    def no_observe(self, *a, **kw):
+        raise AssertionError("DataFrame.observe on the bulk path")
+
+    monkeypatch.setattr(DataFrame, "observe", no_observe)
+    reports, _ = Migration(
+        FileSource(SF_DIR, included_tables=["nation"]),
+        Target(str(tmp_path / f"obs.{fmt}"), fmt=fmt),
+    ).run(spark)
+    assert reports[0].n_rows == 25
+    assert {d.name: d.target_type for d in reports[0].decisions}["n_nationkey"] == "tinyint"
+
+
+@pytest.mark.parametrize("load", [bulk_load_duckdb, bulk_load_sqlite], ids=["duckdb", "sqlite"])
+def test_destination_stats_decide_like_standardize(spark, tmp_path, load):
+    """Stats computed in the destination give standardize()'s decisions:
+    lengths count code points (not bytes, UTF-16 units or graphemes),
+    all-NULL columns drop and 0/1 columns become boolean."""
+    combining = "e\u0301" * 3 + "x"  # 7 code points, 4 graphemes, 10 bytes
+    emoji = "\U0001F600" * 5  # 5 code points, 10 UTF-16 units, 20 bytes
+    df = spark.createDataFrame(
+        [(1, combining, emoji, None, None, 0), (2, "ab", None, None, None, 1), (3, None, "\u00e9", None, None, None)],
+        "id long, s1 string, s2 string, empty long, empty_s string, flag long",
+    )
+    report = bulkload.LoadReport()
+    load(df, str(tmp_path / "dest.db"), "t", str(tmp_path / "csv"), standardize_types=True, report=report)
+    _, want = std.standardize(df)
+    assert report.decisions == want
+    by_name = {d.name: d for d in report.decisions}
+    assert (by_name["s1"].varchar_n, by_name["s2"].varchar_n) == (8, 8)
+    assert by_name["empty"].action == by_name["empty_s"].action == "drop_empty"
+    assert (by_name["flag"].action, by_name["flag"].target_type) == ("cast", "boolean")
+    assert report.rows == 3
+    assert report.loaded.columns == ["id", "s1", "s2", "flag"]

@@ -418,3 +418,77 @@ def test_reflect_jdbc_rejects_duplicate_destination_names(spark):
         con.close()
     with pytest.raises(ValueError, match="duplicate destination"):
         reflect_jdbc(spark, url)
+
+
+# --- driver-side metadata queries ------------------------------------------
+
+
+def test_partitioned_reader_and_reflection_start_no_spark_job(spark):
+    """The bounds probe and the catalog listing run on the driver: only
+    the scans that move rows are Spark jobs."""
+    url = _url()
+    write_jdbc(_src(spark), url, "t_nojob", mode="overwrite")
+    sc = spark.sparkContext
+    sc.setJobGroup("metadata-only", "build a partitioned reader, reflect")
+    try:
+        df = read_jdbc_partitioned(spark, url, "t_nojob", partition_column="id", num_partitions=4)
+        infos = reflect_jdbc(spark, url)
+        jobs = sc.statusTracker().getJobIdsForGroup("metadata-only")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert [i.name for i in infos] == ["t_nojob"]
+    assert df.rdd.getNumPartitions() == 4
+
+
+def test_probe_resolves_case_folded_partition_column(spark):
+    """Unquoted DDL is stored uppercase (ID); the probe resolves and
+    quotes the catalog spelling of partition_column="id"."""
+    url = _url()
+    _exec_sql(spark, url, "CREATE TABLE t_upper (id INT, name VARCHAR(10))")
+    _exec_sql(
+        spark, url,
+        "INSERT INTO t_upper VALUES " + ", ".join(f"({i}, 'n{i}')" for i in range(40)),
+    )
+    back = read_jdbc_partitioned(spark, url, "t_upper", partition_column="id", num_partitions=4)
+    assert back.rdd.getNumPartitions() == 4
+    assert sorted((r["ID"], r["NAME"]) for r in back.collect()) == [(i, f"n{i}") for i in range(40)]
+
+
+@pytest.mark.parametrize(
+    "ddl_type, values",
+    [
+        ("DATE", [f"'2024-0{m}-1{d}'" for m in range(1, 10) for d in range(3)]),
+        (
+            "TIMESTAMP",
+            [f"'2024-03-0{d} 1{h}:30:00.{d}{h}5'" for d in range(1, 9) for h in range(4)],
+        ),
+    ],
+)
+def test_date_and_timestamp_partition_columns(spark, ddl_type, values):
+    """DATE and TIMESTAMP bounds reach lowerBound/upperBound in a form
+    Spark parses: every row comes back exactly once."""
+    url = _url()
+    _exec_sql(spark, url, f'CREATE TABLE t_time (k INT, "at" {ddl_type})')
+    _exec_sql(
+        spark, url, "INSERT INTO t_time VALUES " + ", ".join(f"({i}, {v})" for i, v in enumerate(values))
+    )
+    want = sorted(
+        tuple(r) for r in spark.read.format("jdbc").option("url", url).option("dbtable", "t_time").load().collect()
+    )
+    back = read_jdbc_partitioned(spark, url, "t_time", partition_column="at", num_partitions=4)
+    assert back.rdd.getNumPartitions() == 4
+    assert sorted(tuple(r) for r in back.collect()) == want
+    assert len(want) == len(values)
+
+
+def test_probe_gets_the_readers_options(spark):
+    url = _url()
+    write_jdbc(_src(spark), url, "t_opts", mode="overwrite")
+    with pytest.raises(Exception, match="no.such.Driver") as err:
+        read_jdbc_partitioned(
+            spark, url, "t_opts", partition_column="id", num_partitions=4,
+            driver="no.such.Driver",
+        )
+    assert any(e.name == "_probe_bounds" for e in err.traceback)

@@ -1,8 +1,7 @@
 """Alternating same-session A/B of two query-building callables.
 
-Edit VARIANTS below (or import two builders) and run. Used for one-off
-restructure A/Bs where both shapes must run inside one Spark session so
-host drift hits both arms equally.
+Used for one-off restructure A/Bs where both shapes must run inside one
+Spark session so host drift hits both arms equally.
 
 Usage: python tools/ab_fn.py <module_a:fn_a> <module_b:fn_b> [--reps N]
 Each fn must have the (spark, sf_dir) query signature.
