@@ -23,29 +23,45 @@ that inherit the caller's job group. A table is marked 'loading' in the
 manifest when its own load starts and 'loaded' when it ends; the first
 failure stops new tables from starting, lets the ones in flight finish,
 and is re-raised. Reports and DDL keep reflection order.
-Each table is one lazy DataFrame plan. On DuckDB and SQLite targets it
-is read once, by the CSV stage write; the loader computes the
-standardizer's stats in the destination and applies the decisions
-there (sources/bulkload.py). File and JDBC targets must cast before
-they write, so they run a stats pass (one agg job) and then the write
-pass. Per-table phase timings mirror ``print_timings`` (O2).
+Everything destination-specific sits behind one sink per target kind
+(upstream keeps it behind ``ETLAlchemyTarget``): ``Migration._sink`` is
+the one dispatch on ``Target.fmt`` and picks a file-directory, DuckDB,
+SQLite or JDBC sink. Each sink drops the destination, names the default
+resume manifest, probes a table's existence, loads a table and reads a
+loaded table back for FK validation. Each table is one lazy DataFrame
+plan, loaded in one of two shapes:
+
+- file and JDBC sinks cast before they write: a stats pass (one agg
+  job), then one write whose Observation counts the rows it wrote;
+- DuckDB and SQLite sinks read the plan once, by the CSV stage write;
+  the loader computes the standardizer's stats in the destination and
+  applies the decisions there (sources/bulkload.py).
+
+"Rows" is the rows this run loaded on every sink. Per-table phase
+timings mirror ``print_timings`` (O2).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import logging
+import os
+import shutil
+import tempfile
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etlalchemy_spark.operators.ddl import DDLEpilogue, FKSpec, IndexSpec, fk_orphan_count
 from etlalchemy_spark.operators.rules import SchemaRules
 from etlalchemy_spark.operators.standardize import standardize, varchar_metadata
+from etlalchemy_spark.sources import bulkload
 from etlalchemy_spark.sources.files import read_file, write_file
 from etlalchemy_spark.sources.jdbc import read_jdbc_partitioned, write_jdbc
 from etlalchemy_spark.sources.reflection import TableInfo, reflect_dir, reflect_jdbc
@@ -125,17 +141,16 @@ class Target:
 @dataclass
 class TableReport:
     """O2 per-table metrics. ``n_rows`` is the rows this run loaded
-    (in append mode, not the table's total), except on file targets,
-    which re-count the written files. Caveat on ``phase_seconds``:
-    Spark is lazy, so 'extract'/'transform' time only plan construction
-    plus the standardizer's stats action ('standardize'); the
-    extract+transform COMPUTE executes inside the write and is billed
-    to 'load' — unlike the reference's eager row pipeline, where each
-    phase did its own work. On DuckDB and SQLite targets the stats run
-    in the destination inside the load, so 'standardize' is about 0 and
-    stats time is billed to 'load' too. The phases are each table's own
-    wall clock; tables load concurrently, so phases of different tables
-    overlap and do not sum to the run's time."""
+    (in append mode, not the table's total) on every target. Caveat on
+    ``phase_seconds``: Spark is lazy, so 'extract'/'transform' time only
+    plan construction; the extract+transform COMPUTE executes inside the
+    sink's write and is billed to 'load', as are the standardizer's
+    stats (a Spark action on file and JDBC targets, a SQL aggregate in
+    the destination on DuckDB and SQLite targets) — unlike the
+    reference's eager row pipeline, where each phase did its own work.
+    The phases are each table's own wall clock; tables load
+    concurrently, so phases of different tables overlap and do not sum
+    to the run's time."""
 
     table: str
     dest_table: str
@@ -143,6 +158,213 @@ class TableReport:
     n_cols: int
     phase_seconds: dict[str, float] = field(default_factory=dict)
     decisions: list = field(default_factory=list)
+
+
+@dataclass
+class _Sink:
+    """Where a migration's tables land; ``Migration._sink`` picks one per
+    target kind. Each sink has ``drop``, ``manifest_path`` (the default),
+    ``exists``, ``load`` → (rows this run loaded, loaded frame,
+    decisions) and ``read_back``."""
+
+    t: Target
+    standardize_types: bool
+    suffixes: list[str] | None
+
+
+class _SparkSink(_Sink):
+    """File and JDBC targets: ``standardize()`` in Spark, then one write
+    whose Observation counts the rows it wrote (one job, no re-count)."""
+
+    def load(self, df: DataFrame, table: str, mode: str) -> tuple[int, DataFrame, list]:
+        decisions = []
+        if self.standardize_types:
+            df, decisions = standardize(df, self.suffixes)
+        obs = Observation(f"migrate_{table}")
+        self._write(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            table,
+            "errorifexists" if mode == "error" else mode,
+            decisions,
+        )
+        return int(obs.get["rows"]), df, decisions
+
+
+class _FileSink(_SparkSink):
+    """A directory holding one ``{table}.{fmt}`` dataset per table."""
+
+    def _path(self, table: str) -> str:
+        return f"{self.t.path.rstrip('/')}/{table}.{self.t.fmt}"
+
+    def drop(self, spark: SparkSession) -> None:
+        shutil.rmtree(self.t.path, ignore_errors=True)
+
+    def manifest_path(self, source) -> str:
+        return os.path.join(self.t.path, "_migration_manifest.json")
+
+    def exists(self, spark: SparkSession, table: str) -> bool:
+        return os.path.exists(self._path(table))
+
+    def _write(self, df: DataFrame, table: str, mode: str, decisions: list) -> None:
+        write_file(df, self._path(table), fmt=self.t.fmt, mode=mode)
+
+    def read_back(self, spark: SparkSession, table: str) -> DataFrame:
+        return read_file(spark, self._path(table), fmt=self.t.fmt)
+
+
+class _JdbcSink(_SparkSink):
+    """A live database reached over JDBC."""
+
+    def drop(self, spark: SparkSession) -> None:
+        """Embedded Derby is dropped live (``;drop=true`` maintenance
+        connection); a server gets the DROP DATABASE statement logged
+        (executing it needs a maintenance connection to the server)."""
+        if self.t.path.startswith("jdbc:derby:memory:"):
+            try:
+                spark._jvm.java.sql.DriverManager.getConnection(self.t.path.split(";")[0] + ";drop=true")
+            except Exception as e:
+                # Derby signals a SUCCESSFUL drop with SQLState 08006
+                # ("database dropped"); a nonexistent db is XJ004 —
+                # equally done. Anything else is a real failure and must
+                # not be silently ignored (the migration would proceed
+                # into a NOT-dropped destination the user asked to
+                # destroy).
+                je = getattr(e, "java_exception", None)
+                try:
+                    state = je.getSQLState() if je is not None else None
+                except Exception:
+                    state = None
+                if state not in ("08006", "XJ004"):
+                    raise
+            return
+        db = self.t.path.rsplit("/", 1)[-1].split("?")[0]
+        log.warning(
+            "drop_destination on a live JDBC target: issue %r on a "
+            "maintenance connection before migrating",
+            f"DROP DATABASE IF EXISTS {db}",
+        )
+
+    def manifest_path(self, source) -> str:
+        # key the default manifest on the (source, destination) PAIR:
+        # keyed on the destination url alone, a later migration from a
+        # DIFFERENT source to the same database would adopt the first
+        # run's manifest and silently skip its own tables as 'loaded'.
+        # Concurrent runs of the SAME pair still race — point
+        # manifest_path at durable per-run storage for those.
+        src_id = getattr(source, "url", None) or getattr(source, "path", "")
+        h = hashlib.md5(f"{src_id}->{self.t.path}".encode()).hexdigest()[:12]
+        return os.path.join(tempfile.gettempdir(), f"etlalchemy_spark_manifest_{h}.json")
+
+    def exists(self, spark: SparkSession, table: str) -> bool:
+        try:
+            self.read_back(spark, table).schema  # resolved via a zero-row metadata query
+            return True
+        except Exception as e:
+            # ONLY a definitive missing-object error means "absent".
+            # Treating a transient failure (network blip, auth timeout)
+            # as absent would re-run the table — on an append-mode
+            # target that silently duplicates every row. Check the
+            # SQLState chain for the dialects' missing-table codes;
+            # anything else propagates.
+            missing_states = {"42X05", "42P01", "42S02", "S0002", "42704"}
+            je = getattr(e, "java_exception", None)
+            while je is not None:
+                try:
+                    state = je.getSQLState()
+                except Exception:
+                    state = None
+                if state in missing_states:
+                    return False
+                msg = str(getattr(je, "getMessage", lambda: "")() or "")
+                if "ORA-00942" in msg:  # Oracle: table or view does not exist
+                    return False
+                je = getattr(je, "getCause", lambda: None)()
+            if "TABLE_OR_VIEW_NOT_FOUND" in str(e):
+                return False
+            raise
+
+    def _write(self, df: DataFrame, table: str, mode: str, decisions: list) -> None:
+        write_jdbc(df, self.t.path, table, mode=mode, varchar_meta=varchar_metadata(decisions))
+
+    def read_back(self, spark: SparkSession, table: str) -> DataFrame:
+        return spark.read.format("jdbc").option("url", self.t.path).option("dbtable", table).load()
+
+
+class _DbFileSink(_Sink):
+    """An embedded database file loaded through the W3 native bulk path
+    (sources/bulkload.py): one source read, by the CSV stage write; the
+    loader computes standardize's stats in the destination and applies
+    the decisions there."""
+
+    sidecars: tuple[str, ...] = ()
+
+    def drop(self, spark: SparkSession) -> None:
+        for p in (self.t.path, *(self.t.path + s for s in self.sidecars)):
+            if os.path.exists(p):
+                os.remove(p)
+        shutil.rmtree(self.t.path + ".csv_stage", ignore_errors=True)
+
+    def manifest_path(self, source) -> str:
+        return self.t.path + ".manifest.json"
+
+    def exists(self, spark: SparkSession, table: str) -> bool:
+        if not os.path.exists(self.t.path):
+            return False
+        con, columns = self._open()
+        try:
+            return columns(con, table) is not None
+        finally:
+            con.close()
+
+    def load(self, df: DataFrame, table: str, mode: str) -> tuple[int, DataFrame, list]:
+        report = bulkload.LoadReport()
+        self._bulk_load(
+            df,
+            self.t.path,
+            table,
+            f"{self.t.path}.csv_stage/{table}",
+            mode=mode,
+            standardize_types=self.standardize_types,
+            ignored_suffixes=self.suffixes,
+            report=report,
+        )
+        return report.rows, report.loaded, report.decisions if self.standardize_types else []
+
+    def read_back(self, spark: SparkSession, table: str) -> None:
+        # embedded db files aren't Spark-readable without an export
+        # round trip — too heavy for a validation epilogue; be loud
+        # instead of silent
+        log.warning(
+            "resume: FK validation for skipped table %s unavailable on a "
+            "%s target — re-run without resume to validate",
+            table,
+            self.t.fmt,
+        )
+        return None
+
+
+class _DuckDBSink(_DbFileSink):
+    sidecars = (".wal",)
+
+    def _open(self):
+        import duckdb
+
+        return duckdb.connect(self.t.path, read_only=True), bulkload._duckdb_columns
+
+    def _bulk_load(self, *args, **kwargs) -> int:
+        return bulkload.bulk_load_duckdb(*args, **kwargs)
+
+
+class _SQLiteSink(_DbFileSink):
+    sidecars = ("-journal", "-wal", "-shm")
+
+    def _open(self):
+        import sqlite3
+
+        return sqlite3.connect(self.t.path), bulkload._sqlite_columns
+
+    def _bulk_load(self, *args, **kwargs) -> int:
+        return bulkload.bulk_load_sqlite(*args, **kwargs)
 
 
 @dataclass
@@ -155,57 +377,11 @@ class Migration:
     fks: list[FKSpec] = field(default_factory=list)
     validate_fks: bool = False
 
-    def _drop_destination(self, spark: SparkSession) -> None:
-        """drop_database parity (ETLAlchemyTarget.py ≈L20–60): file
-        targets remove the destination directory, duckdb/sqlite targets
-        the database file, embedded-Derby JDBC targets are dropped live
-        (`;drop=true` maintenance connection); server JDBC targets get
-        the DROP DATABASE statement logged (execution needs a
-        maintenance connection to a server this sandbox doesn't have)."""
-        import shutil
-        import os
-
-        if self.target.fmt == "jdbc":
-            if self.target.path.startswith("jdbc:derby:memory:"):
-                drop_url = self.target.path.split(";")[0] + ";drop=true"
-                try:
-                    spark._jvm.java.sql.DriverManager.getConnection(drop_url)
-                except Exception as e:
-                    # Derby signals a SUCCESSFUL drop with SQLState
-                    # 08006 ("database dropped"); a nonexistent db is
-                    # XJ004 — equally done. Anything else is a real
-                    # failure and must not be silently ignored (the
-                    # migration would proceed into a NOT-dropped
-                    # destination the user asked to destroy).
-                    state = None
-                    je = getattr(e, "java_exception", None)
-                    if je is not None:
-                        try:
-                            state = je.getSQLState()
-                        except Exception:
-                            state = None
-                    if state not in ("08006", "XJ004"):
-                        raise
-                return
-            db = self.target.path.rsplit("/", 1)[-1].split("?")[0]
-            log.warning(
-                "drop_destination on a live JDBC target: issue %r on a "
-                "maintenance connection before migrating",
-                f"DROP DATABASE IF EXISTS {db}",
-            )
-            return
-        if self.target.fmt in ("duckdb", "sqlite"):
-            sidecars = (
-                (".wal",)  # duckdb WAL naming
-                if self.target.fmt == "duckdb"
-                else ("-journal", "-wal", "-shm")  # sqlite sidecar naming
-            )
-            for p in (self.target.path, *[self.target.path + s for s in sidecars]):
-                if os.path.exists(p):
-                    os.remove(p)
-            shutil.rmtree(self.target.path + ".csv_stage", ignore_errors=True)
-            return
-        shutil.rmtree(self.target.path, ignore_errors=True)
+    def _sink(self) -> _Sink:
+        """The one dispatch on ``target.fmt``."""
+        kinds = {"jdbc": _JdbcSink, "duckdb": _DuckDBSink, "sqlite": _SQLiteSink}
+        suffixes = self.rules.ignored_col_suffixes if self.rules else None
+        return kinds.get(self.target.fmt, _FileSink)(self.target, self.standardize_types, suffixes)
 
     # --- resumable-run manifest ------------------------------------------
     # The upstream reference's per-table loop restarts from zero on any
@@ -216,37 +392,9 @@ class Migration:
     # those are overwritten, never appended to).
 
     def _manifest_path(self) -> str:
-        import hashlib
-        import os
-        import tempfile
-
-        t = self.target
-        if t.manifest_path:
-            return t.manifest_path
-        if t.fmt in ("duckdb", "sqlite"):
-            return t.path + ".manifest.json"
-        if t.fmt == "jdbc":
-            # key the default manifest on the (source, destination)
-            # PAIR: keyed on the destination url alone, a later
-            # migration from a DIFFERENT source to the same database
-            # would adopt the first run's manifest and silently skip
-            # its own tables as 'loaded'. Distinct migrations now get
-            # distinct manifests; concurrent runs of the SAME pair
-            # still race — point manifest_path at durable per-run
-            # storage for those.
-            src_id = getattr(self.source, "url", None) or getattr(
-                self.source, "path", ""
-            )
-            h = hashlib.md5(f"{src_id}->{t.path}".encode()).hexdigest()[:12]
-            return os.path.join(
-                tempfile.gettempdir(), f"etlalchemy_spark_manifest_{h}.json"
-            )
-        return os.path.join(t.path, "_migration_manifest.json")
+        return self.target.manifest_path or self._sink().manifest_path(self.source)
 
     def _load_manifest(self) -> dict:
-        import json
-        import os
-
         p = self._manifest_path()
         if not os.path.exists(p):
             return {}
@@ -254,89 +402,12 @@ class Migration:
             return json.load(f)
 
     def _save_manifest(self, manifest: dict) -> None:
-        import json
-        import os
-
         p = self._manifest_path()
         os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
         tmp = p + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
         os.replace(tmp, p)  # atomic: a crash never leaves a torn manifest
-
-    def _dest_table_exists(self, spark: SparkSession, dest_name: str) -> bool:
-        """Cheap destination existence probe per target kind — the
-        resume path's guard against trusting a manifest whose
-        destination has been recreated empty behind our back."""
-        import os
-
-        t = self.target
-        if t.fmt == "jdbc":
-            try:
-                (
-                    spark.read.format("jdbc")
-                    .option("url", t.path)
-                    .option("dbtable", dest_name)
-                    .load()
-                    .schema  # resolved via a zero-row metadata query
-                )
-                return True
-            except Exception as e:
-                # ONLY a definitive missing-object error means "absent".
-                # Treating a transient failure (network blip, auth
-                # timeout) as absent would re-run the table — on an
-                # append-mode target that silently duplicates every
-                # row. Check the SQLState chain for the dialects'
-                # missing-table codes; anything else propagates.
-                missing_states = {"42X05", "42P01", "42S02", "S0002", "42704"}
-                je = getattr(e, "java_exception", None)
-                while je is not None:
-                    try:
-                        state = je.getSQLState()
-                    except Exception:
-                        state = None
-                    if state in missing_states:
-                        return False
-                    msg = str(getattr(je, "getMessage", lambda: "")() or "")
-                    if "ORA-00942" in msg:  # Oracle: table or view does not exist
-                        return False
-                    je = getattr(je, "getCause", lambda: None)()
-                if "TABLE_OR_VIEW_NOT_FOUND" in str(e):
-                    return False
-                raise
-        if t.fmt == "duckdb":
-            import duckdb
-
-            if not os.path.exists(t.path):
-                return False
-            con = duckdb.connect(t.path, read_only=True)
-            try:
-                return bool(
-                    con.execute(
-                        "SELECT 1 FROM information_schema.tables WHERE table_name = ?",
-                        [dest_name],
-                    ).fetchall()
-                )
-            finally:
-                con.close()
-        if t.fmt == "sqlite":
-            import sqlite3
-
-            if not os.path.exists(t.path):
-                return False
-            con = sqlite3.connect(t.path)
-            try:
-                return bool(
-                    con.execute(
-                        "SELECT 1 FROM sqlite_master WHERE type='table' AND name=?",
-                        [dest_name],
-                    ).fetchall()
-                )
-            finally:
-                con.close()
-        return os.path.exists(
-            os.path.join(t.path, f"{dest_name}.{t.fmt}")
-        )
 
     def _load_concurrently(
         self,
@@ -384,8 +455,8 @@ class Migration:
         manifest: dict,
         lock: threading.Lock,
     ) -> tuple[TableReport, DataFrame]:
-        """One table's read → rules → standardize → write → audit chain,
-        bracketed by its 'loading' and 'loaded' manifest entries."""
+        """One table's read → rules → sink load chain, bracketed by its
+        'loading' and 'loaded' manifest entries."""
         t0 = time.monotonic()
         name = info.name
         with lock:
@@ -409,81 +480,8 @@ class Migration:
             df = self.rules.transform(name, df)
         t_rules = time.monotonic()
 
-        decisions = []
-        suffixes = self.rules.ignored_col_suffixes if self.rules else None
-        bulk = self.target.fmt in ("duckdb", "sqlite")
-        if self.standardize_types and not bulk:
-            df, decisions = standardize(df, suffixes)
-        t_std = time.monotonic()
-
-        n_loaded: int | None = None
-        if self.target.fmt == "jdbc":
-            # O2 metrics from the WRITE job itself: an Observation
-            # node rides the plan the jdbc write executes, so the
-            # row count comes out of the same single pass — the old
-            # df.count() here lazily re-executed the whole
-            # read→rules→standardize pipeline a second time per
-            # table (2x source scans at any scale).
-            from pyspark.sql import Observation
-
-            obs = Observation(f"migrate_{dest_name}")
-            write_jdbc(
-                df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                self.target.path,
-                dest_name,
-                mode="errorifexists" if table_mode == "error" else table_mode,
-                varchar_meta=varchar_metadata(decisions),
-            )
-            n_loaded = int(obs.get["rows"])
-        elif bulk:
-            # W3 native bulk path: per-partition dialect CSV +
-            # native loader into the embedded destination DB
-            # (duckdb INSERT … SELECT FROM read_csv / sqlite
-            # .import-equivalent). One source read: the loader
-            # computes standardize's stats in the destination from the
-            # staged rows and applies the decisions there.
-            from etlalchemy_spark.sources.bulkload import (
-                LoadReport,
-                bulk_load_duckdb,
-                bulk_load_sqlite,
-            )
-
-            loader = (
-                bulk_load_duckdb if self.target.fmt == "duckdb" else bulk_load_sqlite
-            )
-            load = LoadReport()
-            loader(
-                df,
-                self.target.path,
-                dest_name,
-                f"{self.target.path}.csv_stage/{dest_name}",
-                mode=table_mode,
-                standardize_types=self.standardize_types,
-                ignored_suffixes=suffixes,
-                report=load,
-            )
-            n_loaded, df = load.rows, load.loaded
-            if self.standardize_types:
-                decisions = load.decisions
-        else:
-            write_file(
-                df, f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",
-                fmt=self.target.fmt,
-                mode="errorifexists" if table_mode == "error" else table_mode,
-            )
-        t_write = time.monotonic()
-
-        if n_loaded is not None:
-            n_rows = n_loaded
-        else:
-            # count from the WRITTEN files (parquet/orc footers, csv
-            # line scan) — a df.count() here would lazily re-execute
-            # the whole read→rules→standardize pipeline a second time
-            n_rows = read_file(
-                spark,
-                f"{self.target.path.rstrip('/')}/{dest_name}.{self.target.fmt}",
-                fmt=self.target.fmt,
-            ).count()
+        n_rows, df, decisions = self._sink().load(df, dest_name, table_mode)
+        t_load = time.monotonic()
         with lock:
             manifest[name] = {"phase": "loaded", "dest": dest_name, "rows": n_rows}
             self._save_manifest(manifest)
@@ -495,8 +493,7 @@ class Migration:
             phase_seconds={
                 "extract": round(t_read - t0, 3),
                 "transform": round(t_rules - t_read, 3),
-                "standardize": round(t_std - t_rules, 3),
-                "load": round(t_write - t_std, 3),
+                "load": round(t_load - t_rules, 3),
             },
             decisions=decisions,
         )
@@ -534,10 +531,11 @@ class Migration:
         never started has no entry. The manifest is written on every
         run (resume or not) so any run is resumable after a crash.
         """
-        import os
-
+        if self.target.mode not in ("error", "overwrite", "append"):
+            raise ValueError(f"unknown mode {self.target.mode!r}: use error, overwrite or append")
+        sink = self._sink()
         if self.target.drop_destination:
-            self._drop_destination(spark)
+            sink.drop(spark)
             mp = self._manifest_path()
             if os.path.exists(mp):
                 os.remove(mp)  # a dropped destination has no history
@@ -580,7 +578,7 @@ class Migration:
                 # can be dropped/recreated behind our back). Skipping a
                 # table the destination does not actually hold would
                 # turn resume into silent data loss.
-                if self._dest_table_exists(spark, dest_name):
+                if sink.exists(spark, dest_name):
                     log.info(
                         "resume: skipping %s (already loaded, %s rows)",
                         name,
@@ -630,41 +628,13 @@ class Migration:
             # a resumed run skipped some tables, but skipping a LOAD must
             # not silently skip its VALIDATION: read skipped tables back
             # from the destination so every FK check a fresh run performs
-            # still runs. Targets we can't cheaply read back (none today)
-            # would warn rather than stay silent.
-            def _side(dest_name):
-                if dest_name in loaded:
-                    return loaded[dest_name]
-                if dest_name not in skipped:
-                    return None
-                t = self.target
-                if t.fmt == "jdbc":
-                    return (
-                        spark.read.format("jdbc")
-                        .option("url", t.path)
-                        .option("dbtable", dest_name)
-                        .load()
-                    )
-                if t.fmt in ("duckdb", "sqlite"):
-                    # embedded db files aren't Spark-readable without an
-                    # export round trip — too heavy for a validation
-                    # epilogue; be loud instead of silent
-                    log.warning(
-                        "resume: FK validation for skipped table %s "
-                        "unavailable on a %s target — re-run without "
-                        "resume to validate",
-                        dest_name,
-                        t.fmt,
-                    )
-                    return None
-                return read_file(
-                    spark,
-                    f"{t.path.rstrip('/')}/{dest_name}.{t.fmt}",
-                    fmt=t.fmt,
-                )
-
+            # still runs (DuckDB and SQLite sinks cannot cheaply read back;
+            # they warn rather than stay silent).
+            fk_tables = {t for fk in self.fks for t in (fk.table, fk.ref_table)}
+            sides = {t: sink.read_back(spark, t) for t in fk_tables & skipped.keys()}
+            sides.update(loaded)
             for fk in self.fks:
-                child, parent = _side(fk.table), _side(fk.ref_table)
+                child, parent = sides.get(fk.table), sides.get(fk.ref_table)
                 if child is not None and parent is not None:
                     row = fk_orphan_count(child, parent, fk).collect()[0]
                     if row["n_orphans"]:

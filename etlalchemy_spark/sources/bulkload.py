@@ -19,7 +19,10 @@ Spark-first re-expression:
    partition file], …)`` → ``CREATE TABLE`` → ``INSERT INTO table
    SELECT … FROM`` the temporary table → row-count audit, all of it
    after the stage in one transaction. ``bulk_load_sqlite`` is the
-   same for SQLite through the stdlib driver. Postgres/MySQL legs run
+   same for SQLite through the stdlib driver; both run one shared body
+   (``_load``) and differ only in how the temporary table is filled,
+   how a table's columns are read, SQLite's per-file writer lock and
+   how the INSERT reports its row count. Postgres/MySQL legs run
    the per-file statements from (2) through any DBAPI/JDBC connection.
 
 One Spark job per table: the stage write is the only job that reads
@@ -39,6 +42,7 @@ every file in one statement, which DuckDB itself parallelizes.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import threading
@@ -387,7 +391,10 @@ def _preflight(table: str, mode: str, have: list[str] | None, want: list[str], e
     """Mode checks against the destination table's columns ``have``
     (None: no such table). ``want`` is what the load writes; with
     ``exact=False`` standardization may still drop some of it, so only
-    a destination column the frame lacks is drift."""
+    a destination column the frame lacks is drift. A mode other than
+    error, overwrite or append is refused."""
+    if mode not in ("error", "overwrite", "append"):
+        raise ValueError(f"unknown mode {mode!r}: use error, overwrite or append")
     if have is None:
         return
     if mode == "error":
@@ -457,21 +464,76 @@ def _duckdb_read_csv(staged: DataFrame, files: list[str]) -> str:
     )
 
 
-def _duckdb_insert(table: str, tmp: str, staged: DataFrame, loaded: DataFrame) -> str:
-    """One DuckDB ``INSERT … SELECT`` from the temporary table: decided
-    casts apply on the way in, dropped columns are never selected."""
+def _insert(table: str, tmp: str, staged: DataFrame, loaded: DataFrame, dialect: str) -> str:
+    """One ``INSERT … SELECT`` from the temporary table: decided casts
+    apply on the way in, dropped columns are never selected."""
     src = {f.name: f.dataType for f in staged.schema.fields}
     names, exprs = [], []
     for f in loaded.schema.fields:
-        c = _quote_ident(f.name, "duckdb")
+        c = _quote_ident(f.name, dialect)
         names.append(c)
         exprs.append(
-            c if f.dataType == src[f.name] else f"CAST({c} AS {_ddl_type(f.dataType, 'duckdb')}) AS {c}"
+            c if f.dataType == src[f.name] else f"CAST({c} AS {_ddl_type(f.dataType, dialect)}) AS {c}"
         )
     return (
-        f"INSERT INTO {_quote_ident(table, 'duckdb')} ({', '.join(names)}) "
+        f"INSERT INTO {_quote_ident(table, dialect)} ({', '.join(names)}) "
         f"SELECT {', '.join(exprs)} FROM {tmp}"
     )
+
+
+def _duckdb_columns(con, table: str) -> list[str] | None:
+    """The table's column names in order; None when there is no such table."""
+    sql = "SELECT column_name FROM information_schema.columns WHERE table_name = ? ORDER BY ordinal_position"
+    return [r[0] for r in con.execute(sql, [table]).fetchall()] or None
+
+
+def _load(
+    con, dialect: str, df: DataFrame, table: str, csv_dir: str, mode: str, standardize_types: bool,
+    ignored_suffixes: list[str] | None, report: LoadReport | None, *, columns, fill, rows_of,
+    writer=contextlib.nullcontext(),
+) -> int:
+    """The load both engines share: pre-flight, stage, then one
+    transaction that fills a temporary table from the staged files,
+    decides, runs the exact pre-flight, drops or creates the table and
+    copies the kept columns in; returns the table's row count.
+
+    Engine-specific: ``columns(con, table)`` reads the table's columns,
+    ``fill(tmp, staged, files)`` creates and fills the temporary table,
+    ``rows_of(cursor)`` is the INSERT's own row count, and ``writer`` is
+    held for the pre-flight read and for the transaction plus the
+    count, never for the stage write."""
+    with writer:
+        have = columns(con, table)
+    _preflight(table, mode, have, df.columns, exact=not standardize_types)
+    staged, files = _stage(df, csv_dir, dialect, standardize_types, ignored_suffixes)
+    q = _quote_ident(table, dialect)
+    tmp = _quote_ident(f"__stage_{table}", dialect)
+    rows = 0
+    with writer:
+        con.execute("BEGIN")
+        try:
+            if files:  # a 0-row stage leaves no non-empty file
+                fill(tmp, staged, files)
+            decisions, loaded = _decide(
+                con, tmp, df, staged, dialect, standardize_types and bool(files), ignored_suffixes
+            )
+            _preflight(table, mode, have, loaded.columns)
+            if mode == "overwrite":
+                con.execute(f"DROP TABLE IF EXISTS {q}")
+                have = None
+            if have is None:
+                con.execute(schema_ddl(loaded, table, dialect))
+            if files:
+                rows = rows_of(con.execute(_insert(table, tmp, staged, loaded, dialect)))
+                con.execute(f"DROP TABLE {tmp}")
+            con.execute("COMMIT")
+        except BaseException:
+            con.execute("ROLLBACK")
+            raise
+        n = con.execute(f"SELECT COUNT(*) FROM {q}").fetchall()[0][0]
+    if report is not None:
+        report.decisions, report.rows, report.loaded = decisions, rows, loaded
+    return n
 
 
 def bulk_load_duckdb(
@@ -490,12 +552,13 @@ def bulk_load_duckdb(
     table's row count.
     ``mode``: overwrite (drop+create), append (create if absent;
     existing column names must match the loaded columns), error (fail
-    if table exists). Mode/existence checks run before the CSV stage is
-    written so a doomed load fails before the expensive work (only the
-    exact append column match waits for the standardizer's drops, and
-    still runs before the destination is touched); the temporary table,
-    DROP, CREATE and INSERT run in one transaction, so a failed load
-    leaves the old table and its rows in place.
+    if table exists); any other mode is refused. Mode/existence checks
+    run before the CSV stage is written so a doomed load fails before
+    the expensive work (only the exact append column match waits for
+    the standardizer's drops, and still runs before the destination is
+    touched); the temporary table, DROP, CREATE and INSERT run in one
+    transaction, so a failed load leaves the old table and its rows in
+    place.
 
     ``standardize_types`` applies the standardizer (T2–T4, T8, and T9
     for ``ignored_suffixes``) from stats computed in DuckDB over the
@@ -505,43 +568,14 @@ def bulk_load_duckdb(
 
     con = duckdb.connect(db_path)
     try:
-        have = [
-            r[0]
-            for r in con.execute(
-                "SELECT column_name FROM information_schema.columns "
-                "WHERE table_name = ? ORDER BY ordinal_position",
-                [table],
-            ).fetchall()
-        ] or None
-        _preflight(table, mode, have, df.columns, exact=not standardize_types)
-        staged, files = _stage(df, csv_dir, "duckdb", standardize_types, ignored_suffixes)
-        tmp = _quote_ident(f"__stage_{table}", "duckdb")
-        rows = 0
-        con.begin()
-        try:
-            if files:  # a 0-row stage leaves no non-empty file
-                con.execute(f"CREATE TEMP TABLE {tmp} AS SELECT * FROM {_duckdb_read_csv(staged, files)}")
-            decisions, loaded = _decide(
-                con, tmp, df, staged, "duckdb", standardize_types and bool(files), ignored_suffixes
-            )
-            _preflight(table, mode, have, loaded.columns)
-            if mode == "overwrite":
-                con.execute(f"DROP TABLE IF EXISTS {_quote_ident(table, 'duckdb')}")
-                have = None
-            if have is None:
-                con.execute(schema_ddl(loaded, table, "duckdb"))
-            if files:
-                rows = con.execute(_duckdb_insert(table, tmp, staged, loaded)).fetchone()[0]
-                con.execute(f"DROP TABLE {tmp}")
-            con.commit()
-        except BaseException:
-            con.rollback()
-            raise
-        if report is not None:
-            report.decisions, report.rows, report.loaded = decisions, rows, loaded
-        return con.execute(
-            f"SELECT COUNT(*) FROM {_quote_ident(table, 'duckdb')}"
-        ).fetchall()[0][0]
+        return _load(
+            con, "duckdb", df, table, csv_dir, mode, standardize_types, ignored_suffixes, report,
+            columns=_duckdb_columns,
+            fill=lambda tmp, staged, files: con.execute(
+                f"CREATE TEMP TABLE {tmp} AS SELECT * FROM {_duckdb_read_csv(staged, files)}"
+            ),
+            rows_of=lambda cur: cur.fetchone()[0],
+        )
     finally:
         con.close()
 
@@ -760,6 +794,11 @@ def _sqlite_writer(db_path: str) -> threading.Lock:
         return _SQLITE_WRITERS[os.path.realpath(db_path)]
 
 
+def _sqlite_columns(con, table: str) -> list[str] | None:
+    """The table's column names in order; None when there is no such table."""
+    return [r[1] for r in con.execute(f"PRAGMA table_info({_quote_ident(table, 'sqlite')})")] or None
+
+
 def bulk_load_sqlite(
     df: DataFrame,
     db_path: str,
@@ -775,53 +814,30 @@ def bulk_load_sqlite(
     partition → CREATE TABLE → ``executemany`` batches per file (the
     driver-level equivalent of the CLI ``.import`` the statement
     generator emits). Same mode semantics, pre-flight ordering,
-    transaction and standardization as ``bulk_load_duckdb``: the staged
-    files fill a temporary table through typed batches, the stats run
-    there, and one ``INSERT … SELECT`` copies the kept columns (SQLite
-    needs no casts: a narrowed or boolean integer is still INTEGER).
-    The same losslessness too: NULL is the UNQUOTED empty field, the
-    quoted '""' is the empty string — the quote-aware parser preserves
-    what csv.reader would collapse. Loads into one database file take
-    turns on its single writer for their reads and transaction; the
-    stage write runs outside that turn."""
+    transaction and standardization as ``bulk_load_duckdb`` (one shared
+    body): the staged files fill a temporary table through typed
+    batches, the stats run there, and one ``INSERT … SELECT`` copies
+    the kept columns. The same losslessness too: NULL is the UNQUOTED
+    empty field, the quoted '""' is the empty string — the quote-aware
+    parser preserves what csv.reader would collapse. Loads into one
+    database file take turns on its single writer for their reads and
+    transaction; the stage write runs outside that turn."""
     import sqlite3
 
-    q = _quote_ident(table, "sqlite")
-    tmp = _quote_ident(f"__stage_{table}", "sqlite")
-    con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN below
+    con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN in _load
+
+    def fill(tmp, staged, files):
+        con.execute(f"CREATE TEMP TABLE {tmp} ({_column_defs(staged, 'sqlite')})")
+        _sqlite_insert(con, tmp, staged, staged, files, batch_rows)
+
     try:
-        with _sqlite_writer(db_path):  # a spilled writer would block the read
-            have = [r[1] for r in con.execute(f"PRAGMA table_info({q})")] or None
-        _preflight(table, mode, have, df.columns, exact=not standardize_types)
-        staged, files = _stage(df, csv_dir, "sqlite", standardize_types, ignored_suffixes)
-        rows = 0
-        with _sqlite_writer(db_path):
-            con.execute("BEGIN")
-            try:
-                if files:
-                    con.execute(f"CREATE TEMP TABLE {tmp} ({_column_defs(staged, 'sqlite')})")
-                    _sqlite_insert(con, tmp, staged, staged, files, batch_rows)
-                decisions, loaded = _decide(
-                    con, tmp, df, staged, "sqlite", standardize_types and bool(files), ignored_suffixes
-                )
-                _preflight(table, mode, have, loaded.columns)
-                if mode == "overwrite":
-                    con.execute(f"DROP TABLE IF EXISTS {q}")
-                    have = None
-                if have is None:
-                    con.execute(schema_ddl(loaded, table, "sqlite"))
-                if files:
-                    cols = ", ".join(_quote_ident(c, "sqlite") for c in loaded.columns)
-                    rows = con.execute(f"INSERT INTO {q} ({cols}) SELECT {cols} FROM {tmp}").rowcount
-                    con.execute(f"DROP TABLE {tmp}")
-                con.execute("COMMIT")
-            except BaseException:
-                con.execute("ROLLBACK")
-                raise
-            n = con.execute(f"SELECT COUNT(*) FROM {q}").fetchall()[0][0]
-        if report is not None:
-            report.decisions, report.rows, report.loaded = decisions, rows, loaded
-        return n
+        return _load(
+            con, "sqlite", df, table, csv_dir, mode, standardize_types, ignored_suffixes, report,
+            columns=_sqlite_columns,
+            fill=fill,
+            rows_of=lambda cur: cur.rowcount,
+            writer=_sqlite_writer(db_path),
+        )
     finally:
         con.close()
 

@@ -131,16 +131,25 @@ def test_duckdb_migration_reads_the_source_once(spark, tmp_path, monkeypatch):
     assert {d.name: d.target_type for d in reports[0].decisions}["n_nationkey"] == "tinyint"
 
 
-@pytest.mark.parametrize("fmt", ["duckdb", "sqlite"])
+@pytest.mark.parametrize("fmt", ["duckdb", "sqlite", "parquet", "jdbc"])
 def test_append_reports_rows_loaded_by_this_run(spark, tmp_path, fmt):
-    db = str(tmp_path / f"app.{fmt}")
+    db = {
+        "parquet": str(tmp_path / "app"),
+        "jdbc": f"jdbc:derby:memory:{tmp_path.name};create=true",
+    }.get(fmt, str(tmp_path / f"app.{fmt}"))
     mk = lambda: Migration(
         FileSource(SF_DIR, included_tables=["region"]),
-        Target(db, fmt=fmt, mode="append"),
+        Target(db, fmt=fmt, mode="append", manifest_path=str(tmp_path / "manifest.json")),
     )
     reports = mk().run(spark)[0] + mk().run(spark)[0]
     assert [r.n_rows for r in reports] == [5, 5]
     assert mk()._load_manifest()["region"]["rows"] == 5
+    if fmt == "parquet":
+        assert spark.read.parquet(f"{db}/region.parquet").count() == 10
+        return
+    if fmt == "jdbc":
+        assert spark.read.format("jdbc").option("url", db).option("dbtable", "region").load().count() == 10
+        return
     con = duckdb.connect(db) if fmt == "duckdb" else sqlite3.connect(db)
     assert con.execute("SELECT COUNT(*) FROM region").fetchall()[0][0] == 10
     con.close()

@@ -3,6 +3,8 @@
 import os
 import tempfile
 
+import pytest
+
 from etlalchemy_spark.migrate import FileSource, Migration, Target, print_timings
 from etlalchemy_spark.operators.ddl import FKSpec, IndexSpec
 from etlalchemy_spark.operators.rules import SchemaRules
@@ -326,10 +328,19 @@ def test_resume_reverifies_destination_existence(spark, tmp_path):
     assert os.path.exists(tmp_path / "dest" / "nation.parquet")
 
 
-def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path):
+@pytest.mark.parametrize("fmt", ["parquet", "jdbc"])
+def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path, fmt):
     """Skipping a LOAD on resume must not silently skip its FK
     VALIDATION: skipped tables are read back from the destination."""
     import etlalchemy_spark.migrate as migmod
+
+    if fmt == "jdbc":
+        target = Target(
+            f"jdbc:derby:memory:{tmp_path.name};create=true", fmt="jdbc", mode="error",
+            manifest_path=str(tmp_path / "manifest.json"),
+        )
+    else:
+        target = Target(str(tmp_path), mode="error")
 
     calls = []
     real = migmod.fk_orphan_count
@@ -340,7 +351,7 @@ def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path):
 
     mk = lambda: Migration(
         source=FileSource(SF_DIR, included_tables=["nation", "region"]),
-        target=Target(str(tmp_path), mode="error"),
+        target=target,
         fks=[FKSpec("nation", ["n_regionkey"], "region", ["r_regionkey"])],
         validate_fks=True,
     )
@@ -352,6 +363,70 @@ def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path):
         migmod.fk_orphan_count = real
     assert reports == []  # both tables skipped...
     assert calls == ["nation"]  # ...but the FK check still ran
+
+
+def test_drop_destination_removes_sqlite_file_sidecars_and_stage(spark, tmp_path):
+    """drop_database parity on a SQLite target: the database file, its
+    -journal/-wal/-shm sidecars and the CSV stage directory all go."""
+    import sqlite3
+
+    db = str(tmp_path / "dest.sqlite")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE stale (x)")
+    con.commit()
+    con.close()
+    sidecars = [db + s for s in ("-journal", "-wal", "-shm")]
+    for p in sidecars:
+        open(p, "w").close()
+    os.makedirs(db + ".csv_stage")
+    open(db + ".csv_stage/stale.csv", "w").close()
+    reports, _ = Migration(
+        source=FileSource(SF_DIR, included_tables=["region"]),
+        target=Target(db, fmt="sqlite", mode="error", drop_destination=True),
+    ).run(spark)
+    assert [r.n_rows for r in reports] == [5]
+    assert not any(os.path.exists(p) for p in sidecars)
+    assert not os.path.exists(db + ".csv_stage/stale.csv")
+    con = sqlite3.connect(db)
+    try:
+        assert [r[0] for r in con.execute("SELECT name FROM sqlite_master WHERE type = 'table'")] == ["region"]
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "duckdb", "sqlite", "jdbc"])
+def test_unknown_mode_is_refused_before_anything_is_touched(spark, tmp_path, fmt):
+    """A mode outside error | overwrite | append (a typo, or Spark's
+    'ignore') is refused before the destination is dropped or loaded —
+    it must not silently append."""
+    path = {
+        "parquet": str(tmp_path / "dest"),
+        "jdbc": f"jdbc:derby:memory:{tmp_path.name};create=true",
+    }.get(fmt, str(tmp_path / f"dest.{fmt}"))
+    mk = lambda mode, **kw: Migration(
+        source=FileSource(SF_DIR, included_tables=["region"]),
+        target=Target(path, fmt=fmt, mode=mode, manifest_path=str(tmp_path / "m.json"), **kw),
+    )
+    assert [r.n_rows for r in mk("overwrite").run(spark)[0]] == [5]
+    for mode in ("ovewrite", "ignore"):
+        with pytest.raises(ValueError, match="unknown mode"):
+            mk(mode, drop_destination=True).run(spark)
+    # nothing was dropped, re-loaded or appended
+    assert mk("append")._load_manifest()["region"]["rows"] == 5
+    assert [r.n_rows for r in mk("overwrite").run(spark)[0]] == [5]
+    assert mk("overwrite")._sink().exists(spark, "region")
+
+
+def test_bulk_loaders_refuse_an_unknown_mode(spark, tmp_path):
+    from etlalchemy_spark.sources.bulkload import bulk_load_duckdb, bulk_load_sqlite
+
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
+    for load in (bulk_load_duckdb, bulk_load_sqlite):
+        db = str(tmp_path / f"{load.__name__}.db")
+        assert load(df, db, "t", str(tmp_path / "csv0")) == 1
+        with pytest.raises(ValueError, match="unknown mode"):
+            load(df, db, "t", str(tmp_path / "csv1"), mode="ovewrite")
+        assert load(df, db, "t", str(tmp_path / "csv2"), mode="overwrite") == 1
 
 
 def test_jdbc_manifest_keyed_on_source_and_destination():
