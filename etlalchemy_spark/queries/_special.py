@@ -52,7 +52,10 @@ stay DETERMINISTIC — the oracle contract.
 
 from __future__ import annotations
 
+import copy
 import math
+import re
+from collections import Counter
 
 
 def _d(x: float) -> str:
@@ -87,6 +90,14 @@ _LANCZOS = [
     1.5056327351493116e-7,
 ]
 _HALF_LN_2PI = _d(0.9189385332046727)  # ln(2*pi)/2
+
+# compact(): a stage is inlined when referenced at most _MAX_REFS times
+# and at most _MAX_LEN characters long
+_MAX_REFS = 2
+_MAX_LEN = 3000
+# apply_spark(): one exchange barrier every _BARRIER_EVERY layers
+_BARRIER_EVERY = 4
+_TOKEN = re.compile(r"\w+")  # stage names are word tokens
 
 
 class SqlStages:
@@ -292,58 +303,88 @@ class SqlStages:
 
     # ----------------------------------------------------------- compaction
 
-    def compact(self, keep: tuple[str, ...] = ("p_value",),
-                max_refs: int = 2, max_len: int = 3000) -> "SqlStages":
+    def compact(self, keep: tuple[str, ...] = ("p_value",)) -> "SqlStages":
         """Inline narrow stages to cut stage count: a stage whose
-        column is referenced at most `max_refs` times downstream and
-        whose expression is shorter than `max_len` gets substituted
-        textually into its consumers and dropped. Bounded duplication
-        (<= max_refs copies of a short expression) keeps total text
-        linear while collapsing the ~90-stage raw chain to ~a dozen —
-        each Spark projection and DuckDB CTE costs real
-        analyzer/optimizer time, and that overhead, not execution,
-        dominated the first cut (one-row input, 22 s of planning).
-        Runs to fixpoint; `keep` columns are never inlined."""
-        import re
+        column is referenced at most `_MAX_REFS` times downstream and
+        whose expression is at most `_MAX_LEN` long gets substituted
+        textually, parenthesized, into its consumers and dropped.
+        Bounded duplication (<= _MAX_REFS copies of a short
+        expression) keeps total text linear while collapsing the
+        ~90-stage raw chain to ~a dozen — each Spark projection and
+        DuckDB CTE costs real analyzer/optimizer time, and that
+        overhead, not execution, dominated the first cut (one-row
+        input, 22 s of planning). `keep` and pinned columns are never
+        inlined.
 
-        stages = list(self.stages)
-        changed = True
-        while changed:
-            changed = False
-            for i, (col, expr) in enumerate(stages):
-                if col in keep or col in self.pinned or len(expr) > max_len:
-                    continue
-                pat = re.compile(rf"\b{re.escape(col)}\b")
-                uses = [
-                    j for j in range(i + 1, len(stages))
-                    if pat.search(stages[j][1])
-                ]
-                n_refs = sum(len(pat.findall(stages[j][1])) for j in uses)
-                if n_refs <= max_refs:
-                    rep = f"({expr})"
-                    for j in uses:
-                        stages[j] = (stages[j][0], pat.sub(rep, stages[j][1]))
-                    del stages[i]
-                    changed = True
-                    break
+        One forward pass over reference counts: stage names are
+        unique word tokens, so each expression is tokenized once and
+        no text is rescanned. Inlining a stage moves its references
+        into its users, so the counts of earlier stages grow or stay
+        and those stages stay non-inlinable — except when a stage with
+        no users is dropped: that lowers the counts of the stages it
+        referenced, and the scan steps back to the earliest of them.
+        The texts are built once at the end, by substitution in stage
+        order. The result equals the fixpoint of "inline the first
+        inlinable stage, then rescan from the start"."""
+        stages = self.stages
+        pos: dict[str, int] = {}
+        refs: list[Counter] = []  # refs[j][c]: uses of earlier stage c in stage j
+        users: list[set[int]] = [set() for _ in stages]
+        for j, (col, expr) in enumerate(stages):
+            refs.append(Counter(t for t in _TOKEN.findall(expr) if t in pos))
+            for c in refs[j]:
+                users[pos[c]].add(j)
+            pos[col] = j
+        size = [len(expr) for _, expr in stages]
+        alive = [True] * len(stages)
+        i = 0
+        while i < len(stages):
+            col = stages[i][0]
+            n_refs = sum(refs[j][col] for j in users[i])
+            if (not alive[i] or col in keep or col in self.pinned
+                    or size[i] > _MAX_LEN or n_refs > _MAX_REFS):
+                i += 1
+                continue
+            alive[i] = False
+            for j in users[i]:
+                k = refs[j].pop(col)
+                size[j] += k * (size[i] + 2 - len(col))
+                for c, m in refs[i].items():
+                    refs[j][c] += k * m
+                    users[pos[c]].add(j)
+            for c in refs[i]:
+                users[pos[c]].discard(i)
+            if n_refs == 0 and refs[i]:
+                i = min(pos[c] for c in refs[i])
+            else:
+                i += 1
+        inlined: dict[str, str] = {}
+
+        def expand(m: re.Match) -> str:
+            t = m.group()
+            return f"({inlined[t]})" if t in inlined else t
+
         out = SqlStages(self.prefix)
-        out.stages = stages
+        for (col, expr), live in zip(stages, alive):
+            expr = _TOKEN.sub(expand, expr)
+            if live:
+                out.stages.append((col, expr))
+            else:
+                inlined[col] = expr
         out.pinned = set(self.pinned)
+        out._n = self._n
         return out
 
     def _layers(self) -> list[list[tuple[str, str]]]:
         """Group stages into dependency layers: a stage lands in the
         first layer after every stage column it references."""
-        import re
-
         level: dict[str, int] = {}
         layers: list[list[tuple[str, str]]] = []
         for col, expr in self.stages:
-            deps = [
-                level[c] for c in level
-                if re.search(rf"\b{re.escape(c)}\b", expr)
-            ]
-            lv = (max(deps) + 1) if deps else 0
+            lv = max(
+                (level[t] + 1 for t in _TOKEN.findall(expr) if t in level),
+                default=0,
+            )
             while len(layers) <= lv:
                 layers.append([])
             layers[lv].append((col, expr))
@@ -365,10 +406,10 @@ class SqlStages:
             prev = cur
         return "".join(parts) + f"\n{final_select} FROM {prev}"
 
-    def apply_spark(self, df, barrier_every: int = 4):
+    def apply_spark(self, df):
         """Replay the stages as layered projections on a DataFrame —
         one selectExpr per dependency layer, with a repartition(1)
-        exchange every `barrier_every` layers. The barriers split the
+        exchange every `_BARRIER_EVERY` layers. The barriers split the
         chain into separate whole-stage-codegen units: Janino compile
         time is SUPERLINEAR in generated-code size, and one fused
         ~19KB projection cost ~15 s to compile where the split units
@@ -380,74 +421,21 @@ class SqlStages:
             df = df.selectExpr(
                 "*", *[f"{expr} AS {col}" for col, expr in layer]
             )
-            if (i + 1) % barrier_every == 0 and i + 1 < len(layers):
+            if (i + 1) % _BARRIER_EVERY == 0 and i + 1 < len(layers):
                 df = df.repartition(1)
         return df
 
 
 # ---------------------------------------------------------------- front-ends
-
-# Memo for the p-value front-end calls: building + compacting a
-# p-value chain is pure driver Python (regex fixpoint over ~90 stage
-# expressions) measured at 0.11 s (chi2) to 0.37 s (t) PER QUERY BUILD,
-# and the result depends only on the input column names PLUS — for
-# chained calls (st passed in) — the caller's pre-added stage list,
-# which is a tuple of deterministic strings and therefore a valid
-# cache key. The cache stores the compacted stage list; every hit
-# returns a FRESH SqlStages carrying copies, so callers that mutate the
-# returned object behave exactly as before. The auto-name counter
-# ``_n`` is stored too, but every ``_*_pvalue_build`` ends with ``compact()``,
-# whose fresh SqlStages restarts it at 0: an auto-named stage appended
-# to a returned chain could reuse a surviving stage's name (no caller
-# appends one today).
-_FRONTEND_MEMO: dict[tuple, tuple[list, set, str, int]] = {}
-
-
-def _memo_frontend(key: tuple, build) -> SqlStages:
-    hit = _FRONTEND_MEMO.get(key)
-    if hit is None:
-        st = build()
-        hit = _FRONTEND_MEMO[key] = (st.stages, st.pinned, st.prefix, st._n)
-    stages, pinned, prefix, n = hit
-    out = SqlStages(prefix)
-    out.stages = list(stages)
-    out.pinned = set(pinned)
-    out._n = n
-    return out
-
-
-def _chain_key(kind: tuple, st: "SqlStages | None") -> tuple:
-    """Memo key covering the chained form: the pre-added stages are
-    deterministic (name, expr) string tuples, so two calls with equal
-    prefixes build byte-identical compacted chains."""
-    if st is None:
-        return kind + (None,)
-    return kind + (st.prefix, tuple(st.stages), tuple(sorted(st.pinned)), st._n)
-
-
-def _chain_copy(st: "SqlStages | None") -> SqlStages:
-    out = SqlStages() if st is None else SqlStages(st.prefix)
-    if st is not None:
-        out.stages = list(st.stages)
-        out.pinned = set(st.pinned)
-        out._n = st._n
-    return out
+# Each appends its chain to a copy of `st` (the caller's object is left
+# as it was) and returns the compacted chain with its p-value column.
 
 
 def t_pvalue_stages(
     t_col: str, dof_col: str, st: SqlStages | None = None
 ) -> tuple[SqlStages, str]:
     """Two-sided Student-t p-value: p = I_{v/(v+t^2)}(v/2, 1/2)."""
-    key = _chain_key(("t", t_col, dof_col), st)
-    return (
-        _memo_frontend(
-            key, lambda: _t_pvalue_build(t_col, dof_col, _chain_copy(st))
-        ),
-        "p_value",
-    )
-
-
-def _t_pvalue_build(t_col: str, dof_col: str, st: SqlStages) -> SqlStages:
+    st = copy.deepcopy(st) if st is not None else SqlStages()
     a = st.add(f"CAST({dof_col} AS DOUBLE) / 2e0")
     b = st.add("5e-1")
     x = st.add(
@@ -457,23 +445,14 @@ def _t_pvalue_build(t_col: str, dof_col: str, st: SqlStages) -> SqlStages:
     )
     p = st.betainc(a, b, x, lgamma_b_literal=_d(math.lgamma(0.5)))
     st.add(f"LEAST(GREATEST({p}, 0e0), 1e0)", name="p_value")
-    return st.compact()
+    return st.compact(), "p_value"
 
 
 def f_pvalue_stages(
     f_col: str, d1_col: str, d2_col: str, st: SqlStages | None = None
 ) -> tuple[SqlStages, str]:
     """Upper-tail F p-value: p = I_{d2/(d2+d1 F)}(d2/2, d1/2)."""
-    key = _chain_key(("f", f_col, d1_col, d2_col), st)
-    return (
-        _memo_frontend(
-            key, lambda: _f_pvalue_build(f_col, d1_col, d2_col, _chain_copy(st))
-        ),
-        "p_value",
-    )
-
-
-def _f_pvalue_build(f_col: str, d1_col: str, d2_col: str, st: SqlStages) -> SqlStages:
+    st = copy.deepcopy(st) if st is not None else SqlStages()
     a = st.add(f"CAST({d2_col} AS DOUBLE) / 2e0")
     b = st.add(f"CAST({d1_col} AS DOUBLE) / 2e0")
     x = st.add(
@@ -483,25 +462,16 @@ def _f_pvalue_build(f_col: str, d1_col: str, d2_col: str, st: SqlStages) -> SqlS
     )
     p = st.betainc(a, b, x)
     st.add(f"LEAST(GREATEST({p}, 0e0), 1e0)", name="p_value")
-    return st.compact()
+    return st.compact(), "p_value"
 
 
 def chi2_pvalue_stages(
     x2_col: str, dof_col: str, st: SqlStages | None = None
 ) -> tuple[SqlStages, str]:
     """Upper-tail chi-square p-value: p = Q(k/2, x/2)."""
-    key = _chain_key(("chi2", x2_col, dof_col), st)
-    return (
-        _memo_frontend(
-            key, lambda: _chi2_pvalue_build(x2_col, dof_col, _chain_copy(st))
-        ),
-        "p_value",
-    )
-
-
-def _chi2_pvalue_build(x2_col: str, dof_col: str, st: SqlStages) -> SqlStages:
+    st = copy.deepcopy(st) if st is not None else SqlStages()
     s = st.add(f"CAST({dof_col} AS DOUBLE) / 2e0")
     x = st.add(f"CAST({x2_col} AS DOUBLE) / 2e0")
     p = st.gammainc_q(s, x)
     st.add(f"LEAST(GREATEST({p}, 0e0), 1e0)", name="p_value")
-    return st.compact()
+    return st.compact(), "p_value"

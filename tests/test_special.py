@@ -249,6 +249,130 @@ def test_pinned_chunks_survive_compaction():
     assert st.pinned & names, "pinned chunk stages were compacted away"
 
 
+def _fixpoint_compact(stages, pinned, keep, max_refs=2, max_len=3000):
+    """Reference for SqlStages.compact(): the original fixpoint — inline
+    the first stage referenced at most `max_refs` times downstream and
+    at most `max_len` long, then rescan from the start. Quadratic in
+    the stage count; keep the inputs small."""
+    import re
+
+    stages = list(stages)
+    changed = True
+    while changed:
+        changed = False
+        for i, (col, expr) in enumerate(stages):
+            if col in keep or col in pinned or len(expr) > max_len:
+                continue
+            pat = re.compile(rf"\b{re.escape(col)}\b")
+            uses = [
+                j for j in range(i + 1, len(stages))
+                if pat.search(stages[j][1])
+            ]
+            n_refs = sum(len(pat.findall(stages[j][1])) for j in uses)
+            if n_refs <= max_refs:
+                rep = f"({expr})"
+                for j in uses:
+                    stages[j] = (stages[j][0], pat.sub(rep, stages[j][1]))
+                del stages[i]
+                changed = True
+                break
+    return stages
+
+
+def _anova_style_chain(stat):
+    from etlalchemy_spark.queries._special import SqlStages, f_pvalue_stages
+
+    st = SqlStages()
+    st.add("CAST(k_groups - 1 AS DOUBLE)", name="_d1")
+    st.add("CAST(n_total - k_groups AS DOUBLE)", name="_d2")
+    return f_pvalue_stages(stat, "_d1", "_d2", st=st)
+
+
+def test_compact_matches_fixpoint_on_frontend_chains(monkeypatch):
+    """Every compact() call the query builders make — the three p-value
+    front-ends, their chained `st=` forms with `keep` tuples (Ljung-Box,
+    Breusch-Pagan, ANOVA, Brown-Forsythe) and the other staged oracles —
+    gives the reference fixpoint's stage list byte for byte."""
+    from etlalchemy_spark.queries import aggregates, events
+    from etlalchemy_spark.queries._special import (
+        SqlStages,
+        chi2_pvalue_stages,
+        t_pvalue_stages,
+    )
+
+    calls = []
+    compact = SqlStages.compact
+
+    def recording(self, keep=("p_value",)):
+        out = compact(self, keep)
+        calls.append((list(self.stages), set(self.pinned), keep, out))
+        return out
+
+    monkeypatch.setattr(SqlStages, "compact", recording)
+    t_pvalue_stages("t_stat", "welch_dof")
+    chi2_pvalue_stages("chi2", "dof")
+    _anova_style_chain("f_stat")
+    _anova_style_chain("w_stat")
+    events._ljung_box_sql()
+    aggregates._bp_stages()
+    events._pacf_stages(5)
+    events._hurst_sql()
+    events._hwm_sql()
+    aggregates._bayes_ab_sql()
+    aggregates._mk_sql()
+    assert len(calls) >= 12
+    assert any(keep == ("q_stat", "dof", "p_value") for _, _, keep, _ in calls)
+    for stages, pinned, keep, out in calls:
+        assert out.stages == _fixpoint_compact(stages, pinned, keep), keep
+        assert out.pinned == pinned
+
+
+def test_compact_matches_fixpoint_on_random_chains():
+    """Seeded random stage lists: dead stages (no consumer), pinned
+    stages, `keep` columns, expressions over the length limit, and
+    inlines that push a consumer over it."""
+    import random
+
+    from etlalchemy_spark.queries._special import SqlStages
+
+    rng = random.Random(20261018)
+    for _ in range(300):
+        st = SqlStages(prefix=rng.choice(["_sp", "_x"]))
+        for i in range(rng.randint(1, 25)):
+            names = [c for c, _ in st.stages]
+            refs = [rng.choice(names) for _ in range(rng.choice([0, 1, 1, 2, 2, 3]))
+                    if names]
+            pad = "x" * rng.choice([0, 0, 40, 700, 1600, 3001])
+            name = rng.choice([None] * 6 + ["p_value", f"k{i}"])
+            if name in names:  # stage names are unique
+                name = None
+            st.add(" + ".join(refs + [f"'{pad}'"]), name=name,
+                   pin=rng.random() < 0.1)
+        names = [c for c, _ in st.stages]
+        keep = (tuple(rng.sample(names, min(2, len(names))))
+                if rng.random() < 0.3 else ("p_value",))
+        got = st.compact(keep)
+        assert got.stages == _fixpoint_compact(st.stages, st.pinned, keep)
+
+
+def test_frontends_copy_the_callers_chain_and_keep_its_counter():
+    """A front-end leaves the caller's `st` as it was, and its result
+    carries the auto-name counter: a stage appended to a returned chain
+    gets a name no surviving stage has."""
+    from etlalchemy_spark.queries._special import SqlStages, chi2_pvalue_stages
+
+    st = SqlStages()
+    st.add("CAST(n AS DOUBLE)", name="q_stat")
+    before = (list(st.stages), set(st.pinned), st._n)
+    chained, _ = chi2_pvalue_stages("q_stat", "dof", st=st)
+    assert (st.stages, st.pinned, st._n) == before
+    assert len(chained.stages) > len(st.stages)
+
+    out, _ = chi2_pvalue_stages("x", "dof")
+    names = {c for c, _ in out.stages}
+    assert out.add("1e0") not in names
+
+
 def test_double_literals_roundtrip():
     from etlalchemy_spark.queries._special import _d
 
