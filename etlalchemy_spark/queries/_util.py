@@ -262,15 +262,5 @@ def cut(df: DataFrame) -> DataFrame:
     of the upstream plan — the kruskal-wallis r14 finding, shared. On
     Spark 4.1 + AQE the "lazy" checkpoint still executes upstream
     shuffle stages at creation, so apply it only where a second
-    consumer exists. ``SPARK_GRAFT_NO_CUT=1`` disables the cuts taken
-    through this function — in ``agg_abc_pareto``, ``agg_gains_lift``,
-    ``text_langid_kappa`` and ``ts_max_concurrency`` — (the A/B lever;
-    also the escape hatch if a storage-constrained deployment prefers
-    recompute over materialization). The raw
-    ``localCheckpoint(eager=False)`` cuts elsewhere (Kruskal-Wallis, the
-    graph queries and operators, ...) do not go through it and stay on."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CUT"):
-        return df
+    consumer exists."""
     return df.localCheckpoint(eager=False)

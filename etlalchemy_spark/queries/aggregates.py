@@ -822,8 +822,7 @@ def agg_chi2_independence(spark, sf_dir):
         ((F.col("n_rows") - 1) * (F.col("n_cols") - 1)).cast("bigint").alias("dof"),
     )
     # barrier (one row) + shared IEEE chi-square tail (_special.py)
-    st, _ = chi2_pvalue_stages("chi2", "dof")
-    return st.apply_spark(base.repartition(1)).select(
+    return _CHI2_ST.apply_spark(base.repartition(1)).select(
         "chi2", "n_cells", "n_rows", "n_cols", "dof", "p_value"
     )
 
@@ -1442,8 +1441,7 @@ def agg_welch_ttest(spark, sf_dir):
     # exchange barrier (one row) so the p-value stage chain cannot be
     # collapse-inlined into the t/dof derivations, then the shared
     # IEEE stage pipeline (queries/_special.py)
-    st, _ = t_pvalue_stages("t_stat", "welch_dof")
-    return st.apply_spark(base.repartition(1)).select(
+    return _WELCH_ST.apply_spark(base.repartition(1)).select(
         "n_pre", "n_post", "mean_pre", "mean_post", "t_stat", "welch_dof",
         "p_value",
     )
@@ -2772,11 +2770,7 @@ def agg_anova_oneway(spark, sf_dir):
     )
     # barrier (one row) + shared IEEE p-value stages (_special.py):
     # d1 = k-1, d2 = n-k as plain columns first
-    st = SqlStages()
-    st.add("CAST(k_groups - 1 AS DOUBLE)", name="_d1")
-    st.add("CAST(n_total - k_groups AS DOUBLE)", name="_d2")
-    st, _ = f_pvalue_stages("f_stat", "_d1", "_d2", st=st)
-    return st.apply_spark(base.repartition(1)).select(
+    return _ANOVA_ST.apply_spark(base.repartition(1)).select(
         "k_groups", "n_total", "ss_between", "ss_within", "f_stat",
         "eta_squared", "p_value",
     )
@@ -3555,8 +3549,7 @@ def agg_kruskal_wallis(spark, sf_dir):
         (F.col("k") - 1).cast("bigint").alias("dof"),
         h.alias("h_stat"),
     )
-    st, _ = chi2_pvalue_stages("h_stat", "dof")
-    return st.apply_spark(base.repartition(1)).select(
+    return _KW_ST.apply_spark(base.repartition(1)).select(
         "n_total", "k_groups", "dof", "h_stat", "p_value"
     )
 
@@ -3650,8 +3643,7 @@ def agg_jarque_bera(spark, sf_dir):
         (n / F.lit(6.0) * (g1 * g1 + g2 * g2 / F.lit(4.0))).alias("jb_stat"),
         F.lit(2).cast("bigint").alias("dof"),
     )
-    st, _ = chi2_pvalue_stages("jb_stat", "dof")
-    return st.apply_spark(base.repartition(1)).select(
+    return _JB_ST.apply_spark(base.repartition(1)).select(
         "n_total", "skewness", "excess_kurtosis", "jb_stat", "dof", "p_value"
     )
 
@@ -3885,11 +3877,7 @@ def agg_brown_forsythe(spark, sf_dir):
                / (F.col("nn") - F.col("k")).cast("double"))
         ).alias("w_stat"),
     )
-    st = SqlStages()
-    st.add("CAST(k_groups - 1 AS DOUBLE)", name="_d1")
-    st.add("CAST(n_total - k_groups AS DOUBLE)", name="_d2")
-    st, _ = f_pvalue_stages("w_stat", "_d1", "_d2", st=st)
-    return st.apply_spark(base.repartition(1)).select(
+    return _BF_ST.apply_spark(base.repartition(1)).select(
         "k_groups", "n_total", "w_stat", "p_value"
     )
 
@@ -4423,8 +4411,7 @@ def _bp_stages():
     sxx = st.add(f"{s(2,0)} - {s(1,0)} * {s(1,0)} / {n}")
     st.add(f"{n} * ({sux} * {sux}) / ({suu} * {sxx})", name="bp_stat", pin=True)
     st.add("CAST(1 AS BIGINT)", name="dof", pin=True)
-    st, _ = chi2_pvalue_stages("bp_stat", "dof", st=st)
-    return st.compact(keep=("bp_stat", "dof", "p_value"))
+    return chi2_pvalue_stages("bp_stat", "dof", st=st)[0]
 
 
 def _bp_base_sql() -> str:
@@ -4478,8 +4465,7 @@ def agg_breusch_pagan(spark, sf_dir):
                 expr = expr * F.col("y")
             aggs.append(F.sum(expr).cast("bigint").alias(f"s_{p}{q}"))
     base = v.agg(*aggs)
-    st = _bp_stages()
-    return st.apply_spark(base.repartition(1)).select(
+    return _BP_ST.apply_spark(base.repartition(1)).select(
         F.col("s_00").alias("n_rows"), "bp_stat", "dof", "p_value"
     )
 
@@ -4554,8 +4540,7 @@ def agg_cochran_q(spark, sf_dir):
         F.lit(2).cast("bigint").alias("dof"),
         q.alias("q_stat"),
     )
-    st, _ = chi2_pvalue_stages("q_stat", "dof")
-    return st.apply_spark(base.repartition(1)).select(
+    return _COCHRAN_ST.apply_spark(base.repartition(1)).select(
         "n", "c1", "c2", "c3", "dof", "q_stat", "p_value"
     )
 
@@ -4655,8 +4640,7 @@ def agg_friedman_test(spark, sf_dir):
             / (F.col("q") - 48 * F.col("n")).cast("double")
         ).alias("fr_stat"),
     )
-    st, _ = chi2_pvalue_stages("fr_stat", "dof")
-    return st.apply_spark(base.repartition(1)).select("n", "dof", "fr_stat", "p_value")
+    return _FRIEDMAN_ST.apply_spark(base.repartition(1)).select("n", "dof", "fr_stat", "p_value")
 
 
 # --- sequential probability ratio test (r11) ---------------------------------------------------

@@ -3617,7 +3617,9 @@ def graph_bipartite_projection(spark, sf_dir):
 # --- Ljung-Box portmanteau test (r11) --------------------------------------------------------
 
 
-def _ljung_box_sql() -> str:
+def _ljung_box_stages():
+    """Q = n(n+2) sum r_k^2/(n-k) over lags 1-5 and its chi-square(5)
+    tail, from the r1..r5 columns `ts_pacf` computes."""
     from etlalchemy_spark.queries._special import SqlStages, chi2_pvalue_stages
 
     st = SqlStages(prefix="_lb")
@@ -3629,14 +3631,14 @@ def _ljung_box_sql() -> str:
         name="q_stat", pin=True,
     )
     st.add("CAST(5 AS BIGINT)", name="dof", pin=True)
-    st2, _ = chi2_pvalue_stages("q_stat", "dof", st=st)
-    return st2.compact(keep=("q_stat", "dof", "p_value")).duckdb_sql(
-        _PACF_BASE_SQL,
-        "SELECT n AS n_hours, q_stat, dof, p_value",
-    )
+    return chi2_pvalue_stages("q_stat", "dof", st=st)[0]
 
 
-@register("ts_ljung_box", oracle=_ljung_box_sql(), tags=("timeseries",))
+_LB_ST = _ljung_box_stages()
+_LB_SQL = _LB_ST.duckdb_sql(_PACF_BASE_SQL, "SELECT n AS n_hours, q_stat, dof, p_value")
+
+
+@register("ts_ljung_box", oracle=_LB_SQL, tags=("timeseries",))
 def ts_ljung_box(spark, sf_dir):
     """Ljung-Box portmanteau whiteness test on the hourly event-rate
     series (lags 1-5) — 'is there ANY autocorrelation left?' asked
@@ -3646,8 +3648,6 @@ def ts_ljung_box(spark, sf_dir):
     exact int64 lag machinery for the r_k and the shared staged
     incomplete-gamma for the tail — hash-exact across engines."""
     from pyspark.sql import Window as W
-
-    from etlalchemy_spark.queries._special import SqlStages, chi2_pvalue_stages
 
     ev = t(spark, sf_dir, "events")
     s = ev.groupBy(
@@ -3683,19 +3683,9 @@ def ts_ljung_box(spark, sf_dir):
             ).alias(f"r{k}")
         )
     base = a.select(*rsel)
-    st = SqlStages(prefix="_lb")
-    terms = " + ".join(
-        f"r{k} * r{k} / (CAST(n AS DOUBLE) - {k}e0)" for k in range(1, 6)
+    return _LB_ST.apply_spark(base.repartition(1)).select(
+        F.col("n").alias("n_hours"), "q_stat", "dof", "p_value"
     )
-    st.add(
-        f"CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2e0) * ({terms})",
-        name="q_stat", pin=True,
-    )
-    st.add("CAST(5 AS BIGINT)", name="dof", pin=True)
-    st, _ = chi2_pvalue_stages("q_stat", "dof", st=st)
-    return st.compact(keep=("q_stat", "dof", "p_value")).apply_spark(
-        base.repartition(1)
-    ).select(F.col("n").alias("n_hours"), "q_stat", "dof", "p_value")
 
 
 # --- Hurst exponent via rescaled range (r11) --------------------------------------------------

@@ -127,10 +127,6 @@ def _nodes_broadcastable(spark, sf_dir) -> bool:
     distributed shapes are exactly as before."""
     from etlalchemy_spark.catalog import _freshness_signature, _scan_splits, table_path
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_GRAPH_BCAST", "").lower() in ("off", "false", "0"):
-        return False  # operational escape hatch (and the A/B lever)
     try:
         p = table_path(sf_dir, "part")
         s = _scan_splits(p, _freshness_signature(p))

@@ -84,16 +84,10 @@ def get_spark(
         # sort-merge joins whose post-shuffle partitions are small —
         # both skip the per-partition sorts. Size-guarded (falls back to
         # sort-merge for oversized builds), so valid at any scale; the
-        # 64 MB threshold bounds per-task build memory and is
-        # env-overridable for clusters with different task memory.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m"),
-        )
+        # 64 MB threshold bounds per-task build memory (clusters with
+        # different task memory pass their own through extra_conf).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

@@ -19,11 +19,12 @@ Spark-first re-expression:
    partition file], …)`` → ``CREATE TABLE`` → ``INSERT INTO table
    SELECT … FROM`` the temporary table → row-count audit, all of it
    after the stage in one transaction. ``bulk_load_sqlite`` is the
-   same for SQLite through the stdlib driver; both run one shared body
-   (``_load``) and differ only in how the temporary table is filled,
-   how a table's columns are read, SQLite's per-file writer lock and
-   how the INSERT reports its row count. Postgres/MySQL legs run
-   the per-file statements from (2) through any DBAPI/JDBC connection.
+   same for SQLite through the stdlib driver, its stage read by the
+   same ``read_csv``; both run one shared body (``_load``) and differ
+   only in how the temporary table is filled (SQLite refuses NaN), how
+   a table's columns are read, SQLite's per-file writer lock and how
+   the INSERT reports its row count. Postgres/MySQL legs run the
+   per-file statements from (2) through any DBAPI/JDBC connection.
 
 One Spark job per table: the stage write is the only job that reads
 the source. When asked to standardize, the loaders compute the
@@ -448,13 +449,12 @@ def _decide(
     return decisions, apply_decisions(df, decisions)
 
 
-def _duckdb_read_csv(staged: DataFrame, files: list[str]) -> str:
-    """``read_csv`` over every partition file with the stage's own
-    (source) types and the ``COPY`` CSV options of
-    ``bulk_load_statements``, so NULL, '' and quotes stay lossless."""
-    columns = ", ".join(
-        f"'{_sql_str(f.name)}': '{_ddl_type(f.dataType, 'duckdb')}'" for f in staged.schema.fields
-    )
+def _duckdb_read_csv(staged: DataFrame, files: list[str], read_type=lambda t: _ddl_type(t, "duckdb")) -> str:
+    """``read_csv`` over every partition file with ``read_type`` of each
+    staged column (by default the stage's own source types) and the
+    ``COPY`` CSV options of ``bulk_load_statements``, so NULL, '' and
+    quotes stay lossless."""
+    columns = ", ".join(f"'{_sql_str(f.name)}': '{read_type(f.dataType)}'" for f in staged.schema.fields)
     opts = CSV_DIALECT_OPTIONS["duckdb"]
     paths = ", ".join(f"'{_sql_str(p)}'" for p in files)
     return (
@@ -598,188 +598,58 @@ def export_duckdb_table(db_path: str, table: str, parquet_path: str) -> None:
 
 # --- executed sqlite leg ----------------------------------------------------
 #
-# Python's stdlib sqlite3 is the second destination engine available in
-# this sandbox, so W3 gets a second EXECUTED leg: the .import-equivalent
-# (CREATE TABLE + batched INSERTs fed from the dialect CSV
-# files) driven through the DBAPI connection. NULL convention: the
-# staged files distinguish NULL (unquoted empty field) from the empty
-# string (quoted '""') — same lossless set as the duckdb leg — and the
-# parser below preserves that distinction, which csv.reader cannot (it
-# collapses both to '').
+# The stdlib sqlite3 driver gives W3 a second EXECUTED leg: the
+# .import-equivalent (CREATE TABLE + batched INSERTs) driven through the
+# DBAPI connection. Its stage uses the duckdb CSV conventions, so the
+# DuckDB leg's reader (``_duckdb_read_csv``) parses it: NULL (unquoted
+# empty field) and '' (quoted '""') stay distinct, and neither leg
+# parses CSV in Python.
+
+_SQLITE_BATCH_ROWS = 10_000
 
 
-def _parse_record(text: str, delimiter: str = ","):
-    """Parse ONE complete RFC-4180 record (no trailing terminator) into
-    a list of ``(value, was_quoted)``. ``was_quoted`` is what
-    csv.reader throws away — and the only way to tell a quoted empty
-    string from the unquoted-empty NULL marker. Records without any
-    quote character (the overwhelmingly common case) take a fast
-    ``str.split`` path."""
-    if '"' not in text:
-        return [(v, False) for v in text.split(delimiter)]
-    rec: list = []
-    buf: list = []
-    quoted = in_q = False
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if in_q:
-            if ch == '"':
-                if i + 1 < n and text[i + 1] == '"':
-                    buf.append('"')
-                    i += 2
-                    continue
-                in_q = False
-                i += 1
-                continue
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == '"' and not buf and not quoted:
-            in_q = quoted = True
-            i += 1
-            continue
-        if ch == delimiter:
-            rec.append(("".join(buf), quoted))
-            buf, quoted = [], False
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    if in_q:
-        raise ValueError("unterminated quoted field in staged CSV")
-    rec.append(("".join(buf), quoted))
-    return rec
+def _sqlite_read_type(dtype) -> str:
+    """The DuckDB type a staged column is read as for SQLite: integers
+    as BIGINT, float and double as DOUBLE (REAL is float32 in DuckDB),
+    booleans as BOOLEAN (stored 1/0); timestamps, dates, decimals and
+    strings keep their staged text for SQLite's TEXT columns."""
+    s = dtype.simpleString()
+    if s in ("tinyint", "smallint", "int", "bigint"):
+        return "BIGINT"
+    if s in ("float", "double"):
+        return "DOUBLE"
+    return "BOOLEAN" if s == "boolean" else "VARCHAR"
 
 
-def _advance_quote_state(
-    line: str, in_q: bool, field_has_data: bool, delimiter: str
-) -> tuple[bool, bool]:
-    """Advance the (inside-quoted-field, current-field-has-data) state
-    across one physical line, using the SAME transition rules as
-    ``_parse_record`` (a quote only OPENS a quoted field at field
-    start; a bare quote mid-field is literal data; doubling stays
-    inside). Counting raw quote parity instead would merge two records
-    whenever an unquoted field carries a lone quote character."""
-    i, n = 0, len(line)
-    while i < n:
-        ch = line[i]
-        if in_q:
-            if ch == '"':
-                if i + 1 < n and line[i + 1] == '"':
-                    i += 2
-                    continue
-                in_q = False
-                field_has_data = True  # a closed quote means the field had content
-            i += 1
-            continue
-        if ch == '"' and not field_has_data:
-            in_q = True
-        elif ch == delimiter:
-            field_has_data = False
-        else:
-            field_has_data = True
-        i += 1
-    return in_q, field_has_data
+def _sqlite_insert(con, q: str, staged: DataFrame, files: list[str]) -> None:
+    """Fill the table ``q`` (``staged``'s columns, in order) from the
+    staged files: a throwaway DuckDB connection reads them and its rows
+    move into SQLite in ``executemany`` batches. SQLite stores no NaN
+    (it would store NULL), so a NaN in a float or double column raises
+    a ValueError naming the column."""
+    import duckdb
 
-
-def _parse_rfc4180(fh, delimiter: str = ","):
-    """Stream records as lists of ``(value, was_quoted)`` from an
-    RFC-4180 file object (quote doubling, embedded delimiters/newlines
-    inside quoted fields) WITHOUT slurping the file: lines are
-    accumulated only while a quoted field spans the newline (tracked
-    by the real field-state machine, not raw quote parity), then one
-    record is parsed and released. Memory tracks the largest record,
-    not the partition file. Driver-side Python by design: this leg
-    feeds sqlite through DBAPI ``executemany``, which is Python-bound
-    anyway."""
-    pending: list[str] = []
-    in_q = False
-    field_has_data = False
-    for line in fh:
-        pending.append(line)
-        if in_q or '"' in line:
-            # state-scan the line minus its record terminator (the
-            # terminator never toggles state; mid-field \r IS data)
-            scan = line[:-1] if line.endswith("\n") else line
-            if scan.endswith("\r"):
-                scan = scan[:-1]
-            in_q, field_has_data = _advance_quote_state(
-                scan, in_q, field_has_data, delimiter
-            )
-        else:
-            field_has_data = False  # quote-free line: record completes below
-        if in_q:
-            continue  # record continues past this newline
-        field_has_data = False  # next record starts fresh
-        text = "".join(pending)
-        pending = []
-        if text.endswith("\r\n"):
-            text = text[:-2]
-        elif text.endswith("\n"):
-            text = text[:-1]
-        # an empty line is still a record: a single-column NULL row
-        # stages as a bare terminator
-        yield _parse_record(text, delimiter)
-    if in_q:
-        raise ValueError("unterminated quoted field in staged CSV")
-    # the loop yields (and clears pending) on every record boundary,
-    # including a final line with no trailing newline — leftover lines
-    # without an open quote cannot occur
-    assert not pending
-
-
-# boolean text as staged: Spark booleans render true/false, the 0/1
-# integers the standardizer infers as boolean (T3) render 0/1
-_SQLITE_BOOL = {"true": 1, "false": 0, "1": 1, "0": 0}
-
-
-def _sqlite_converters(df: DataFrame):
-    """Per-column text→python converters for the typed INSERT (sqlite
-    is affinity-typed; feeding ints/floats as python objects preserves
-    them exactly, and '' means NULL per the dialect convention)."""
-    convs = []
-    for f in df.schema.fields:
-        s = f.dataType.simpleString()
-        if s in ("tinyint", "smallint", "int", "bigint"):
-            fn = int
-        elif s in ("float", "double"):
-            fn = float
-        elif s == "boolean":
-            fn = _SQLITE_BOOL.__getitem__
-        elif s == "binary":
-            raise ValueError("binary columns are not supported on the sqlite CSV leg")
-        else:  # string / timestamp / date / decimal ride as TEXT
-            fn = str
-        convs.append(fn)
-    return convs
-
-
-def _sqlite_insert(con, q: str, staged: DataFrame, loaded: DataFrame, files: list[str], batch_rows: int) -> None:
-    """Batched INSERTs of ``loaded``'s columns from the staged files
-    into the table ``q``: other staged columns are skipped by field
-    index, the columns are named so values map by name into any
-    column order, and each value is converted for its loaded type."""
-    pos = {c: i for i, c in enumerate(staged.columns)}
-    idx = [pos[c] for c in loaded.columns]
-    convs = _sqlite_converters(loaded)
-    cols = ", ".join(_quote_ident(c, "sqlite") for c in loaded.columns)
-    ins = f"INSERT INTO {q} ({cols}) VALUES ({', '.join('?' for _ in convs)})"
-    for path in files:
-        with open(path, newline="") as fh:
-            batch = []
-            for rec in _parse_rfc4180(fh):
-                batch.append(
-                    tuple(
-                        None if (v == "" and not was_quoted) else fn(v)
-                        for fn, (v, was_quoted) in zip(convs, (rec[i] for i in idx))
-                    )
-                )
-                if len(batch) >= batch_rows:
-                    con.executemany(ins, batch)
-                    batch = []
-            if batch:
-                con.executemany(ins, batch)
+    exprs = []
+    for f in staged.schema.fields:
+        c = _quote_ident(f.name, "duckdb")
+        if _sqlite_read_type(f.dataType) == "DOUBLE":
+            msg = _sql_str(f"column {f.name!r} holds NaN, which SQLite cannot store")
+            c = f"CASE WHEN isnan({c}) THEN error('{msg}') ELSE {c} END"
+        exprs.append(c)
+    ins = f"INSERT INTO {q} VALUES ({', '.join('?' for _ in exprs)})"
+    reader = duckdb.connect()
+    try:
+        cur = reader.execute(
+            f"SELECT {', '.join(exprs)} FROM {_duckdb_read_csv(staged, files, _sqlite_read_type)}"
+        )
+        while batch := cur.fetchmany(_SQLITE_BATCH_ROWS):
+            con.executemany(ins, batch)
+    except duckdb.InvalidInputException as e:
+        if "holds NaN" not in str(e):
+            raise
+        raise ValueError(str(e).split(": ", 1)[-1]) from e
+    finally:
+        reader.close()
 
 
 # SQLite has one writer per database file, and a second writer waits at
@@ -805,30 +675,28 @@ def bulk_load_sqlite(
     table: str,
     csv_dir: str,
     mode: str = "overwrite",
-    batch_rows: int = 10_000,
     standardize_types: bool = False,
     ignored_suffixes: list[str] | None = None,
     report: LoadReport | None = None,
 ) -> int:
-    """Execute the sqlite leg of W3 end-to-end: dialect CSV per
-    partition → CREATE TABLE → ``executemany`` batches per file (the
-    driver-level equivalent of the CLI ``.import`` the statement
-    generator emits). Same mode semantics, pre-flight ordering,
-    transaction and standardization as ``bulk_load_duckdb`` (one shared
-    body): the staged files fill a temporary table through typed
-    batches, the stats run there, and one ``INSERT … SELECT`` copies
-    the kept columns. The same losslessness too: NULL is the UNQUOTED
-    empty field, the quoted '""' is the empty string — the quote-aware
-    parser preserves what csv.reader would collapse. Loads into one
-    database file take turns on its single writer for their reads and
-    transaction; the stage write runs outside that turn."""
+    """Execute the sqlite leg of W3 end-to-end with the mode
+    semantics, pre-flight ordering, transaction and standardization of
+    ``bulk_load_duckdb`` (one shared body): the DuckDB leg's
+    ``read_csv`` reads the staged files, ``executemany`` batches fill a
+    temporary table (the driver-level equivalent of the CLI ``.import``
+    the statement generator emits), the stats run there, and one
+    ``INSERT … SELECT`` copies the kept columns. NULL and '' stay
+    distinct. A NaN in a float or double column is refused inside the
+    transaction (SQLite would store NULL), so an existing table keeps
+    its rows. Loads into one database file take turns on its single
+    writer for their reads and transaction, not for the stage write."""
     import sqlite3
 
     con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN in _load
 
     def fill(tmp, staged, files):
         con.execute(f"CREATE TEMP TABLE {tmp} ({_column_defs(staged, 'sqlite')})")
-        _sqlite_insert(con, tmp, staged, staged, files, batch_rows)
+        _sqlite_insert(con, tmp, staged, files)
 
     try:
         return _load(

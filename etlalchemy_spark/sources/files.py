@@ -59,18 +59,6 @@ CSV_DIALECT_OPTIONS: dict[str, dict[str, str]] = {
         "escape": '"',
         **_TS_US,
     },
-    # SQLite .import --csv expects RFC-4180 quote doubling. Lossless
-    # NULL-vs-'' set (same as duckdb): NULL = unquoted empty,
-    # '' = quoted "" (pinned explicitly — the executed loader's
-    # quote-aware parser depends on the distinction).
-    "sqlite": {
-        "nullValue": "",
-        "emptyValue": '""',
-        "delimiter": ",",
-        "quote": '"',
-        "escape": '"',
-        **_TS_US,
-    },
     # DuckDB / Postgres COPY **CSV-mode defaults** — the lossless set:
     # NULL = unquoted empty, empty string = quoted "", RFC-4180 quote
     # doubling (escape = quote). Unlike the \N conventions above, this
@@ -85,6 +73,10 @@ CSV_DIALECT_OPTIONS: dict[str, dict[str, str]] = {
         **_TS_US,
     },
 }
+# SQLite .import --csv expects the same RFC-4180 quote doubling, and the
+# executed sqlite leg reads its stage with the DuckDB leg's read_csv: one
+# bundle, so the two can never drift apart.
+CSV_DIALECT_OPTIONS["sqlite"] = CSV_DIALECT_OPTIONS["duckdb"]
 
 FORMATS = ("parquet", "csv", "json", "orc", "text")
 

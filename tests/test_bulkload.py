@@ -209,24 +209,85 @@ def test_duckdb_append_rejects_schema_drift(spark, tmp_path):
 
 
 def test_sqlite_roundtrip_lossless(spark, tmp_path):
+    """Every staged type the sqlite leg reads: integer extremes, float
+    and double edge values, boolean NULL, dates, decimals, timestamps
+    with and without microseconds, and the NULL / '' / literal '\\N' /
+    CR-LF-and-quote strings."""
+    from datetime import date
+    from decimal import Decimal
+
+    inf = float("inf")
     df = spark.createDataFrame(
         [
-            (1, "plain", 1.5, "2024-03-01 03:04:05.123456"),
-            (2, "comma, inside", -2.25, "2024-03-01 03:04:05.000001"),
-            (3, 'quote " inside', 1e300, None),
-            (4, None, None, "2020-01-02 00:00:00.000000"),
+            (1, "plain", 1.5, "2024-03-01 03:04:05.123456",
+             -128, -32768, -(2**63), 1.1, inf, True, date(1970, 1, 1), Decimal("1234567890.12")),
+            (2, "comma, inside", -2.25, "2024-03-01 03:04:05.000001",
+             127, 32767, 2**63 - 1, -3.4e38, -inf, False, date(2024, 2, 29), Decimal("-0.01")),
+            (3, 'quote " inside', 1e300, None,
+             0, 0, 0, None, 1e-300, None, date(9999, 12, 31), None),
+            (4, None, None, "2020-01-02 00:00:00.000000",
+             None, None, None, 0.0, None, True, None, Decimal("0.10")),
+            (5, "", 0.0, "2024-02-29 23:59:59.999999",
+             1, 2, 3, 2.5, 1e-300, False, date(2000, 1, 1), Decimal("5.00")),
+            (6, "\\N", 42.0, "1970-01-01 00:00:00.000000",
+             None, None, None, None, None, None, None, None),
+            (7, 'a\r\nb"c', -0.5, None,
+             -1, -1, -1, -1.0, -1.0, None, date(1970, 1, 1), Decimal("-9999999999.99")),
         ],
-        "id int, s string, v double, ts_s string",
-    ).select("id", "s", "v", F.col("ts_s").cast("timestamp").alias("ts"))
+        "id int, s string, v double, ts_s string, ti tinyint, si smallint, bi bigint, "
+        "f float, d double, b boolean, dt date, dec decimal(12,2)",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
     db = str(tmp_path / "dest.sqlite")
     n = bulk_load_sqlite(df, db, "tricky", str(tmp_path / "csv"))
-    assert n == 4
+    assert n == 7
     out = str(tmp_path / "back.parquet")
     export_sqlite_table(db, "tricky", out, df.schema)
     back = spark.read.parquet(out)
-    src = {r["id"]: (r["s"], r["v"], r["ts"]) for r in df.collect()}
-    got = {r["id"]: (r["s"], r["v"], r["ts"]) for r in back.collect()}
+    assert back.columns == df.columns
+    src = {tuple(r) for r in df.collect()}
+    got = {tuple(r) for r in back.collect()}
     assert got == src
+
+
+def test_sqlite_refuses_nan_and_keeps_the_old_table(spark, tmp_path):
+    """SQLite stores no NaN (it would keep NULL): the load refuses it,
+    naming the column, inside the transaction, so an overwrite leaves
+    the old table and its rows in place."""
+    import sqlite3
+
+    db = str(tmp_path / "nan.sqlite")
+    old = spark.createDataFrame([(1, 1.5), (2, None)], "id int, v double")
+    assert bulk_load_sqlite(old, db, "t", str(tmp_path / "csv1")) == 2
+    new = spark.createDataFrame([(3, 2.5), (4, float("nan"))], "id int, v double")
+    with pytest.raises(ValueError, match="column 'v' holds NaN"):
+        bulk_load_sqlite(new, db, "t", str(tmp_path / "csv2"), mode="overwrite")
+    con = sqlite3.connect(db)
+    try:
+        assert sorted(con.execute("SELECT id, v FROM t").fetchall()) == [(1, 1.5), (2, None)]
+    finally:
+        con.close()
+
+
+def test_duckdb_read_csv_text_unchanged(spark):
+    """The DuckDB leg's read_csv text, pinned for a frame covering
+    every staged type: giving the reader a read-type function for the
+    sqlite leg left the DuckDB leg's SQL byte-identical."""
+    from etlalchemy_spark.sources.bulkload import _duckdb_read_csv
+
+    staged = spark.createDataFrame(
+        [],
+        "ti tinyint, si smallint, i int, bi bigint, b boolean, f float, d double, s string, "
+        "ts timestamp, tn timestamp_ntz, dt date, dec decimal(12,2), `we'ird` string",
+    )
+    files = ["/stage/part-00000.csv", "/stage/it's/part-00001.csv"]
+    assert _duckdb_read_csv(staged, files) == (
+        "read_csv(['/stage/part-00000.csv', '/stage/it''s/part-00001.csv'], columns={"
+        "'ti': 'TINYINT', 'si': 'SMALLINT', 'i': 'INTEGER', 'bi': 'BIGINT', 'b': 'BOOLEAN', "
+        "'f': 'REAL', 'd': 'DOUBLE', 's': 'VARCHAR', 'ts': 'TIMESTAMP', 'tn': 'TIMESTAMP', "
+        "'dt': 'DATE', 'dec': 'DECIMAL(12,2)', 'we''ird': 'VARCHAR'}, header=false, "
+        "delim=',', quote='\"', escape='\"', nullstr='', allow_quoted_nulls=false, "
+        "auto_detect=false)"
+    )
 
 
 def test_sqlite_mode_semantics(spark, tmp_path):
@@ -369,8 +430,7 @@ def test_single_column_nulls_refused_not_lost(spark, tmp_path):
 
 def test_sqlite_multi_column_all_null_rows_survive(spark, tmp_path):
     """Multi-column all-NULL rows render as bare delimiters (not empty
-    lines) — they must round-trip as NULLs through the streaming
-    parser."""
+    lines) — they must round-trip as NULLs through the loader."""
     df = spark.createDataFrame(
         [("a", "b"), (None, None), (None, "c")], "x string, y string"
     ).coalesce(1)
@@ -384,20 +444,6 @@ def test_sqlite_multi_column_all_null_rows_survive(spark, tmp_path):
     )
     con.close()
     assert rows == [("<N>", "<N>"), ("<N>", "c"), ("a", "b")]
-
-
-def test_parser_bare_quote_mid_field_does_not_merge_records(spark, tmp_path):
-    """A lone quote inside an UNQUOTED field is literal data, not a
-    field opener — raw quote-parity counting would glue the next
-    physical record onto this one."""
-    from etlalchemy_spark.sources.bulkload import _parse_rfc4180
-    import io
-
-    recs = list(_parse_rfc4180(io.StringIO('ab"cd,x\nef,y\n')))
-    assert recs == [[('ab"cd', False), ("x", False)], [("ef", False), ("y", False)]]
-    # quoted field spanning a newline still assembles into one record
-    recs2 = list(_parse_rfc4180(io.StringIO('"a\nb",x\nc,y\n')))
-    assert recs2 == [[("a\nb", True), ("x", False)], [("c", False), ("y", False)]]
 
 
 def test_single_column_guard_is_dialect_aware(spark, tmp_path):

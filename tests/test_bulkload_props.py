@@ -78,7 +78,7 @@ def test_sqlite_roundtrip_arbitrary_rows(spark, tmp_path_factory, rows):
     out = str(tmp / "back.parquet")
     export_sqlite_table(db, "t", out, df.schema)
     back = {r["id"]: (r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()}
-    # lossless since the quote-aware loader: '' and NULL both survive
+    # lossless: DuckDB's read_csv keeps '' and NULL apart
     src = {r["id"]: (r["k"], r["s"], r["v"]) for r in df.collect()}
     assert back == src
 
