@@ -33,9 +33,10 @@ plan, loaded in one of two shapes:
 
 - file and JDBC sinks cast before they write: a stats pass (one agg
   job), then one write whose Observation counts the rows it wrote;
-- DuckDB and SQLite sinks read the plan once, by the CSV stage write;
-  the loader computes the standardizer's stats in the destination and
-  applies the decisions there (sources/bulkload.py).
+- DuckDB and SQLite sinks read the plan once, by one ``toArrow()`` of
+  the columns they may keep; the loader computes the standardizer's
+  stats in the destination and applies the decisions there
+  (sources/bulkload.py).
 
 "Rows" is the rows this run loaded on every sink. Per-table phase
 timings mirror ``print_timings`` (O2).
@@ -146,7 +147,8 @@ class TableReport:
     plan construction; the extract+transform COMPUTE executes inside the
     sink's write and is billed to 'load', as are the standardizer's
     stats (a Spark action on file and JDBC targets, a SQL aggregate in
-    the destination on DuckDB and SQLite targets) — unlike the
+    the destination on DuckDB and SQLite targets, after the one Spark
+    job that hands the staged columns over as Arrow) — unlike the
     reference's eager row pipeline, where each phase did its own work.
     The phases are each table's own wall clock; tables load
     concurrently, so phases of different tables overlap and do not sum
@@ -292,9 +294,9 @@ class _JdbcSink(_SparkSink):
 
 class _DbFileSink(_Sink):
     """An embedded database file loaded through the W3 native bulk path
-    (sources/bulkload.py): one source read, by the CSV stage write; the
-    loader computes standardize's stats in the destination and applies
-    the decisions there."""
+    (sources/bulkload.py): one source read, by the Arrow handoff of the
+    staged columns; the loader computes standardize's stats in the
+    destination and applies the decisions there."""
 
     sidecars: tuple[str, ...] = ()
 
@@ -302,7 +304,6 @@ class _DbFileSink(_Sink):
         for p in (self.t.path, *(self.t.path + s for s in self.sidecars)):
             if os.path.exists(p):
                 os.remove(p)
-        shutil.rmtree(self.t.path + ".csv_stage", ignore_errors=True)
 
     def manifest_path(self, source) -> str:
         return self.t.path + ".manifest.json"
@@ -322,7 +323,6 @@ class _DbFileSink(_Sink):
             df,
             self.t.path,
             table,
-            f"{self.t.path}.csv_stage/{table}",
             mode=mode,
             standardize_types=self.standardize_types,
             ignored_suffixes=self.suffixes,

@@ -20,10 +20,11 @@ and decisions compile to ``cast``/``drop``. Two engines run it:
   before they write): one ``df.agg`` job over ``stats_exprs``, then the
   write reads the source again.
 - the destination, in the embedded bulk loaders (sources/bulkload.py):
-  the staged rows land in a temporary table, the same terms run there
-  as one SQL aggregate, and the loader ``decide``s from that row and
-  applies the casts and drops in its ``INSERT … SELECT``. The CSV
-  stage write is the table's only Spark job.
+  the staged rows, handed over as Arrow, are the loader's temporary
+  table, the same terms run there as one SQL aggregate, and the loader
+  ``decide``s from that row and applies the casts and drops in its
+  ``INSERT … SELECT``. The Arrow collect of the staged columns is the
+  table's only Spark job.
 """
 
 from __future__ import annotations

@@ -753,16 +753,15 @@ SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer
 @register("etl_bulk_load_roundtrip", oracle=_BULK_SQL, tags=("etl", "bulkload"))
 def etl_bulk_load_roundtrip(spark, sf_dir):
     """W3 executed end-to-end (upstream ``send_data`` ≈L750–850): Spark
-    writes the dialect CSV one file per partition, the destination
-    engine (embedded DuckDB, an in-process DBMS with a native CSV
-    loader) creates the table and bulk-loads every partition
-    file in one ``INSERT … SELECT FROM read_csv`` with the ``COPY``
-    CSV options, then exports what it loaded; Spark re-reads
-    that export and the oracle hash-compares it against the source
-    table — proving the loader conventions (NULL marker, quoting,
-    escapes, float text round-trip) are lossless. Postgres/MySQL run
-    the identical statement stream (sources/bulkload.bulk_load_statements)
-    over a live connection."""
+    hands the table to the destination engine (embedded DuckDB, an
+    in-process DBMS whose native bulk path is an Arrow scan) as one
+    Arrow table, DuckDB creates the table and loads it in one
+    ``INSERT … SELECT`` from that Arrow table read in place, then
+    exports what it loaded; Spark re-reads that export and the oracle
+    hash-compares it against the source table — proving the handoff
+    (NULL vs '', quoting-free strings, exact doubles) is lossless.
+    Postgres/MySQL get the dialect CSV plus the per-file statement
+    stream instead (sources/bulkload.bulk_load_statements)."""
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
@@ -772,7 +771,7 @@ def etl_bulk_load_roundtrip(spark, sf_dir):
     db = os.path.join(tmp, "dest.duckdb")
     out = os.path.join(tmp, "customer_back.parquet")
     df = t(spark, sf_dir, "customer")
-    bulk_load_duckdb(df, db, "customer_bulk", os.path.join(tmp, "customer_csv"))
+    bulk_load_duckdb(df, db, "customer_bulk")
     export_duckdb_table(db, "customer_bulk", out)
     return spark.read.parquet(out).select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
@@ -971,9 +970,10 @@ SELECT event_id, ts, user_id, event_type, value FROM events
 def etl_bulk_load_events_roundtrip(spark, sf_dir):
     """The µs-precision regression gate for W3: the events table (whose
     ``ts`` values carry sub-millisecond precision) through the duckdb
-    bulk path and back. Spark's CSV writer default truncates to
-    milliseconds — this query would hash-mismatch the oracle if the
-    dialect bundles ever lose their explicit timestampFormat."""
+    bulk path and back. The handoff casts ``timestamp`` columns to the
+    session wall clock (``timestamp_ntz``) — this query would
+    hash-mismatch the oracle if that conversion ever lost a
+    microsecond or shifted a zone."""
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
@@ -985,7 +985,7 @@ def etl_bulk_load_events_roundtrip(spark, sf_dir):
     df = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    bulk_load_duckdb(df, db, "events_bulk", os.path.join(tmp, "events_csv"))
+    bulk_load_duckdb(df, db, "events_bulk")
     export_duckdb_table(db, "events_bulk", out)
     return spark.read.parquet(out)
 
@@ -997,13 +997,13 @@ SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate FROM orders
 
 @register("etl_bulk_load_sqlite_roundtrip", oracle=_BULK_SQLITE_SQL, tags=("etl", "bulkload"))
 def etl_bulk_load_sqlite_roundtrip(spark, sf_dir):
-    """W3's second EXECUTED destination engine: the same per-partition
-    dialect CSV stage drives stdlib sqlite3 through the
-    ``.import``-equivalent (CREATE TABLE + batched positional INSERTs),
-    then the destination exports what it loaded and the oracle
-    hash-compares it against the source — proving the sqlite loader
-    conventions (quote doubling, empty-field NULL marker, µs timestamp
-    text format) are lossless, including a timestamp column."""
+    """W3's second EXECUTED destination engine: the same Arrow handoff
+    drives stdlib sqlite3 through the ``.import``-equivalent (CREATE
+    TABLE + batched positional INSERTs, read through a throwaway DuckDB
+    connection), then the destination exports what it loaded and the
+    oracle hash-compares it against the source — proving the sqlite
+    conventions (NULL vs '', decimals and dates as text) are
+    lossless."""
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
@@ -1017,7 +1017,7 @@ def etl_bulk_load_sqlite_roundtrip(spark, sf_dir):
     df = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    bulk_load_sqlite(df, db, "orders_bulk", os.path.join(tmp, "orders_csv"))
+    bulk_load_sqlite(df, db, "orders_bulk")
     export_sqlite_table(db, "orders_bulk", out, df.schema)
     return spark.read.parquet(out)
 
@@ -1031,7 +1031,7 @@ SELECT r_regionkey, r_name FROM region
 def etl_migrate_sqlite_roundtrip(spark, sf_dir):
     """O1 through the SECOND executed destination engine: Migration
     drops the sqlite database file, reflects region, standardizes, and
-    loads through the .import-equivalent bulk path (per-partition CSV +
+    loads through the .import-equivalent bulk path (Arrow handoff +
     batched typed INSERTs via stdlib sqlite3); the loaded table is
     exported back and hash-compared against the source."""
     import os
@@ -1062,9 +1062,9 @@ def etl_migrate_duckdb_roundtrip(spark, sf_dir):
     """O1 + W3 + drop_database parity in one path: Migration drops the
     destination database file (``drop_destination=True``, upstream
     ETLAlchemyTarget ≈L20–60), reflects nation+region, standardizes,
-    and loads each table through the NATIVE bulk path (per-partition
-    CSV + DuckDB ``read_csv``, standardize's stats riding the stage
-    write); the loaded nation table is exported
+    and loads each table through the NATIVE bulk path (an Arrow
+    handoff DuckDB reads in place, standardize's stats computed there);
+    the loaded nation table is exported
     back and hash-compared against the source — the full
     reflect→transform→bulk-load→verify lifecycle executed, not mocked."""
     import os

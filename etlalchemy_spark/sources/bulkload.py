@@ -12,21 +12,22 @@ Spark-first re-expression:
    reference's single serialized dump.
 2. ``bulk_load_statements`` renders the per-file native bulk statement
    for the destination dialect (pure string generation — auditable,
-   and exactly what a deployment issues through its DB connection).
+   and exactly what a deployment issues through its DB connection);
+   the Postgres/MySQL legs run them through any DBAPI/JDBC connection.
 3. ``bulk_load_duckdb`` EXECUTES the path end-to-end against an
-   embedded DuckDB database (an in-process DBMS with a native CSV
-   loader): stage → a temporary table filled by one ``read_csv([every
-   partition file], …)`` → ``CREATE TABLE`` → ``INSERT INTO table
-   SELECT … FROM`` the temporary table → row-count audit, all of it
-   after the stage in one transaction. ``bulk_load_sqlite`` is the
-   same for SQLite through the stdlib driver, its stage read by the
-   same ``read_csv``; both run one shared body (``_load``) and differ
+   embedded DuckDB database, whose native bulk path is an Arrow scan,
+   not a text file: one ``DataFrame.toArrow()`` of the staged columns
+   (no stage files, no Hadoop file commit) → DuckDB reads it in place
+   under a temporary name → ``CREATE TABLE`` → ``INSERT INTO table
+   SELECT … FROM`` it → row-count audit, in one transaction.
+   ``bulk_load_sqlite`` is the same for SQLite through the stdlib
+   driver, a throwaway DuckDB connection reading the Arrow table into
+   a temporary table. Both run one shared body (``_load``) and differ
    only in how the temporary table is filled (SQLite refuses NaN), how
    a table's columns are read, SQLite's per-file writer lock and how
-   the INSERT reports its row count. Postgres/MySQL legs run the
-   per-file statements from (2) through any DBAPI/JDBC connection.
+   the INSERT reports its row count.
 
-One Spark job per table: the stage write is the only job that reads
+One Spark job per table: the Arrow collect is the only job that reads
 the source. When asked to standardize, the loaders compute the
 standardizer's stats in the destination — one SQL aggregate of
 ``stat_terms`` (operators/standardize.py) over the temporary table —
@@ -37,8 +38,10 @@ ignored columns (T9) need no stats and are never staged.
 
 Scale note: the per-file statements of (2) are independent — a real
 deployment fans them out (one loader session per partition file, as
-``mysqlimport --use-threads`` does); the embedded DuckDB executor reads
-every file in one statement, which DuckDB itself parallelizes.
+``mysqlimport --use-threads`` does). The embedded legs hold one table
+in the driver process, so Spark's ``spark.driver.maxResultSize``
+(default 1g) bounds one table's handoff; a larger table fails the
+load with Spark's error and leaves the destination as it was.
 """
 
 from __future__ import annotations
@@ -54,13 +57,14 @@ from pyspark.sql import DataFrame
 
 from etlalchemy_spark.operators.standardize import (
     ColumnDecision,
+    _q,
     apply_decisions,
     decide,
     is_ignored,
     keep_all,
     stat_terms,
 )
-from etlalchemy_spark.sources.files import CSV_DIALECT_OPTIONS, write_csv_for_bulk_load
+from etlalchemy_spark.sources.files import CSV_DIALECT_OPTIONS
 
 # Spark simpleString → destination column type for CREATE TABLE before
 # bulk load (schema fidelity beyond this — downsized ints, VARCHAR(n) —
@@ -409,21 +413,17 @@ def _preflight(table: str, mode: str, have: list[str] | None, want: list[str], e
         )
 
 
-def _stage(
-    df: DataFrame,
-    csv_dir: str,
-    dialect: str,
-    standardize_types: bool,
-    ignored_suffixes: list[str] | None,
-) -> tuple[DataFrame, list[str]]:
-    """Stage the columns the load may keep, in the table's one Spark
-    job (suffix-ignored columns are never staged). Returns the staged
-    frame and its non-empty partition files."""
+def _stage(df: DataFrame, standardize_types: bool, ignored_suffixes: list[str] | None):
+    """Collect the columns the load may keep as one Arrow table, in the
+    table's one Spark job (suffix-ignored columns are never staged).
+    ``timestamp`` columns cross as ``timestamp_ntz``: the session-local
+    wall clock, the same value the dialect CSV writer renders as text.
+    Returns the staged frame and the Arrow table."""
     suffixes = ignored_suffixes if standardize_types else None
     ignored = [c for c in df.columns if is_ignored(c, suffixes)]
     staged = df.drop(*ignored) if ignored else df
-    write_csv_for_bulk_load(staged, csv_dir, dialect=dialect)
-    return staged, partition_files(csv_dir)
+    cols = (f"CAST({_q(c)} AS TIMESTAMP_NTZ) AS {_q(c)}" if t == "timestamp" else _q(c) for c, t in staged.dtypes)
+    return staged, staged.selectExpr(*cols).toArrow()
 
 
 def _decide(
@@ -447,21 +447,6 @@ def _decide(
         stats = dict(zip((d[0] for d in cur.description), cur.fetchone()))
         decisions = decide(df, stats, ignored_suffixes)
     return decisions, apply_decisions(df, decisions)
-
-
-def _duckdb_read_csv(staged: DataFrame, files: list[str], read_type=lambda t: _ddl_type(t, "duckdb")) -> str:
-    """``read_csv`` over every partition file with ``read_type`` of each
-    staged column (by default the stage's own source types) and the
-    ``COPY`` CSV options of ``bulk_load_statements``, so NULL, '' and
-    quotes stay lossless."""
-    columns = ", ".join(f"'{_sql_str(f.name)}': '{read_type(f.dataType)}'" for f in staged.schema.fields)
-    opts = CSV_DIALECT_OPTIONS["duckdb"]
-    paths = ", ".join(f"'{_sql_str(p)}'" for p in files)
-    return (
-        f"read_csv([{paths}], columns={{{columns}}}, "
-        f"header=false, delim='{opts['delimiter']}', quote='\"', escape='\"', "
-        f"nullstr='{opts['nullValue']}', allow_quoted_nulls=false, auto_detect=false)"
-    )
 
 
 def _insert(table: str, tmp: str, staged: DataFrame, loaded: DataFrame, dialect: str) -> str:
@@ -488,44 +473,46 @@ def _duckdb_columns(con, table: str) -> list[str] | None:
 
 
 def _load(
-    con, dialect: str, df: DataFrame, table: str, csv_dir: str, mode: str, standardize_types: bool,
+    con, dialect: str, df: DataFrame, table: str, mode: str, standardize_types: bool,
     ignored_suffixes: list[str] | None, report: LoadReport | None, *, columns, fill, rows_of,
     writer=contextlib.nullcontext(),
 ) -> int:
     """The load both engines share: pre-flight, stage, then one
-    transaction that fills a temporary table from the staged files,
-    decides, runs the exact pre-flight, drops or creates the table and
-    copies the kept columns in; returns the table's row count.
+    transaction that exposes the staged Arrow table as a temporary
+    table, decides, runs the exact pre-flight, drops or creates the
+    table and copies the kept columns in; returns the table's row count.
 
     Engine-specific: ``columns(con, table)`` reads the table's columns,
-    ``fill(tmp, staged, files)`` creates and fills the temporary table,
-    ``rows_of(cursor)`` is the INSERT's own row count, and ``writer`` is
-    held for the pre-flight read and for the transaction plus the
-    count, never for the stage write."""
+    ``fill(tmp, staged, data)`` is a context manager that makes the
+    Arrow table ``data`` readable as the temporary table named ``tmp``
+    and removes it on exit, ``rows_of(cursor)`` is the INSERT's own row
+    count, and ``writer`` is held for the pre-flight read and for the
+    transaction plus the count, never for the stage collect."""
     with writer:
         have = columns(con, table)
     _preflight(table, mode, have, df.columns, exact=not standardize_types)
-    staged, files = _stage(df, csv_dir, dialect, standardize_types, ignored_suffixes)
+    staged, data = _stage(df, standardize_types, ignored_suffixes)
     q = _quote_ident(table, dialect)
-    tmp = _quote_ident(f"__stage_{table}", dialect)
+    tmp = f"__stage_{table}"
     rows = 0
     with writer:
         con.execute("BEGIN")
         try:
-            if files:  # a 0-row stage leaves no non-empty file
-                fill(tmp, staged, files)
-            decisions, loaded = _decide(
-                con, tmp, df, staged, dialect, standardize_types and bool(files), ignored_suffixes
-            )
-            _preflight(table, mode, have, loaded.columns)
-            if mode == "overwrite":
-                con.execute(f"DROP TABLE IF EXISTS {q}")
-                have = None
-            if have is None:
-                con.execute(schema_ddl(loaded, table, dialect))
-            if files:
-                rows = rows_of(con.execute(_insert(table, tmp, staged, loaded, dialect)))
-                con.execute(f"DROP TABLE {tmp}")
+            # a 0-row table fills nothing
+            with fill(tmp, staged, data) if data.num_rows else contextlib.nullcontext():
+                decisions, loaded = _decide(
+                    con, _quote_ident(tmp, dialect), df, staged, dialect,
+                    standardize_types and data.num_rows > 0, ignored_suffixes,
+                )
+                _preflight(table, mode, have, loaded.columns)
+                if mode == "overwrite":
+                    con.execute(f"DROP TABLE IF EXISTS {q}")
+                    have = None
+                if have is None:
+                    con.execute(schema_ddl(loaded, table, dialect))
+                if data.num_rows:
+                    ins = _insert(table, _quote_ident(tmp, dialect), staged, loaded, dialect)
+                    rows = rows_of(con.execute(ins))
             con.execute("COMMIT")
         except BaseException:
             con.execute("ROLLBACK")
@@ -540,23 +527,22 @@ def bulk_load_duckdb(
     df: DataFrame,
     db_path: str,
     table: str,
-    csv_dir: str,
     mode: str = "overwrite",
     standardize_types: bool = False,
     ignored_suffixes: list[str] | None = None,
     report: LoadReport | None = None,
 ) -> int:
     """Execute the W3 path end-to-end into an embedded DuckDB database:
-    dialect CSV per partition → one ``read_csv`` over every file into a
-    temporary table → ``CREATE TABLE`` → one ``INSERT … SELECT`` → the
-    table's row count.
+    the staged columns as one Arrow table → registered under a temporary
+    name and read in place (no copy, no files) → ``CREATE TABLE`` → one
+    ``INSERT … SELECT`` → the table's row count.
     ``mode``: overwrite (drop+create), append (create if absent;
     existing column names must match the loaded columns), error (fail
     if table exists); any other mode is refused. Mode/existence checks
-    run before the CSV stage is written so a doomed load fails before
-    the expensive work (only the exact append column match waits for
-    the standardizer's drops, and still runs before the destination is
-    touched); the temporary table, DROP, CREATE and INSERT run in one
+    run before the stage collect so a doomed load fails before the
+    expensive work (only the exact append column match waits for the
+    standardizer's drops, and still runs before the destination is
+    touched); the stats, DROP, CREATE and INSERT run in one
     transaction, so a failed load leaves the old table and its rows in
     place.
 
@@ -567,13 +553,20 @@ def bulk_load_duckdb(
     import duckdb
 
     con = duckdb.connect(db_path)
+
+    @contextlib.contextmanager
+    def fill(tmp, staged, data):
+        con.register(tmp, data)
+        try:
+            yield
+        finally:
+            con.unregister(tmp)
+
     try:
         return _load(
-            con, "duckdb", df, table, csv_dir, mode, standardize_types, ignored_suffixes, report,
+            con, "duckdb", df, table, mode, standardize_types, ignored_suffixes, report,
             columns=_duckdb_columns,
-            fill=lambda tmp, staged, files: con.execute(
-                f"CREATE TEMP TABLE {tmp} AS SELECT * FROM {_duckdb_read_csv(staged, files)}"
-            ),
+            fill=fill,
             rows_of=lambda cur: cur.fetchone()[0],
         )
     finally:
@@ -600,48 +593,42 @@ def export_duckdb_table(db_path: str, table: str, parquet_path: str) -> None:
 #
 # The stdlib sqlite3 driver gives W3 a second EXECUTED leg: the
 # .import-equivalent (CREATE TABLE + batched INSERTs) driven through the
-# DBAPI connection. Its stage uses the duckdb CSV conventions, so the
-# DuckDB leg's reader (``_duckdb_read_csv``) parses it: NULL (unquoted
-# empty field) and '' (quoted '""') stay distinct, and neither leg
-# parses CSV in Python.
+# DBAPI connection. A throwaway DuckDB connection reads the staged Arrow
+# table, so NULL and '' stay distinct and nothing is parsed in Python.
 
 _SQLITE_BATCH_ROWS = 10_000
 
 
-def _sqlite_read_type(dtype) -> str:
-    """The DuckDB type a staged column is read as for SQLite: integers
-    as BIGINT, float and double as DOUBLE (REAL is float32 in DuckDB),
-    booleans as BOOLEAN (stored 1/0); timestamps, dates, decimals and
-    strings keep their staged text for SQLite's TEXT columns."""
-    s = dtype.simpleString()
-    if s in ("tinyint", "smallint", "int", "bigint"):
-        return "BIGINT"
+def _sqlite_read(f) -> str:
+    """The DuckDB expression a staged column is read with for SQLite:
+    float and double as DOUBLE with NaN refused (SQLite would store
+    NULL), timestamps as the µs text the dialect CSV writer renders,
+    dates and decimals as text for SQLite's TEXT columns, and integers,
+    booleans (stored 1/0) and strings as they are."""
+    c = _quote_ident(f.name, "duckdb")
+    s = f.dataType.simpleString()
     if s in ("float", "double"):
-        return "DOUBLE"
-    return "BOOLEAN" if s == "boolean" else "VARCHAR"
+        msg = _sql_str(f"column {f.name!r} holds NaN, which SQLite cannot store")
+        return f"CASE WHEN isnan({c}) THEN error('{msg}') ELSE CAST({c} AS DOUBLE) END"
+    if s in ("timestamp", "timestamp_ntz"):
+        return f"strftime({c}, '%Y-%m-%d %H:%M:%S.%f')"
+    return f"CAST({c} AS VARCHAR)" if s == "date" or s.startswith("decimal") else c
 
 
-def _sqlite_insert(con, q: str, staged: DataFrame, files: list[str]) -> None:
+def _sqlite_insert(con, q: str, staged: DataFrame, data) -> None:
     """Fill the table ``q`` (``staged``'s columns, in order) from the
-    staged files: a throwaway DuckDB connection reads them and its rows
-    move into SQLite in ``executemany`` batches. SQLite stores no NaN
-    (it would store NULL), so a NaN in a float or double column raises
-    a ValueError naming the column."""
+    Arrow table ``data``: a throwaway DuckDB connection reads it with
+    ``_sqlite_read`` and its rows move into SQLite in ``executemany``
+    batches. A NaN in a float or double column raises a ValueError
+    naming the column."""
     import duckdb
 
-    exprs = []
-    for f in staged.schema.fields:
-        c = _quote_ident(f.name, "duckdb")
-        if _sqlite_read_type(f.dataType) == "DOUBLE":
-            msg = _sql_str(f"column {f.name!r} holds NaN, which SQLite cannot store")
-            c = f"CASE WHEN isnan({c}) THEN error('{msg}') ELSE {c} END"
-        exprs.append(c)
+    exprs = [_sqlite_read(f) for f in staged.schema.fields]
     ins = f"INSERT INTO {q} VALUES ({', '.join('?' for _ in exprs)})"
     reader = duckdb.connect()
     try:
-        cur = reader.execute(
-            f"SELECT {', '.join(exprs)} FROM {_duckdb_read_csv(staged, files, _sqlite_read_type)}"
-        )
+        reader.register("stage", data)
+        cur = reader.execute(f"SELECT {', '.join(exprs)} FROM stage")
         while batch := cur.fetchmany(_SQLITE_BATCH_ROWS):
             con.executemany(ins, batch)
     except duckdb.InvalidInputException as e:
@@ -673,7 +660,6 @@ def bulk_load_sqlite(
     df: DataFrame,
     db_path: str,
     table: str,
-    csv_dir: str,
     mode: str = "overwrite",
     standardize_types: bool = False,
     ignored_suffixes: list[str] | None = None,
@@ -681,26 +667,31 @@ def bulk_load_sqlite(
 ) -> int:
     """Execute the sqlite leg of W3 end-to-end with the mode
     semantics, pre-flight ordering, transaction and standardization of
-    ``bulk_load_duckdb`` (one shared body): the DuckDB leg's
-    ``read_csv`` reads the staged files, ``executemany`` batches fill a
-    temporary table (the driver-level equivalent of the CLI ``.import``
-    the statement generator emits), the stats run there, and one
-    ``INSERT … SELECT`` copies the kept columns. NULL and '' stay
-    distinct. A NaN in a float or double column is refused inside the
-    transaction (SQLite would store NULL), so an existing table keeps
-    its rows. Loads into one database file take turns on its single
-    writer for their reads and transaction, not for the stage write."""
+    ``bulk_load_duckdb`` (one shared body): a throwaway DuckDB
+    connection reads the staged Arrow table, ``executemany`` batches
+    fill a temporary table (the driver-level equivalent of the CLI
+    ``.import`` the statement generator emits), the stats run there,
+    and one ``INSERT … SELECT`` copies the kept columns. NULL and ''
+    stay distinct. A NaN in a float or double column is refused inside
+    the transaction (SQLite would store NULL), so an existing table
+    keeps its rows. Loads into one database file take turns on its
+    single writer for their reads and transaction, not for the stage
+    collect."""
     import sqlite3
 
     con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN in _load
 
-    def fill(tmp, staged, files):
-        con.execute(f"CREATE TEMP TABLE {tmp} ({_column_defs(staged, 'sqlite')})")
-        _sqlite_insert(con, tmp, staged, files)
+    @contextlib.contextmanager
+    def fill(tmp, staged, data):
+        t = _quote_ident(tmp, "sqlite")
+        con.execute(f"CREATE TEMP TABLE {t} ({_column_defs(staged, 'sqlite')})")
+        _sqlite_insert(con, t, staged, data)
+        yield
+        con.execute(f"DROP TABLE {t}")  # on failure the ROLLBACK removes it
 
     try:
         return _load(
-            con, "sqlite", df, table, csv_dir, mode, standardize_types, ignored_suffixes, report,
+            con, "sqlite", df, table, mode, standardize_types, ignored_suffixes, report,
             columns=_sqlite_columns,
             fill=fill,
             rows_of=lambda cur: cur.rowcount,
@@ -733,7 +724,9 @@ def export_sqlite_table(
         "float": pa.float32(),
         "double": pa.float64(),
         "string": pa.string(),
-        "timestamp": pa.timestamp("us"),
+        # the stored text is the load session's wall clock; the engine
+        # pins the session zone to UTC
+        "timestamp": pa.timestamp("us", tz="UTC"),
         "timestamp_ntz": pa.timestamp("us"),
         "date": pa.date32(),
     }

@@ -73,8 +73,7 @@ CSV_DIALECT_OPTIONS: dict[str, dict[str, str]] = {
         **_TS_US,
     },
 }
-# SQLite .import --csv expects the same RFC-4180 quote doubling, and the
-# executed sqlite leg reads its stage with the DuckDB leg's read_csv: one
+# SQLite .import --csv expects the same RFC-4180 quote doubling: one
 # bundle, so the two can never drift apart.
 CSV_DIALECT_OPTIONS["sqlite"] = CSV_DIALECT_OPTIONS["duckdb"]
 

@@ -1,5 +1,7 @@
-"""W3 native bulk-load path: dialect CSV → CREATE TABLE → COPY per
-partition file → lossless round-trip (upstream send_data ≈L750–850)."""
+"""W3 native bulk-load path (upstream send_data ≈L750–850): dialect
+CSV → the native statement per partition file for the server dialects,
+and the executed DuckDB and SQLite legs (Arrow handoff → CREATE TABLE →
+INSERT … SELECT) → lossless round-trip."""
 
 import os
 
@@ -60,7 +62,7 @@ def test_statements_per_partition_file(spark, tmp_path):
 
 def test_duckdb_roundtrip_lossless(spark, tricky, tmp_path):
     db = str(tmp_path / "dest.duckdb")
-    n = bulk_load_duckdb(tricky, db, "tricky", str(tmp_path / "csv"))
+    n = bulk_load_duckdb(tricky, db, "tricky")
     assert n == 7
     con = duckdb.connect(db)
     got = {
@@ -83,7 +85,7 @@ def test_duckdb_roundtrip_doubles_bit_exact(spark, tmp_path):
         (F.col("id") / 7.0 * 1.000000001).alias("v"),
     )
     db = str(tmp_path / "d2.duckdb")
-    bulk_load_duckdb(df, db, "doubles", str(tmp_path / "csv2"))
+    bulk_load_duckdb(df, db, "doubles")
     out = str(tmp_path / "back.parquet")
     export_duckdb_table(db, "doubles", out)
     back = spark.read.parquet(out)
@@ -95,12 +97,11 @@ def test_duckdb_roundtrip_doubles_bit_exact(spark, tmp_path):
 def test_mode_semantics(spark, tmp_path):
     df = spark.createDataFrame([(1,)], "id int")
     db = str(tmp_path / "m.duckdb")
-    d = str(tmp_path / "csvm")
-    assert bulk_load_duckdb(df, db, "t", d, mode="overwrite") == 1
-    assert bulk_load_duckdb(df, db, "t", d, mode="append") == 2
-    assert bulk_load_duckdb(df, db, "t", d, mode="overwrite") == 1
+    assert bulk_load_duckdb(df, db, "t", mode="overwrite") == 1
+    assert bulk_load_duckdb(df, db, "t", mode="append") == 2
+    assert bulk_load_duckdb(df, db, "t", mode="overwrite") == 1
     with pytest.raises(ValueError, match="mode=error"):
-        bulk_load_duckdb(df, db, "t", d, mode="error")
+        bulk_load_duckdb(df, db, "t", mode="error")
 
 
 # --- mssql bcp / oracle sqlldr artifact generation --------------------------
@@ -185,7 +186,7 @@ def test_duckdb_roundtrip_microsecond_timestamps(spark, tmp_path):
         "id int, ts_s string",
     ).select("id", F.col("ts_s").cast("timestamp").alias("ts"))
     db = str(tmp_path / "us.duckdb")
-    bulk_load_duckdb(df, db, "tsus", str(tmp_path / "csvus"))
+    bulk_load_duckdb(df, db, "tsus")
     con = duckdb.connect(db)
     got = {r[0]: str(r[1]) for r in con.execute("SELECT id, ts FROM tsus").fetchall()}
     con.close()
@@ -193,16 +194,59 @@ def test_duckdb_roundtrip_microsecond_timestamps(spark, tmp_path):
     assert got[2] == "2024-03-01 03:04:05.000001"
 
 
+def test_timestamps_store_the_csv_stage_wall_clock(spark, tmp_path):
+    """The Arrow handoff's one added conversion: ``timestamp`` columns
+    cross as the session-local wall clock. Under a non-UTC session zone
+    both legs must store what the dialect CSV stage plus its ``COPY``
+    stored: the same values in DuckDB, the same text in SQLite."""
+    import csv
+    import sqlite3
+
+    conf = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        df = spark.createDataFrame(
+            [(1, "2024-03-10 01:59:59.999999"), (2, "2024-11-03 01:30:00.000001"),
+             (3, "1850-06-01 12:00:00.123456"), (4, "0800-02-29 23:59:59.000001"), (5, None)],
+            "id int, ts_s string",
+        ).select("id", F.col("ts_s").cast("timestamp").alias("ts")).coalesce(1)
+        d = str(tmp_path / "csv")
+        write_csv_for_bulk_load(df, d, dialect="duckdb")
+        ref = duckdb.connect(str(tmp_path / "ref.duckdb"))
+        ref.execute(schema_ddl(df, "t", "duckdb"))
+        for stmt in bulk_load_statements("t", d, "duckdb"):
+            ref.execute(stmt)
+        want = sorted(ref.execute("SELECT id, ts FROM t").fetchall())
+        ref.close()
+        with open(partition_files(d)[0], newline="") as fh:
+            want_text = sorted((int(i), ts or None) for i, ts in csv.reader(fh))
+
+        assert bulk_load_duckdb(df, str(tmp_path / "dest.duckdb"), "t") == 5
+        assert bulk_load_sqlite(df, str(tmp_path / "dest.sqlite"), "t") == 5
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", conf)
+    con = duckdb.connect(str(tmp_path / "dest.duckdb"), read_only=True)
+    try:
+        assert sorted(con.execute("SELECT id, ts FROM t").fetchall()) == want
+    finally:
+        con.close()
+    con = sqlite3.connect(str(tmp_path / "dest.sqlite"))
+    try:
+        assert sorted(con.execute("SELECT id, ts FROM t").fetchall()) == want_text
+    finally:
+        con.close()
+    assert want[0][1].microsecond == 999999 and want_text[0][1] == "2024-03-10 01:59:59.999999"
+
+
 def test_duckdb_append_rejects_schema_drift(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "id int, s string")
     db = str(tmp_path / "drift.duckdb")
-    d = str(tmp_path / "csvd")
-    bulk_load_duckdb(df, db, "t", d, mode="overwrite")
+    bulk_load_duckdb(df, db, "t", mode="overwrite")
     drifted = spark.createDataFrame([(1, "a")], "id int, renamed string")
     with pytest.raises(ValueError, match="names must match as a set"):
-        bulk_load_duckdb(drifted, db, "t", d, mode="append")
-    # and the pre-flight ran BEFORE any CSV landed for the drifted frame
-    assert bulk_load_duckdb(df, db, "t", d, mode="append") == 2
+        bulk_load_duckdb(drifted, db, "t", mode="append")
+    # and the pre-flight ran BEFORE anything was staged for the drifted frame
+    assert bulk_load_duckdb(df, db, "t", mode="append") == 2
 
 
 # --- executed sqlite leg ----------------------------------------------------
@@ -238,12 +282,12 @@ def test_sqlite_roundtrip_lossless(spark, tmp_path):
         "f float, d double, b boolean, dt date, dec decimal(12,2)",
     ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
     db = str(tmp_path / "dest.sqlite")
-    n = bulk_load_sqlite(df, db, "tricky", str(tmp_path / "csv"))
+    n = bulk_load_sqlite(df, db, "tricky")
     assert n == 7
     out = str(tmp_path / "back.parquet")
     export_sqlite_table(db, "tricky", out, df.schema)
     back = spark.read.parquet(out)
-    assert back.columns == df.columns
+    assert back.schema == df.schema
     src = {tuple(r) for r in df.collect()}
     got = {tuple(r) for r in back.collect()}
     assert got == src
@@ -257,10 +301,10 @@ def test_sqlite_refuses_nan_and_keeps_the_old_table(spark, tmp_path):
 
     db = str(tmp_path / "nan.sqlite")
     old = spark.createDataFrame([(1, 1.5), (2, None)], "id int, v double")
-    assert bulk_load_sqlite(old, db, "t", str(tmp_path / "csv1")) == 2
+    assert bulk_load_sqlite(old, db, "t") == 2
     new = spark.createDataFrame([(3, 2.5), (4, float("nan"))], "id int, v double")
     with pytest.raises(ValueError, match="column 'v' holds NaN"):
-        bulk_load_sqlite(new, db, "t", str(tmp_path / "csv2"), mode="overwrite")
+        bulk_load_sqlite(new, db, "t", mode="overwrite")
     con = sqlite3.connect(db)
     try:
         assert sorted(con.execute("SELECT id, v FROM t").fetchall()) == [(1, 1.5), (2, None)]
@@ -268,40 +312,17 @@ def test_sqlite_refuses_nan_and_keeps_the_old_table(spark, tmp_path):
         con.close()
 
 
-def test_duckdb_read_csv_text_unchanged(spark):
-    """The DuckDB leg's read_csv text, pinned for a frame covering
-    every staged type: giving the reader a read-type function for the
-    sqlite leg left the DuckDB leg's SQL byte-identical."""
-    from etlalchemy_spark.sources.bulkload import _duckdb_read_csv
-
-    staged = spark.createDataFrame(
-        [],
-        "ti tinyint, si smallint, i int, bi bigint, b boolean, f float, d double, s string, "
-        "ts timestamp, tn timestamp_ntz, dt date, dec decimal(12,2), `we'ird` string",
-    )
-    files = ["/stage/part-00000.csv", "/stage/it's/part-00001.csv"]
-    assert _duckdb_read_csv(staged, files) == (
-        "read_csv(['/stage/part-00000.csv', '/stage/it''s/part-00001.csv'], columns={"
-        "'ti': 'TINYINT', 'si': 'SMALLINT', 'i': 'INTEGER', 'bi': 'BIGINT', 'b': 'BOOLEAN', "
-        "'f': 'REAL', 'd': 'DOUBLE', 's': 'VARCHAR', 'ts': 'TIMESTAMP', 'tn': 'TIMESTAMP', "
-        "'dt': 'DATE', 'dec': 'DECIMAL(12,2)', 'we''ird': 'VARCHAR'}, header=false, "
-        "delim=',', quote='\"', escape='\"', nullstr='', allow_quoted_nulls=false, "
-        "auto_detect=false)"
-    )
-
-
 def test_sqlite_mode_semantics(spark, tmp_path):
     df = spark.createDataFrame([(1,)], "id int")
     db = str(tmp_path / "m.sqlite")
-    d = str(tmp_path / "csvm")
-    assert bulk_load_sqlite(df, db, "t", d, mode="overwrite") == 1
-    assert bulk_load_sqlite(df, db, "t", d, mode="append") == 2
-    assert bulk_load_sqlite(df, db, "t", d, mode="overwrite") == 1
+    assert bulk_load_sqlite(df, db, "t", mode="overwrite") == 1
+    assert bulk_load_sqlite(df, db, "t", mode="append") == 2
+    assert bulk_load_sqlite(df, db, "t", mode="overwrite") == 1
     with pytest.raises(ValueError, match="mode=error"):
-        bulk_load_sqlite(df, db, "t", d, mode="error")
+        bulk_load_sqlite(df, db, "t", mode="error")
     drifted = spark.createDataFrame([(1,)], "other int")
     with pytest.raises(ValueError, match="names must match as a set"):
-        bulk_load_sqlite(drifted, db, "t", d, mode="append")
+        bulk_load_sqlite(drifted, db, "t", mode="append")
 
 
 # --- loader-side content parity for the mssql/oracle artifacts (ADVICE r4) ---
@@ -411,21 +432,25 @@ def test_statement_columns_rejected_where_not_expressible():
 
 def test_single_column_nulls_refused_not_lost(spark, tmp_path):
     """Spark's CSV writer silently drops a row that renders as a fully
-    empty line — a single-column NULL row under the empty NULL marker.
-    The stage must refuse rather than lose rows silently; single-column
-    tables WITHOUT nulls and multi-column all-NULL rows are fine."""
-    df = spark.createDataFrame([("x",), (None,), ("",), (None,)], "v string").coalesce(1)
-    db = str(tmp_path / "one.sqlite")
-    with pytest.raises(ValueError, match="single-column"):
-        bulk_load_sqlite(df, db, "t", str(tmp_path / "csv1"))
-
-    clean = spark.createDataFrame([("x",), ("",)], "v string").coalesce(1)
-    assert bulk_load_sqlite(clean, db, "t", str(tmp_path / "csv2")) == 2
+    empty line — a single-column NULL row under the empty NULL marker —
+    so the CSV stage refuses rather than lose rows silently. The
+    executed legs hand the rows over as Arrow, which keeps NULL and ''
+    apart: both load every row."""
     import sqlite3
 
-    con = sqlite3.connect(db)
-    assert sorted(r[0] for r in con.execute("SELECT v FROM t")) == ["", "x"]
-    con.close()
+    df = spark.createDataFrame([("x",), (None,), ("",), (None,)], "v string").coalesce(1)
+    with pytest.raises(ValueError, match="single-column"):
+        write_csv_for_bulk_load(df, str(tmp_path / "csv"), dialect="duckdb")
+
+    want = sorted([("x",), (None,), ("",), (None,)], key=repr)
+    for load, connect in ((bulk_load_duckdb, duckdb.connect), (bulk_load_sqlite, sqlite3.connect)):
+        db = str(tmp_path / f"one.{load.__name__}")
+        assert load(df, db, "t") == 4
+        con = connect(db)
+        try:
+            assert sorted(con.execute("SELECT v FROM t").fetchall(), key=repr) == want
+        finally:
+            con.close()
 
 
 def test_sqlite_multi_column_all_null_rows_survive(spark, tmp_path):
@@ -435,7 +460,7 @@ def test_sqlite_multi_column_all_null_rows_survive(spark, tmp_path):
         [("a", "b"), (None, None), (None, "c")], "x string, y string"
     ).coalesce(1)
     db = str(tmp_path / "two.sqlite")
-    assert bulk_load_sqlite(df, db, "t2", str(tmp_path / "csv3")) == 3
+    assert bulk_load_sqlite(df, db, "t2") == 3
     import sqlite3
 
     con = sqlite3.connect(db)

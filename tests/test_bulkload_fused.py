@@ -1,6 +1,7 @@
 """The fused bulk-load path: on DuckDB and SQLite targets the
-standardizer's stats ride the CSV stage write (one Spark pass per
-table) and the loader applies the decisions on the destination side.
+standardizer's stats run in the destination over the staged rows (one
+Spark pass per table, the Arrow handoff) and the loader applies the
+decisions there.
 
 The property checks it against the two-pass path it replaces —
 ``standardize()`` followed by the per-file ``COPY`` statements (DuckDB)
@@ -8,7 +9,6 @@ or a plain load of the standardized frame (SQLite) — on decisions,
 destination columns and types, and content. The example tests pin the
 single source read, rows-loaded accounting and atomic overwrite."""
 
-import os
 import sqlite3
 
 import duckdb
@@ -86,7 +86,7 @@ def test_fused_load_matches_standardize_then_load(spark, tmp_path_factory, rows)
     for stmt in bulk_load_statements("t", str(tmp / "ref_csv"), "duckdb"):
         con.execute(stmt)
     con.close()
-    bulk_load_sqlite(std_df, str(tmp / "ref.sqlite"), "t", str(tmp / "ref_csv_sqlite"))
+    bulk_load_sqlite(std_df, str(tmp / "ref.sqlite"), "t")
 
     for fmt, read_back in (("duckdb", _duck_table), ("sqlite", _sqlite_table)):
         db = str(tmp / f"dest.{fmt}")
@@ -100,7 +100,7 @@ def test_fused_load_matches_standardize_then_load(spark, tmp_path_factory, rows)
 
 def test_duckdb_migration_reads_the_source_once(spark, tmp_path, monkeypatch):
     """No separate stats pass: once the source table is open, the only
-    Spark job is the stage write that carries the stats."""
+    Spark job is the stage collect."""
     import etlalchemy_spark.migrate as migmod
 
     def no_stats_pass(df):
@@ -155,35 +155,53 @@ def test_append_reports_rows_loaded_by_this_run(spark, tmp_path, fmt):
     con.close()
 
 
+def _rows_of_t(load, db):
+    con = duckdb.connect(db, read_only=True) if load is bulk_load_duckdb else sqlite3.connect(db)
+    try:
+        return sorted(con.execute("SELECT id, s FROM t").fetchall())
+    finally:
+        con.close()
+
+
 @pytest.mark.parametrize("load", [bulk_load_duckdb, bulk_load_sqlite], ids=["duckdb", "sqlite"])
 def test_failed_overwrite_keeps_the_old_table(spark, tmp_path, monkeypatch, load):
-    """DROP, CREATE and INSERT are one transaction: a load that fails
+    """DROP, CREATE and INSERT are one transaction: an INSERT that fails
     after the DROP leaves the old table and its rows in place."""
     db = str(tmp_path / "atomic.db")
     old = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    assert load(old, db, "t", str(tmp_path / "csv1")) == 2
+    assert load(old, db, "t") == 2
 
-    real_files = bulkload.partition_files
+    built = []
+    real_insert = bulkload._insert
 
-    def with_broken_file(csv_dir):
-        bad = os.path.join(csv_dir, "part-99999-broken.csv")
-        with open(bad, "w") as fh:
-            fh.write("not-a-number,x\n")
-        return real_files(csv_dir) + [bad]
+    def failing_insert(table, *a):
+        built.append(real_insert(table, *a))  # called after the DROP and CREATE ran
+        return f'INSERT INTO "{table}" ("id") SELECT no_such_column'
 
-    monkeypatch.setattr(bulkload, "partition_files", with_broken_file)
+    monkeypatch.setattr(bulkload, "_insert", failing_insert)
     new = spark.createDataFrame([(3, "c"), (4, "d")], "id long, s string")
-    with pytest.raises(Exception, match="not-a-number|Could not convert|invalid literal"):
-        load(new, db, "t", str(tmp_path / "csv2"), mode="overwrite")
+    with pytest.raises(Exception, match="no_such_column"):
+        load(new, db, "t", mode="overwrite")
+    assert len(built) == 1
+    assert _rows_of_t(load, db) == [(1, "a"), (2, "b")]
 
-    if load is bulk_load_duckdb:
-        con = duckdb.connect(db, read_only=True)
-    else:
-        con = sqlite3.connect(db)
-    try:
-        assert sorted(con.execute("SELECT id, s FROM t").fetchall()) == [(1, "a"), (2, "b")]
-    finally:
-        con.close()
+
+@pytest.mark.parametrize("load", [bulk_load_duckdb, bulk_load_sqlite], ids=["duckdb", "sqlite"])
+def test_failed_handoff_keeps_the_old_table(spark, tmp_path, monkeypatch, load):
+    """A stage collect that raises fails the overwrite before the
+    destination is touched: the old table and its rows stay."""
+    db = str(tmp_path / "handoff.db")
+    old = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+    assert load(old, db, "t") == 2
+
+    def broken_handoff(self):
+        raise RuntimeError("injected handoff failure")
+
+    monkeypatch.setattr(type(old), "toArrow", broken_handoff)
+    new = spark.createDataFrame([(3, "c"), (4, "d")], "id long, s string")
+    with pytest.raises(RuntimeError, match="injected handoff failure"):
+        load(new, db, "t", mode="overwrite")
+    assert _rows_of_t(load, db) == [(1, "a"), (2, "b")]
 
 
 @pytest.mark.parametrize("fmt", ["duckdb", "sqlite"])
@@ -216,7 +234,7 @@ def test_destination_stats_decide_like_standardize(spark, tmp_path, load):
         "id long, s1 string, s2 string, empty long, empty_s string, flag long",
     )
     report = bulkload.LoadReport()
-    load(df, str(tmp_path / "dest.db"), "t", str(tmp_path / "csv"), standardize_types=True, report=report)
+    load(df, str(tmp_path / "dest.db"), "t", standardize_types=True, report=report)
     _, want = std.standardize(df)
     assert report.decisions == want
     by_name = {d.name: d for d in report.decisions}

@@ -55,7 +55,7 @@ def test_duckdb_roundtrip_arbitrary_rows(spark, tmp_path_factory, rows):
     data = [(i, k, s, v) for i, (k, s, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "id int, k string, s string, v double")
     db = str(tmp / "p.duckdb")
-    assert bulk_load_duckdb(df, db, "t", str(tmp / "csv")) == len(rows)
+    assert bulk_load_duckdb(df, db, "t") == len(rows)
     out = str(tmp / "back.parquet")
     export_duckdb_table(db, "t", out)
     back = {r["id"]: (r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()}
@@ -74,7 +74,7 @@ def test_sqlite_roundtrip_arbitrary_rows(spark, tmp_path_factory, rows):
     data = [(i, k, s, v) for i, (k, s, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "id int, k string, s string, v double")
     db = str(tmp / "p.sqlite")
-    assert bulk_load_sqlite(df, db, "t", str(tmp / "csv")) == len(rows)
+    assert bulk_load_sqlite(df, db, "t") == len(rows)
     out = str(tmp / "back.parquet")
     export_sqlite_table(db, "t", out, df.schema)
     back = {r["id"]: (r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()}
@@ -106,8 +106,8 @@ def test_append_maps_columns_by_name(spark, tmp_path_factory, rows, perm_seed):
         ("sqlite", bulk_load_sqlite, export_sqlite_table, "sqlite"),
     ):
         db = str(tmp / f"p.{ext}")
-        assert load(df, db, "t", str(tmp / f"csv_{leg}_1")) == len(rows)
-        n = load(permuted, db, "t", str(tmp / f"csv_{leg}_2"), mode="append")
+        assert load(df, db, "t") == len(rows)
+        n = load(permuted, db, "t", mode="append")
         assert n == 2 * len(rows)
         out = str(tmp / f"back_{leg}.parquet")
         if leg == "sqlite":

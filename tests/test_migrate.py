@@ -365,9 +365,9 @@ def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path, fmt):
     assert calls == ["nation"]  # ...but the FK check still ran
 
 
-def test_drop_destination_removes_sqlite_file_sidecars_and_stage(spark, tmp_path):
-    """drop_database parity on a SQLite target: the database file, its
-    -journal/-wal/-shm sidecars and the CSV stage directory all go."""
+def test_drop_destination_removes_sqlite_file_and_sidecars(spark, tmp_path):
+    """drop_database parity on a SQLite target: the database file and
+    its -journal/-wal/-shm sidecars all go."""
     import sqlite3
 
     db = str(tmp_path / "dest.sqlite")
@@ -378,20 +378,32 @@ def test_drop_destination_removes_sqlite_file_sidecars_and_stage(spark, tmp_path
     sidecars = [db + s for s in ("-journal", "-wal", "-shm")]
     for p in sidecars:
         open(p, "w").close()
-    os.makedirs(db + ".csv_stage")
-    open(db + ".csv_stage/stale.csv", "w").close()
     reports, _ = Migration(
         source=FileSource(SF_DIR, included_tables=["region"]),
         target=Target(db, fmt="sqlite", mode="error", drop_destination=True),
     ).run(spark)
     assert [r.n_rows for r in reports] == [5]
     assert not any(os.path.exists(p) for p in sidecars)
-    assert not os.path.exists(db + ".csv_stage/stale.csv")
     con = sqlite3.connect(db)
     try:
         assert [r[0] for r in con.execute("SELECT name FROM sqlite_master WHERE type = 'table'")] == ["region"]
     finally:
         con.close()
+
+
+@pytest.mark.parametrize("fmt", ["duckdb", "sqlite"])
+def test_bulk_migration_writes_no_stage_files(spark, tmp_path, fmt):
+    """DuckDB and SQLite targets take each table as Arrow: a migration
+    leaves the database file and its manifest, and no CSV stage."""
+    db = str(tmp_path / f"dest.{fmt}")
+    reports, _ = Migration(
+        source=FileSource(SF_DIR, included_tables=["region", "nation"]),
+        target=Target(db, fmt=fmt),
+    ).run(spark)
+    assert {r.table: r.n_rows for r in reports} == {"nation": 25, "region": 5}
+    assert not os.path.exists(db + ".csv_stage")
+    left = [f for _, ds, fs in os.walk(tmp_path) for f in ds + fs]
+    assert not [f for f in left if "stage" in f or f.startswith("part-")], left
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "duckdb", "sqlite", "jdbc"])
@@ -423,10 +435,10 @@ def test_bulk_loaders_refuse_an_unknown_mode(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "id long, s string")
     for load in (bulk_load_duckdb, bulk_load_sqlite):
         db = str(tmp_path / f"{load.__name__}.db")
-        assert load(df, db, "t", str(tmp_path / "csv0")) == 1
+        assert load(df, db, "t") == 1
         with pytest.raises(ValueError, match="unknown mode"):
-            load(df, db, "t", str(tmp_path / "csv1"), mode="ovewrite")
-        assert load(df, db, "t", str(tmp_path / "csv2"), mode="overwrite") == 1
+            load(df, db, "t", mode="ovewrite")
+        assert load(df, db, "t", mode="overwrite") == 1
 
 
 def test_jdbc_manifest_keyed_on_source_and_destination():
