@@ -772,7 +772,7 @@ def etl_bulk_load_roundtrip(spark, sf_dir):
     out = os.path.join(tmp, "customer_back.parquet")
     df = t(spark, sf_dir, "customer")
     bulk_load_duckdb(df, db, "customer_bulk")
-    export_duckdb_table(db, "customer_bulk", out)
+    export_duckdb_table(db, "customer_bulk", out, df.schema)
     return spark.read.parquet(out).select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
@@ -986,7 +986,7 @@ def etl_bulk_load_events_roundtrip(spark, sf_dir):
         "event_id", "ts", "user_id", "event_type", "value"
     )
     bulk_load_duckdb(df, db, "events_bulk")
-    export_duckdb_table(db, "events_bulk", out)
+    export_duckdb_table(db, "events_bulk", out, df.schema)
     return spark.read.parquet(out)
 
 
@@ -1081,7 +1081,7 @@ def etl_migrate_duckdb_roundtrip(spark, sf_dir):
     )
     mig.run(spark)
     out = os.path.join(tmp, "nation_back.parquet")
-    export_duckdb_table(db, "nation", out)
+    export_duckdb_table(db, "nation", out, t(spark, sf_dir, "nation").schema)
     return spark.read.parquet(out).select("n_nationkey", "n_name", "n_regionkey")
 
 

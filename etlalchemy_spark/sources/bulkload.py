@@ -467,8 +467,12 @@ def _insert(table: str, tmp: str, staged: DataFrame, loaded: DataFrame, dialect:
 
 
 def _duckdb_columns(con, table: str) -> list[str] | None:
-    """The table's column names in order; None when there is no such table."""
-    sql = "SELECT column_name FROM information_schema.columns WHERE table_name = ? ORDER BY ordinal_position"
+    """The table's column names in order; None when the current schema,
+    where the loads create their tables, has no such table."""
+    sql = (
+        "SELECT column_name FROM information_schema.columns "
+        "WHERE table_schema = current_schema() AND table_name = ? ORDER BY ordinal_position"
+    )
     return [r[0] for r in con.execute(sql, [table]).fetchall()] or None
 
 
@@ -482,14 +486,23 @@ def _load(
     table, decides, runs the exact pre-flight, drops or creates the
     table and copies the kept columns in; returns the table's row count.
 
+    Only ``error`` and ``append`` read the destination's columns before
+    the stage collect, since only they can refuse an existing table; an
+    ``overwrite`` reads nothing there, because its transaction's ``DROP
+    TABLE IF EXISTS`` then ``CREATE`` is the whole check. An unknown
+    mode is refused before anything is read or collected.
+
     Engine-specific: ``columns(con, table)`` reads the table's columns,
     ``fill(tmp, staged, data)`` is a context manager that makes the
     Arrow table ``data`` readable as the temporary table named ``tmp``
     and removes it on exit, ``rows_of(cursor)`` is the INSERT's own row
-    count, and ``writer`` is held for the pre-flight read and for the
-    transaction plus the count, never for the stage collect."""
-    with writer:
-        have = columns(con, table)
+    count, and ``writer`` is held for the ``error``/``append``
+    pre-flight read and for the transaction plus the count, never for
+    the stage collect."""
+    have = None
+    if mode in ("error", "append"):
+        with writer:
+            have = columns(con, table)
     _preflight(table, mode, have, df.columns, exact=not standardize_types)
     staged, data = _stage(df, standardize_types, ignored_suffixes)
     q = _quote_ident(table, dialect)
@@ -507,7 +520,6 @@ def _load(
                 _preflight(table, mode, have, loaded.columns)
                 if mode == "overwrite":
                     con.execute(f"DROP TABLE IF EXISTS {q}")
-                    have = None
                 if have is None:
                     con.execute(schema_ddl(loaded, table, dialect))
                 if data.num_rows:
@@ -538,13 +550,14 @@ def bulk_load_duckdb(
     ``INSERT … SELECT`` → the table's row count.
     ``mode``: overwrite (drop+create), append (create if absent;
     existing column names must match the loaded columns), error (fail
-    if table exists); any other mode is refused. Mode/existence checks
-    run before the stage collect so a doomed load fails before the
-    expensive work (only the exact append column match waits for the
-    standardizer's drops, and still runs before the destination is
-    touched); the stats, DROP, CREATE and INSERT run in one
-    transaction, so a failed load leaves the old table and its rows in
-    place.
+    if table exists); any other mode is refused before anything is
+    read. ``error`` and ``append`` read the table's columns before the
+    stage collect so a doomed load fails before the expensive work
+    (only the exact append column match waits for the standardizer's
+    drops, and still runs before the destination is touched);
+    ``overwrite`` reads no catalog before the collect. The stats, DROP,
+    CREATE and INSERT run in one transaction, so a failed load leaves
+    the old table and its rows in place.
 
     ``standardize_types`` applies the standardizer (T2–T4, T8, and T9
     for ``ignored_suffixes``) from stats computed in DuckDB over the
@@ -573,16 +586,23 @@ def bulk_load_duckdb(
         con.close()
 
 
-def export_duckdb_table(db_path: str, table: str, parquet_path: str) -> None:
+def export_duckdb_table(db_path: str, table: str, parquet_path: str, df_schema) -> None:
     """Read-back half of the roundtrip proof: the destination engine
-    exports what it loaded (native ``COPY TO``), and Spark re-reads it
-    for the hash comparison against the source."""
+    exports what it loaded (native ``COPY TO``) with the source's
+    logical types, and Spark re-reads it for the hash comparison
+    against the source. Spark ``timestamp`` columns were stored as the
+    load session's wall clock (the engine pins the session zone to
+    UTC), so they are written as UTC instants; ``timestamp_ntz`` stays
+    naive."""
     import duckdb
 
+    ts = [_quote_ident(f.name, "duckdb") for f in df_schema.fields if f.dataType.simpleString() == "timestamp"]
+    utc = ", ".join(f"timezone('UTC', {c}) AS {c}" for c in ts)
+    replace = f" REPLACE ({utc})" if ts else ""
     con = duckdb.connect(db_path)
     try:
         con.execute(
-            f"COPY {_quote_ident(table, 'duckdb')} TO "
+            f"COPY (SELECT *{replace} FROM {_quote_ident(table, 'duckdb')}) TO "
             f"'{_sql_str(parquet_path)}' (FORMAT PARQUET)"
         )
     finally:
@@ -675,8 +695,10 @@ def bulk_load_sqlite(
     stay distinct. A NaN in a float or double column is refused inside
     the transaction (SQLite would store NULL), so an existing table
     keeps its rows. Loads into one database file take turns on its
-    single writer for their reads and transaction, not for the stage
-    collect."""
+    single writer for their transaction and, in ``error`` and
+    ``append`` mode, for the pre-flight read of the table's columns;
+    an ``overwrite`` takes the writer only for its transaction, and no
+    load holds it for the stage collect."""
     import sqlite3
 
     con = sqlite3.connect(db_path, isolation_level=None)  # explicit BEGIN in _load

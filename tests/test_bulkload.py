@@ -87,8 +87,9 @@ def test_duckdb_roundtrip_doubles_bit_exact(spark, tmp_path):
     db = str(tmp_path / "d2.duckdb")
     bulk_load_duckdb(df, db, "doubles")
     out = str(tmp_path / "back.parquet")
-    export_duckdb_table(db, "doubles", out)
+    export_duckdb_table(db, "doubles", out, df.schema)
     back = spark.read.parquet(out)
+    assert back.dtypes == df.dtypes  # a parquet read marks every column nullable; `id` is not
     src = {r["id"]: r["v"] for r in df.collect()}
     got = {r["id"]: r["v"] for r in back.collect()}
     assert got == src
@@ -192,6 +193,26 @@ def test_duckdb_roundtrip_microsecond_timestamps(spark, tmp_path):
     con.close()
     assert got[1] == "2024-03-01 03:04:05.123456"
     assert got[2] == "2024-03-01 03:04:05.000001"
+
+
+def test_duckdb_roundtrip_keeps_timestamp_types(spark, tmp_path):
+    """``timestamp`` comes back as ``timestamp`` (exported as a UTC
+    instant) and ``timestamp_ntz`` stays naive, with every microsecond."""
+    df = spark.createDataFrame(
+        [(1, "2024-03-01 03:04:05.123456"), (2, "1970-01-01 00:00:00.000001"), (3, None)],
+        "id int, ts_s string",
+    ).select(
+        "id",
+        F.col("ts_s").cast("timestamp").alias("ts"),
+        F.col("ts_s").cast("timestamp_ntz").alias("tn"),
+    )
+    db = str(tmp_path / "tz.duckdb")
+    assert bulk_load_duckdb(df, db, "t") == 3
+    out = str(tmp_path / "back.parquet")
+    export_duckdb_table(db, "t", out, df.schema)
+    back = spark.read.parquet(out)
+    assert back.schema == df.schema
+    assert sorted(back.collect()) == sorted(df.collect())
 
 
 def test_timestamps_store_the_csv_stage_wall_clock(spark, tmp_path):

@@ -243,3 +243,91 @@ def test_destination_stats_decide_like_standardize(spark, tmp_path, load):
     assert (by_name["flag"].action, by_name["flag"].target_type) == ("cast", "boolean")
     assert report.rows == 3
     assert report.loaded.columns == ["id", "s1", "s2", "flag"]
+
+
+# --- what each mode reads before the stage collect ---------------------------
+
+
+def _no_catalog(monkeypatch):
+    def refuse(con, table):
+        raise AssertionError("an overwrite read the destination catalog")
+
+    monkeypatch.setattr(bulkload, "_duckdb_columns", refuse)
+    monkeypatch.setattr(bulkload, "_sqlite_columns", refuse)
+
+
+@pytest.mark.parametrize("load", [bulk_load_duckdb, bulk_load_sqlite], ids=["duckdb", "sqlite"])
+def test_overwrite_reads_no_catalog(spark, tmp_path, monkeypatch, load):
+    """An overwrite's transaction drops and creates the table itself, so
+    it reads no columns first, and still replaces the old rows."""
+    db = str(tmp_path / "over.db")
+    old = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+    assert load(old, db, "t") == 2
+    _no_catalog(monkeypatch)
+    new = spark.createDataFrame([(3, "c")], "id long, s string")
+    assert load(new, db, "t", mode="overwrite") == 1
+    assert _rows_of_t(load, db) == [(3, "c")]
+
+
+@pytest.mark.parametrize("load", [bulk_load_duckdb, bulk_load_sqlite], ids=["duckdb", "sqlite"])
+def test_doomed_loads_fail_before_the_collect(spark, tmp_path, monkeypatch, load):
+    """``error`` into an existing table and ``append`` with column drift
+    are refused by the pre-flight read, before the Spark job; an unknown
+    mode is refused before anything is read."""
+    db = str(tmp_path / "doomed.db")
+    old = spark.createDataFrame([(1, "a")], "id long, s string")
+    assert load(old, db, "t") == 1
+
+    def no_collect(self):
+        raise RuntimeError("the stage collect ran")
+
+    monkeypatch.setattr(type(old), "toArrow", no_collect)
+    with pytest.raises(ValueError, match="mode=error"):
+        load(old, db, "t", mode="error")
+    drifted = spark.createDataFrame([(1, "a")], "id long, renamed string")
+    with pytest.raises(ValueError, match="names must match as a set"):
+        load(drifted, db, "t", mode="append")
+    _no_catalog(monkeypatch)
+    with pytest.raises(ValueError, match="unknown mode"):
+        load(old, db, "t", mode="upsert")
+    monkeypatch.undo()
+    assert _rows_of_t(load, db) == [(1, "a")]
+
+
+@pytest.mark.parametrize("mode, reads", [("overwrite", 0), ("append", 3)])
+def test_duckdb_migration_catalog_reads(spark, tmp_path, monkeypatch, mode, reads):
+    """A whole-database overwrite reads the destination catalog 0 times;
+    an append reads it once per table, for its pre-flight."""
+    calls = []
+    real = bulkload._duckdb_columns
+
+    def counted(con, table):
+        calls.append(table)
+        return real(con, table)
+
+    monkeypatch.setattr(bulkload, "_duckdb_columns", counted)
+    reports, _ = Migration(
+        FileSource(SF_DIR, included_tables=["nation", "region", "supplier"]),
+        Target(str(tmp_path / "cat.duckdb"), fmt="duckdb", mode=mode),
+    ).run(spark)
+    assert sorted(r.table for r in reports) == ["nation", "region", "supplier"]
+    assert len(calls) == reads
+
+
+def test_duckdb_catalog_is_the_current_schema(spark, tmp_path):
+    """A table of the same name in another schema is not the load's
+    table: ``error`` loads into ``main`` and ``exists`` says no, so a
+    resume would not skip it."""
+    from etlalchemy_spark.migrate import _DuckDBSink
+
+    db = str(tmp_path / "schemas.duckdb")
+    con = duckdb.connect(db)
+    con.execute("CREATE SCHEMA other")
+    con.execute("CREATE TABLE other.t (x INTEGER)")
+    con.close()
+    sink = _DuckDBSink(Target(db, fmt="duckdb"), True, None)
+    assert not sink.exists(spark, "t")
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
+    assert bulk_load_duckdb(df, db, "t", mode="error") == 1
+    assert sink.exists(spark, "t")
+    assert _rows_of_t(bulk_load_duckdb, db) == [(1, "a")]

@@ -57,7 +57,8 @@ def test_duckdb_roundtrip_arbitrary_rows(spark, tmp_path_factory, rows):
     db = str(tmp / "p.duckdb")
     assert bulk_load_duckdb(df, db, "t") == len(rows)
     out = str(tmp / "back.parquet")
-    export_duckdb_table(db, "t", out)
+    export_duckdb_table(db, "t", out, df.schema)
+    assert spark.read.parquet(out).schema == df.schema
     back = {r["id"]: (r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()}
     src = {r["id"]: (r["k"], r["s"], r["v"]) for r in df.collect()}
     assert back == src
@@ -110,10 +111,8 @@ def test_append_maps_columns_by_name(spark, tmp_path_factory, rows, perm_seed):
         n = load(permuted, db, "t", mode="append")
         assert n == 2 * len(rows)
         out = str(tmp / f"back_{leg}.parquet")
-        if leg == "sqlite":
-            export(db, "t", out, df.schema)
-        else:
-            export(db, "t", out)
+        export(db, "t", out, df.schema)
+        assert spark.read.parquet(out).schema == df.schema, leg
         back = sorted(
             ((r["id"], r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()),
         )

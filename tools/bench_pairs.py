@@ -7,7 +7,16 @@ tree, alternating which side runs first so slow drift of the host hits
 both sides alike. Per end-to-end metric of ``BENCHMARK.json`` it prints
 each side's median and quartiles, how many pairs the working tree won,
 and whether the medians differ by more than the revision's quartile
-distance (IQR).
+distance (IQR), then one verdict:
+
+- ``gain``: the working tree won at least 9 of every 10 pairs and its
+  median is better by more than the revision's IQR;
+- ``worse``: its median is worse than the revision's by more than the
+  metric's relative ``bound`` in ``BENCHMARK.json``;
+- ``inside bound`` otherwise.
+
+A run whose result line says ``"correct": false`` stops the comparison
+with an error: its numbers time wrong output.
 
 Usage:
     python tools/bench_pairs.py --rev HEAD~1 --workload migrate_db --seed 1 --pairs 10
@@ -47,7 +56,11 @@ def run_once(root: str, args) -> dict:
     if out.returncode != 0:
         sys.stderr.write(out.stderr[-4000:])
         raise SystemExit(f"benchmark failed in {root} (exit {out.returncode})")
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    result = json.loads(out.stdout.strip().splitlines()[-1])
+    if not result["correct"]:
+        sys.stderr.write(out.stderr[-4000:])
+        raise SystemExit(f"benchmark in {root} verified wrong output (correct: false)")
+    return result
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -59,18 +72,25 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 def summarize(pairs: list[dict], metrics: list[dict]) -> list[str]:
     lines = [f"{'metric':<12} {'base median [q1, q3]':<34} {'change median [q1, q3]':<34} wins   >IQR"]
+    verdicts = []
     for m in metrics:
-        name, lower = m["name"], m["better"] == "lower"
+        name, sign = m["name"], 1 if m["better"] == "lower" else -1
         base = [p["base"]["metrics"][name]["value"] for p in pairs]
         new = [p["change"]["metrics"][name]["value"] for p in pairs]
-        wins = sum((n < b) if lower else (n > b) for b, n in zip(base, new))
+        wins = sum(sign * (n - b) < 0 for b, n in zip(base, new))
         (b1, bm, b3), (n1, nm, n3) = quartiles(base), quartiles(new)
         beyond = abs(nm - bm) > (b3 - b1)
         cells = [f"{med:.4g} [{q1:.4g}, {q3:.4g}]" for q1, med, q3 in ((b1, bm, b3), (n1, nm, n3))]
         lines.append(
             f"{name:<12} {cells[0]:<34} {cells[1]:<34} {wins:>2}/{len(pairs):<3} {'yes' if beyond else 'no'}"
         )
-    return lines
+        if wins >= 0.9 * len(pairs) and beyond and sign * (nm - bm) < 0:
+            verdicts.append(f"{name}: gain")
+        elif sign * (nm - bm) > m["bound"] * abs(bm):
+            verdicts.append(f"{name}: worse (bound {m['bound']:g})")
+        else:
+            verdicts.append(f"{name}: inside bound")
+    return lines + verdicts
 
 
 def main() -> int:
