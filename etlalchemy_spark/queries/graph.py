@@ -106,15 +106,17 @@ def _degrees(edges):
     )
 
 
-# Broadcast budget for |V|-sized frames in the iterative operators:
-# 2M nodes x ~24 B/row ≈ 48 MB framed — well inside executor broadcast
-# budgets and far under the 8 GB / 512M-row hard cap (guide §3.1).
+# Broadcast budget for the node frames of the iterative operators, in
+# rows: 2M rows x ~24 B/row ≈ 48 MB framed — well inside executor
+# broadcast budgets and far under the 8 GB / 512M-row hard cap (guide
+# §3.1).
 _BROADCAST_NODE_CAP = 2_000_000
 
 
-def _nodes_broadcastable(spark, sf_dir) -> bool:
-    """Size guard for broadcasting |V|-sized frames (labels, frontiers,
-    survivor sets, degree tables) in the iterative graph queries: the
+def _nodes_broadcastable(spark, sf_dir, rows_per_node: int = 1) -> bool:
+    """Size guard for broadcasting frames of up to ``rows_per_node`` x |V|
+    rows (labels, frontiers, survivor sets, degree tables; the landmark
+    frontier holds 4 rows per node) in the iterative graph queries: the
     node domain is l_partkey, so |V| is bounded by the part table's
     exact footer row count — a driver-side METADATA read, no job. The
     per-round node frames descend from localCheckpoints (no Catalyst
@@ -132,7 +134,7 @@ def _nodes_broadcastable(spark, sf_dir) -> bool:
         s = _scan_splits(p, _freshness_signature(p))
     except Exception:
         return False
-    return s is not None and s[0] <= _BROADCAST_NODE_CAP
+    return s is not None and s[0] * rows_per_node <= _BROADCAST_NODE_CAP
 
 
 _DEGREE_SQL = (
@@ -946,6 +948,10 @@ ORDER BY lm
 """
 
 
+# landmark count; the oracle's `seeds` CTE pins the same LIMIT 4
+_LANDMARKS = 4
+
+
 @register("graph_closeness_landmarks", oracle=_CLOSENESS_SQL, tags=("graph", "iterative"))
 def graph_closeness_landmarks(spark, sf_dir):
     """Landmark closeness + harmonic centrality (hop-truncated at 3) —
@@ -973,16 +979,19 @@ def graph_closeness_landmarks(spark, sf_dir):
     # checkpoint was a pure blocking job — the graph_bfs_hops r13
     # lesson applied here.
     seeds = (
-        sym.select(F.col("u").alias("node")).distinct().orderBy("node").limit(4)
+        sym.select(F.col("u").alias("node")).distinct().orderBy("node").limit(_LANDMARKS)
         .select(F.col("node").alias("lm"), "node")
         .localCheckpoint(eager=False)
     )
     visited = seeds.withColumn("hop", F.lit(0))
     frontier = seeds
-    # frontier/visited are (landmarks x |V|)-bounded: broadcast under
-    # the footer guard (4 x cap x ~24 B worst case, within budget) so
-    # the expand join and anti-join stream their big sides.
-    hint = F.broadcast if _nodes_broadcastable(spark, sf_dir) else (lambda d: d)
+    # frontier/visited hold up to landmarks x |V| rows: broadcast them
+    # only when that many rows fit the guard's budget, so the expand
+    # join and anti-join stream their big sides.
+    hint = (
+        F.broadcast if _nodes_broadcastable(spark, sf_dir, rows_per_node=_LANDMARKS)
+        else (lambda d: d)
+    )
     for h in (1, 2, 3):
         nxt = (
             sym.join(hint(frontier.withColumnRenamed("node", "u")), "u")

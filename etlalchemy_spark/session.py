@@ -6,6 +6,13 @@ coalescing), UTC session timezone for oracle parity, Arrow enabled for
 every Pandas-UDF exchange, and shuffle parallelism sized from the
 environment rather than Spark's legacy default of 200.
 
+Spark's Python daemon is the engine's own ``etlalchemy_spark.pyworker``:
+``pyspark.daemon`` plus one fix for CPython < 3.12, whose
+``importlib.invalidate_caches()`` at the start of every Python task
+re-reads ``pyspark.zip``, the py4j zip and the Spark jar (about 75 ms per
+task on a 4-CPU VM). A session built with another
+``spark.python.daemon.module`` loses only that saving.
+
 On a real cluster the same builder is used; only ``master`` and the
 memory/executor settings differ (supplied by spark-submit).
 """
@@ -58,27 +65,45 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` (driver contract) sizes local parallelism;
     shuffle partitions default to the core count locally — at cluster
     scale AQE coalesces from a deliberately-high initial number instead.
+
+    Python workers are forked by the engine's daemon module
+    (:mod:`etlalchemy_spark.pyworker`), which keeps CPython < 3.12 from
+    re-reading every zip archive on the worker path at the start of each
+    task (about 75 ms per task on a 4-CPU VM). An ``extra_conf`` value for
+    ``spark.python.daemon.module`` overrides it, and every Python task then
+    pays that cost again.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for k, v in session_conf(shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def session_conf(
+    shuffle_partitions: int, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The confs ``get_spark`` builds its session with; ``extra_conf``
+    entries override the defaults."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
         # Fixture `events.ts` is parquet TIMESTAMP(NANOS), which Spark
         # cannot represent; read as long and convert in the catalog
         # (integer ns→µs floor-division — matches DuckDB's scan-time
         # truncation of nanos).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.legacy.sizeOfNull", "false")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.legacy.sizeOfNull": "false",
         # Let the planner choose shuffled-hash join where the build side
         # fits its size conditions, and let AQE rewrite leftover
         # sort-merge joins whose post-shuffle partitions are small —
@@ -86,14 +111,12 @@ def get_spark(
         # sort-merge for oversized builds), so valid at any scale; the
         # 64 MB threshold bounds per-task build memory (clusters with
         # different task memory pass their own through extra_conf).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        # see get_spark's docstring and etlalchemy_spark/pyworker.py
+        "spark.python.daemon.module": "etlalchemy_spark.pyworker",
+    }
+    conf.update(extra_conf or {})
+    return conf

@@ -241,3 +241,26 @@ def test_driver_path_declines_float_weights_and_nulls(spark):
     )
     e = nl.selectExpr("src as _s", "dst as _d", "w as _w")
     assert G._collect_if_small(e) is None
+
+
+def test_closeness_landmarks_broadcast_guard_counts_landmark_rows(spark, monkeypatch):
+    """graph_closeness_landmarks broadcasts (landmark, node) frames of up
+    to 4 x |V| rows. With the cap between |V| and 4 x |V| it must decline
+    the hint, while a |V|-frame caller keeps it."""
+    import etlalchemy_spark.queries.graph as QG
+    from conftest import SF_DIR
+    from etlalchemy_spark.catalog import table_path
+
+    n_nodes = spark.read.parquet(table_path(SF_DIR, "part")).count()
+    monkeypatch.setattr(QG, "_BROADCAST_NODE_CAP", 2 * n_nodes)
+    decisions = []
+    guard = QG._nodes_broadcastable
+
+    def recording(spark, sf_dir, rows_per_node=1):
+        decisions.append(guard(spark, sf_dir, rows_per_node))
+        return decisions[-1]
+
+    monkeypatch.setattr(QG, "_nodes_broadcastable", recording)
+    QG.graph_closeness_landmarks(spark, SF_DIR)
+    QG.graph_common_neighbors_topk(spark, SF_DIR)
+    assert decisions == [False, True]
