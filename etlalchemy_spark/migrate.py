@@ -296,7 +296,8 @@ class _DbFileSink(_Sink):
     """An embedded database file loaded through the W3 native bulk path
     (sources/bulkload.py): one source read, by the Arrow handoff of the
     staged columns; the loader computes standardize's stats in the
-    destination and applies the decisions there."""
+    destination and applies the decisions there. A table is read back
+    as one Arrow table held on the driver."""
 
     sidecars: tuple[str, ...] = ()
 
@@ -304,6 +305,8 @@ class _DbFileSink(_Sink):
         for p in (self.t.path, *(self.t.path + s for s in self.sidecars)):
             if os.path.exists(p):
                 os.remove(p)
+        # the CSV stage directory versions before the Arrow handoff left
+        shutil.rmtree(self.t.path + ".csv_stage", ignore_errors=True)
 
     def manifest_path(self, source) -> str:
         return self.t.path + ".manifest.json"
@@ -330,18 +333,6 @@ class _DbFileSink(_Sink):
         )
         return report.rows, report.loaded, report.decisions if self.standardize_types else []
 
-    def read_back(self, spark: SparkSession, table: str) -> None:
-        # embedded db files aren't Spark-readable without an export
-        # round trip — too heavy for a validation epilogue; be loud
-        # instead of silent
-        log.warning(
-            "resume: FK validation for skipped table %s unavailable on a "
-            "%s target — re-run without resume to validate",
-            table,
-            self.t.fmt,
-        )
-        return None
-
 
 class _DuckDBSink(_DbFileSink):
     sidecars = (".wal",)
@@ -354,6 +345,9 @@ class _DuckDBSink(_DbFileSink):
     def _bulk_load(self, *args, **kwargs) -> int:
         return bulkload.bulk_load_duckdb(*args, **kwargs)
 
+    def read_back(self, spark: SparkSession, table: str) -> DataFrame:
+        return bulkload.read_duckdb_table(spark, self.t.path, table)
+
 
 class _SQLiteSink(_DbFileSink):
     sidecars = ("-journal", "-wal", "-shm")
@@ -365,6 +359,9 @@ class _SQLiteSink(_DbFileSink):
 
     def _bulk_load(self, *args, **kwargs) -> int:
         return bulkload.bulk_load_sqlite(*args, **kwargs)
+
+    def read_back(self, spark: SparkSession, table: str) -> DataFrame:
+        return bulkload.read_sqlite_table(spark, self.t.path, table)
 
 
 @dataclass
@@ -628,8 +625,7 @@ class Migration:
             # a resumed run skipped some tables, but skipping a LOAD must
             # not silently skip its VALIDATION: read skipped tables back
             # from the destination so every FK check a fresh run performs
-            # still runs (DuckDB and SQLite sinks cannot cheaply read back;
-            # they warn rather than stay silent).
+            # still runs, on every target.
             fk_tables = {t for fk in self.fks for t in (fk.table, fk.ref_table)}
             sides = {t: sink.read_back(spark, t) for t in fk_tables & skipped.keys()}
             sides.update(loaded)

@@ -756,8 +756,8 @@ def etl_bulk_load_roundtrip(spark, sf_dir):
     hands the table to the destination engine (embedded DuckDB, an
     in-process DBMS whose native bulk path is an Arrow scan) as one
     Arrow table, DuckDB creates the table and loads it in one
-    ``INSERT … SELECT`` from that Arrow table read in place, then
-    exports what it loaded; Spark re-reads that export and the oracle
+    ``INSERT … SELECT`` from that Arrow table read in place; the loaded
+    table comes back to Spark as one Arrow table and the oracle
     hash-compares it against the source table — proving the handoff
     (NULL vs '', quoting-free strings, exact doubles) is lossless.
     Postgres/MySQL get the dialect CSV plus the per-file statement
@@ -765,15 +765,12 @@ def etl_bulk_load_roundtrip(spark, sf_dir):
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
-    from etlalchemy_spark.sources.bulkload import bulk_load_duckdb, export_duckdb_table
+    from etlalchemy_spark.sources.bulkload import bulk_load_duckdb, read_duckdb_table
 
-    tmp = scratch_dir("bulkload", sf_dir)
-    db = os.path.join(tmp, "dest.duckdb")
-    out = os.path.join(tmp, "customer_back.parquet")
+    db = os.path.join(scratch_dir("bulkload", sf_dir), "dest.duckdb")
     df = t(spark, sf_dir, "customer")
     bulk_load_duckdb(df, db, "customer_bulk")
-    export_duckdb_table(db, "customer_bulk", out, df.schema)
-    return spark.read.parquet(out).select(
+    return read_duckdb_table(spark, db, "customer_bulk", df.schema).select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
 
@@ -977,17 +974,14 @@ def etl_bulk_load_events_roundtrip(spark, sf_dir):
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
-    from etlalchemy_spark.sources.bulkload import bulk_load_duckdb, export_duckdb_table
+    from etlalchemy_spark.sources.bulkload import bulk_load_duckdb, read_duckdb_table
 
-    tmp = scratch_dir("bulkload_events", sf_dir)
-    db = os.path.join(tmp, "dest.duckdb")
-    out = os.path.join(tmp, "events_back.parquet")
+    db = os.path.join(scratch_dir("bulkload_events", sf_dir), "dest.duckdb")
     df = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     bulk_load_duckdb(df, db, "events_bulk")
-    export_duckdb_table(db, "events_bulk", out, df.schema)
-    return spark.read.parquet(out)
+    return read_duckdb_table(spark, db, "events_bulk", df.schema)
 
 
 _BULK_SQLITE_SQL = """
@@ -1000,26 +994,23 @@ def etl_bulk_load_sqlite_roundtrip(spark, sf_dir):
     """W3's second EXECUTED destination engine: the same Arrow handoff
     drives stdlib sqlite3 through the ``.import``-equivalent (CREATE
     TABLE + batched positional INSERTs, read through a throwaway DuckDB
-    connection), then the destination exports what it loaded and the
-    oracle hash-compares it against the source — proving the sqlite
-    conventions (NULL vs '', decimals and dates as text) are
+    connection), then the loaded table comes back to Spark as one Arrow
+    table and the oracle hash-compares it against the source — proving
+    the sqlite conventions (NULL vs '', decimals and dates as text) are
     lossless."""
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
-    from etlalchemy_spark.sources.bulkload import bulk_load_sqlite, export_sqlite_table
+    from etlalchemy_spark.sources.bulkload import bulk_load_sqlite, read_sqlite_table
 
-    tmp = scratch_dir("bulkload_sqlite", sf_dir)
-    db = os.path.join(tmp, "dest.sqlite")
+    db = os.path.join(scratch_dir("bulkload_sqlite", sf_dir), "dest.sqlite")
     if os.path.exists(db):
         os.remove(db)
-    out = os.path.join(tmp, "orders_back.parquet")
     df = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
     bulk_load_sqlite(df, db, "orders_bulk")
-    export_sqlite_table(db, "orders_bulk", out, df.schema)
-    return spark.read.parquet(out)
+    return read_sqlite_table(spark, db, "orders_bulk", df.schema)
 
 
 _MIGRATE_SQLITE_SQL = """
@@ -1033,23 +1024,21 @@ def etl_migrate_sqlite_roundtrip(spark, sf_dir):
     drops the sqlite database file, reflects region, standardizes, and
     loads through the .import-equivalent bulk path (Arrow handoff +
     batched typed INSERTs via stdlib sqlite3); the loaded table is
-    exported back and hash-compared against the source."""
+    read back as one Arrow table and hash-compared against the
+    source."""
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
-    from etlalchemy_spark.sources.bulkload import export_sqlite_table
+    from etlalchemy_spark.sources.bulkload import read_sqlite_table
 
-    tmp = scratch_dir("migrate_sqlite", sf_dir)
-    db = os.path.join(tmp, "dest.sqlite")
+    db = os.path.join(scratch_dir("migrate_sqlite", sf_dir), "dest.sqlite")
     mig = Migration(
         source=FileSource(sf_dir, included_tables=["region"]),
         target=Target(db, fmt="sqlite", mode="error", drop_destination=True),
     )
     mig.run(spark)
-    out = os.path.join(tmp, "region_back.parquet")
     src_schema = t(spark, sf_dir, "region").schema
-    export_sqlite_table(db, "region", out, src_schema)
-    return spark.read.parquet(out).select("r_regionkey", "r_name")
+    return read_sqlite_table(spark, db, "region", src_schema).select("r_regionkey", "r_name")
 
 
 _MIGRATE_DUCK_SQL = """
@@ -1064,25 +1053,23 @@ def etl_migrate_duckdb_roundtrip(spark, sf_dir):
     ETLAlchemyTarget ≈L20–60), reflects nation+region, standardizes,
     and loads each table through the NATIVE bulk path (an Arrow
     handoff DuckDB reads in place, standardize's stats computed there);
-    the loaded nation table is exported
-    back and hash-compared against the source — the full
+    the loaded nation table is read back as one Arrow table and
+    hash-compared against the source — the full
     reflect→transform→bulk-load→verify lifecycle executed, not mocked."""
     import os
 
     from etlalchemy_spark.queries._util import scratch_dir
-    from etlalchemy_spark.sources.bulkload import export_duckdb_table
+    from etlalchemy_spark.sources.bulkload import read_duckdb_table
 
-    tmp = scratch_dir("migrate_duck", sf_dir)
-    db = os.path.join(tmp, "dest.duckdb")
+    db = os.path.join(scratch_dir("migrate_duck", sf_dir), "dest.duckdb")
     mig = Migration(
         source=FileSource(sf_dir, included_tables=["nation", "region"]),
         target=Target(db, fmt="duckdb", dialect="postgresql", mode="error",
                       drop_destination=True),
     )
     mig.run(spark)
-    out = os.path.join(tmp, "nation_back.parquet")
-    export_duckdb_table(db, "nation", out, t(spark, sf_dir, "nation").schema)
-    return spark.read.parquet(out).select("n_nationkey", "n_name", "n_regionkey")
+    src_schema = t(spark, sf_dir, "nation").schema
+    return read_duckdb_table(spark, db, "nation", src_schema).select("n_nationkey", "n_name", "n_regionkey")
 
 
 _MERGE_SQL = """

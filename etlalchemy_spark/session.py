@@ -45,7 +45,14 @@ REQUIRED_RUNTIME_CONFS: dict[str, str] = {
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's correctness-critical runtime confs to an
-    externally-created session (idempotent)."""
+    externally-created session (idempotent).
+
+    It cannot give such a session the engine's Python daemon:
+    ``spark.python.daemon.module`` is a static conf, so a session built
+    outside ``get_spark`` keeps the stock ``pyspark.daemon`` and its
+    Python tasks pay the per-task zip re-reads. Set
+    ``spark.python.daemon.module`` to ``etlalchemy_spark.pyworker`` on
+    the builder, before the session starts, to get it."""
     for k, v in REQUIRED_RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:

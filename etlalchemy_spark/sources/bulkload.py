@@ -41,7 +41,10 @@ deployment fans them out (one loader session per partition file, as
 ``mysqlimport --use-threads`` does). The embedded legs hold one table
 in the driver process, so Spark's ``spark.driver.maxResultSize``
 (default 1g) bounds one table's handoff; a larger table fails the
-load with Spark's error and leaves the destination as it was.
+load with Spark's error and leaves the destination as it was. The
+read-back (``read_duckdb_table``, ``read_sqlite_table``) holds one
+table on the driver the same way, as one Arrow table handed to
+``createDataFrame``.
 """
 
 from __future__ import annotations
@@ -142,9 +145,10 @@ _BULK_DDL_TYPES: dict[str, dict[str, str]] = {
         "binary": "BLOB",
     },
     # SQLite columns are affinity-typed; timestamps/dates/decimals are
-    # stored as TEXT (ISO-8601 / decimal strings) and re-typed on
-    # export — the lossless choice, since NUMERIC affinity would
-    # coerce them through float.
+    # stored as TEXT (ISO-8601 / decimal strings) and re-typed by the
+    # read-back (read_sqlite_table) from the frame's schema — the
+    # lossless choice, since NUMERIC affinity would coerce them through
+    # float.
     "sqlite": {
         "tinyint": "INTEGER",
         "smallint": "INTEGER",
@@ -181,7 +185,7 @@ def _ddl_type(dtype, dialect: str) -> str:
     s = dtype.simpleString()
     if s.startswith("decimal"):
         # sqlite NUMERIC affinity coerces through float — keep
-        # decimals as TEXT there (re-typed on export)
+        # decimals as TEXT there (re-typed by read_sqlite_table)
         return "TEXT" if dialect == "sqlite" else "DECIMAL" + s[len("decimal"):]
     return _BULK_DDL_TYPES[dialect].get(s, "VARCHAR" if dialect == "duckdb" else "TEXT")
 
@@ -586,29 +590,6 @@ def bulk_load_duckdb(
         con.close()
 
 
-def export_duckdb_table(db_path: str, table: str, parquet_path: str, df_schema) -> None:
-    """Read-back half of the roundtrip proof: the destination engine
-    exports what it loaded (native ``COPY TO``) with the source's
-    logical types, and Spark re-reads it for the hash comparison
-    against the source. Spark ``timestamp`` columns were stored as the
-    load session's wall clock (the engine pins the session zone to
-    UTC), so they are written as UTC instants; ``timestamp_ntz`` stays
-    naive."""
-    import duckdb
-
-    ts = [_quote_ident(f.name, "duckdb") for f in df_schema.fields if f.dataType.simpleString() == "timestamp"]
-    utc = ", ".join(f"timezone('UTC', {c}) AS {c}" for c in ts)
-    replace = f" REPLACE ({utc})" if ts else ""
-    con = duckdb.connect(db_path)
-    try:
-        con.execute(
-            f"COPY (SELECT *{replace} FROM {_quote_ident(table, 'duckdb')}) TO "
-            f"'{_sql_str(parquet_path)}' (FORMAT PARQUET)"
-        )
-    finally:
-        con.close()
-
-
 # --- executed sqlite leg ----------------------------------------------------
 #
 # The stdlib sqlite3 driver gives W3 a second EXECUTED leg: the
@@ -723,64 +704,74 @@ def bulk_load_sqlite(
         con.close()
 
 
-def export_sqlite_table(
-    db_path: str, table: str, parquet_path: str, df_schema
-) -> None:
-    """Read-back half of the sqlite roundtrip: export what the
-    destination loaded to parquet with the source's logical types
-    (timestamps/dates/decimals were stored as TEXT) so Spark re-reads
-    it for the hash comparison."""
-    import sqlite3
-    from datetime import date, datetime
-    from decimal import Decimal
+# --- read-back --------------------------------------------------------------
+#
+# A loaded table comes back to Spark as one Arrow table held on the
+# driver, as the load's handoff was: the roundtrip proofs and the
+# migration's FK check on resume-skipped tables read it this way.
 
+
+def _to_spark(spark, data, schema) -> DataFrame:
+    """The Arrow table ``data`` as a Spark DataFrame. With ``schema``,
+    the columns it names are read and Arrow casts them to its types.
+    Timestamps are made naive first (SQLite stores them as text). A
+    ``timestamp`` is the session-local wall clock the load stored, so it
+    is read in the session zone; a wall clock that a fall-back hour
+    repeats reads as the earlier instant. Without a schema, naive
+    timestamps read as ``timestamp_ntz`` and the other Arrow types map
+    to Spark's."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    _PA = {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-        "boolean": pa.bool_(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-        "string": pa.string(),
-        # the stored text is the load session's wall clock; the engine
-        # pins the session zone to UTC
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-        "date": pa.date32(),
-    }
-
-    def back(s: str, v):
-        if v is None:
-            return None
+    if schema is None:
+        return spark.createDataFrame(data, from_arrow_schema(data.schema, prefer_timestamp_ntz=True))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    cols = []
+    for f in schema.fields:
+        col, s = data.column(f.name), f.dataType.simpleString()
         if s in ("timestamp", "timestamp_ntz"):
-            return datetime.strptime(v, "%Y-%m-%d %H:%M:%S.%f")
-        if s == "date":
-            return date.fromisoformat(v)
-        if s == "boolean":
-            return bool(v)
-        if s.startswith("decimal"):
-            return Decimal(v)
-        return v
+            col = col.cast(pa.timestamp("us"))
+        if s == "timestamp":
+            col = pc.assume_timezone(col, tz, ambiguous="earliest")
+        cols.append(col)
+    return spark.createDataFrame(pa.table(cols, names=schema.names), schema)
 
-    con = sqlite3.connect(db_path)
+
+def read_duckdb_table(spark, db_path: str, table: str, schema=None) -> DataFrame:
+    """A DuckDB table as a Spark DataFrame: the file opened read-only,
+    the table taken as one Arrow table, the connection closed. ``schema``
+    (the loaded frame's, for a roundtrip proof) names the columns to
+    read and their Spark types."""
+    import duckdb
+
+    con = duckdb.connect(db_path, read_only=True)
     try:
-        rows = con.execute(
-            f"SELECT * FROM {_quote_ident(table, 'sqlite')}"
-        ).fetchall()
+        data = con.execute(f"SELECT * FROM {_quote_ident(table, 'duckdb')}").arrow()
     finally:
         con.close()
-    fields, arrays = [], []
-    for i, f in enumerate(df_schema.fields):
-        s = f.dataType.simpleString()
-        if s.startswith("decimal"):
-            p, sc = s[len("decimal("):-1].split(",")
-            typ = pa.decimal128(int(p), int(sc))
-        else:
-            typ = _PA.get(s, pa.string())
-        fields.append(pa.field(f.name, typ))
-        arrays.append(pa.array([back(s, r[i]) for r in rows], type=typ))
-    pq.write_table(pa.table(arrays, schema=pa.schema(fields)), parquet_path)
+    return _to_spark(spark, data, schema)
+
+
+def read_sqlite_table(spark, db_path: str, table: str, schema=None) -> DataFrame:
+    """A SQLite table as a Spark DataFrame, as ``read_duckdb_table``:
+    each column is built into Arrow from its declared type (INTEGER,
+    REAL, TEXT or BLOB, as the loader creates them; another declared
+    type is inferred from the values), so timestamps, dates and
+    decimals stored as TEXT take their types from ``schema``."""
+    import pathlib
+    import sqlite3
+
+    import pyarrow as pa
+
+    types = {"INTEGER": pa.int64(), "REAL": pa.float64(), "TEXT": pa.string(), "BLOB": pa.binary()}
+    q = _quote_ident(table, "sqlite")
+    con = sqlite3.connect(pathlib.Path(db_path).resolve().as_uri() + "?mode=ro", uri=True)
+    try:
+        declared = [(r[1], types.get(r[2].upper())) for r in con.execute(f"PRAGMA table_info({q})")]
+        rows = con.execute(f"SELECT * FROM {q}").fetchall()
+    finally:
+        con.close()
+    values = list(zip(*rows)) or [()] * len(declared)
+    data = pa.table({n: pa.array(v, type=t) for (n, t), v in zip(declared, values)})
+    return _to_spark(spark, data, schema)

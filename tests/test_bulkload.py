@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from etlalchemy_spark.sources.bulkload import (
     bulk_load_duckdb,
     bulk_load_statements,
-    export_duckdb_table,
     partition_files,
+    read_duckdb_table,
     schema_ddl,
 )
 from etlalchemy_spark.sources.files import write_csv_for_bulk_load
@@ -78,18 +78,16 @@ def test_duckdb_roundtrip_lossless(spark, tricky, tmp_path):
 
 
 def test_duckdb_roundtrip_doubles_bit_exact(spark, tmp_path):
-    # CSV is a TEXT format: shortest-round-trip double rendering must
-    # reparse to the identical bits
+    # the Arrow handoff and the Arrow read-back carry doubles as binary:
+    # every bit must come back, and so must the schema (nullability too)
     df = spark.range(1000).select(
         F.col("id").cast("int").alias("id"),
         (F.col("id") / 7.0 * 1.000000001).alias("v"),
     )
     db = str(tmp_path / "d2.duckdb")
     bulk_load_duckdb(df, db, "doubles")
-    out = str(tmp_path / "back.parquet")
-    export_duckdb_table(db, "doubles", out, df.schema)
-    back = spark.read.parquet(out)
-    assert back.dtypes == df.dtypes  # a parquet read marks every column nullable; `id` is not
+    back = read_duckdb_table(spark, db, "doubles", df.schema)
+    assert back.schema == df.schema
     src = {r["id"]: r["v"] for r in df.collect()}
     got = {r["id"]: r["v"] for r in back.collect()}
     assert got == src
@@ -110,7 +108,7 @@ def test_mode_semantics(spark, tmp_path):
 from etlalchemy_spark.sources.bulkload import (
     bcp_format_file,
     bulk_load_sqlite,
-    export_sqlite_table,
+    read_sqlite_table,
     sqlldr_control_file,
     write_loader_artifacts,
 )
@@ -196,8 +194,9 @@ def test_duckdb_roundtrip_microsecond_timestamps(spark, tmp_path):
 
 
 def test_duckdb_roundtrip_keeps_timestamp_types(spark, tmp_path):
-    """``timestamp`` comes back as ``timestamp`` (exported as a UTC
-    instant) and ``timestamp_ntz`` stays naive, with every microsecond."""
+    """``timestamp`` comes back as ``timestamp`` (the stored wall clock
+    read in the session zone) and ``timestamp_ntz`` stays naive, with
+    every microsecond."""
     df = spark.createDataFrame(
         [(1, "2024-03-01 03:04:05.123456"), (2, "1970-01-01 00:00:00.000001"), (3, None)],
         "id int, ts_s string",
@@ -208,9 +207,7 @@ def test_duckdb_roundtrip_keeps_timestamp_types(spark, tmp_path):
     )
     db = str(tmp_path / "tz.duckdb")
     assert bulk_load_duckdb(df, db, "t") == 3
-    out = str(tmp_path / "back.parquet")
-    export_duckdb_table(db, "t", out, df.schema)
-    back = spark.read.parquet(out)
+    back = read_duckdb_table(spark, db, "t", df.schema)
     assert back.schema == df.schema
     assert sorted(back.collect()) == sorted(df.collect())
 
@@ -259,6 +256,63 @@ def test_timestamps_store_the_csv_stage_wall_clock(spark, tmp_path):
     assert want[0][1].microsecond == 999999 and want_text[0][1] == "2024-03-10 01:59:59.999999"
 
 
+@pytest.mark.parametrize("leg", ["duckdb", "sqlite"])
+def test_roundtrip_timestamps_outside_utc(spark, tmp_path, leg):
+    """A ``timestamp`` comes back as the instant it was under a non-UTC
+    session zone: the load stores the session wall clock and the
+    read-back reads it in the same zone, so 11:04:05.123456 UTC is not
+    shifted by America/Los_Angeles' 8 hours. 01:30 PDT on the fall-back
+    day, a wall clock the next hour repeats, reads back as the earlier
+    instant, which is the one stored here."""
+    load, read = {
+        "duckdb": (bulk_load_duckdb, read_duckdb_table),
+        "sqlite": (bulk_load_sqlite, read_sqlite_table),
+    }[leg]
+    conf = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        df = spark.createDataFrame(
+            [(1, "2024-01-02T11:04:05.123456Z"), (2, "2024-07-01T19:00:00.000001Z"),
+             (3, "2024-11-03T08:30:00Z"), (4, None)],
+            "id int, ts_s string",
+        ).select("id", F.col("ts_s").cast("timestamp").alias("ts"))
+        db = str(tmp_path / f"la.{leg}")
+        assert load(df, db, "t") == 4
+        back = read(spark, db, "t", df.schema)
+        assert back.schema == df.schema
+        micros = lambda d: sorted(d.select("id", F.unix_micros("ts")).collect())
+        assert micros(back) == micros(df)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", conf)
+
+
+def test_read_back_without_a_schema_keeps_naive_timestamps(spark, tmp_path):
+    """With no schema (how a migration reads back a table it skipped on
+    resume, for the FK check), a DuckDB TIMESTAMP comes back as
+    ``timestamp_ntz``: a wall clock in a DST gap of the session zone
+    (02:30 on 2024-03-10 in America/Los_Angeles) is read as is instead
+    of raising. SQLite's TEXT comes back as text."""
+    from datetime import datetime
+
+    df = spark.createDataFrame([(1, "2024-03-10 02:30:00.000001")], "id int, s string").select(
+        "id", F.col("s").cast("timestamp_ntz").alias("tn")
+    )
+    duck, lite = str(tmp_path / "gap.duckdb"), str(tmp_path / "gap.sqlite")
+    assert bulk_load_duckdb(df, duck, "t") == 1
+    assert bulk_load_sqlite(df, lite, "t") == 1
+    conf = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        back = read_duckdb_table(spark, duck, "t")
+        assert back.dtypes == [("id", "int"), ("tn", "timestamp_ntz")]
+        assert [tuple(r) for r in back.collect()] == [(1, datetime(2024, 3, 10, 2, 30, 0, 1))]
+        back = read_sqlite_table(spark, lite, "t")
+        assert back.dtypes == [("id", "bigint"), ("tn", "string")]
+        assert [tuple(r) for r in back.collect()] == [(1, "2024-03-10 02:30:00.000001")]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", conf)
+
+
 def test_duckdb_append_rejects_schema_drift(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "id int, s string")
     db = str(tmp_path / "drift.duckdb")
@@ -305,9 +359,7 @@ def test_sqlite_roundtrip_lossless(spark, tmp_path):
     db = str(tmp_path / "dest.sqlite")
     n = bulk_load_sqlite(df, db, "tricky")
     assert n == 7
-    out = str(tmp_path / "back.parquet")
-    export_sqlite_table(db, "tricky", out, df.schema)
-    back = spark.read.parquet(out)
+    back = read_sqlite_table(spark, db, "tricky", df.schema)
     assert back.schema == df.schema
     src = {tuple(r) for r in df.collect()}
     got = {tuple(r) for r in back.collect()}

@@ -1,7 +1,7 @@
 """Property-based roundtrip proof for BOTH executed bulk-load legs:
 arbitrary text (quotes, delimiters, newlines, unicode, the NULL
 marker as literal data) and arbitrary doubles must survive
-Spark CSV stage → native loader → export → Spark re-read bit-exactly.
+the Arrow handoff → native loader → Arrow read-back bit-exactly.
 The example-based tests in test_bulkload.py pin known hazards; this
 one searches for unknown ones."""
 
@@ -12,8 +12,8 @@ from hypothesis import strategies as st
 from etlalchemy_spark.sources.bulkload import (
     bulk_load_duckdb,
     bulk_load_sqlite,
-    export_duckdb_table,
-    export_sqlite_table,
+    read_duckdb_table,
+    read_sqlite_table,
 )
 
 # printable-ish unicode incl. the CSV hazard characters; no NUL (text
@@ -56,10 +56,9 @@ def test_duckdb_roundtrip_arbitrary_rows(spark, tmp_path_factory, rows):
     df = spark.createDataFrame(data, "id int, k string, s string, v double")
     db = str(tmp / "p.duckdb")
     assert bulk_load_duckdb(df, db, "t") == len(rows)
-    out = str(tmp / "back.parquet")
-    export_duckdb_table(db, "t", out, df.schema)
-    assert spark.read.parquet(out).schema == df.schema
-    back = {r["id"]: (r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()}
+    read = read_duckdb_table(spark, db, "t", df.schema)
+    assert read.schema == df.schema
+    back = {r["id"]: (r["k"], r["s"], r["v"]) for r in read.collect()}
     src = {r["id"]: (r["k"], r["s"], r["v"]) for r in df.collect()}
     assert back == src
 
@@ -76,9 +75,9 @@ def test_sqlite_roundtrip_arbitrary_rows(spark, tmp_path_factory, rows):
     df = spark.createDataFrame(data, "id int, k string, s string, v double")
     db = str(tmp / "p.sqlite")
     assert bulk_load_sqlite(df, db, "t") == len(rows)
-    out = str(tmp / "back.parquet")
-    export_sqlite_table(db, "t", out, df.schema)
-    back = {r["id"]: (r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()}
+    read = read_sqlite_table(spark, db, "t", df.schema)
+    assert read.schema == df.schema
+    back = {r["id"]: (r["k"], r["s"], r["v"]) for r in read.collect()}
     # lossless: DuckDB's read_csv keeps '' and NULL apart
     src = {r["id"]: (r["k"], r["s"], r["v"]) for r in df.collect()}
     assert back == src
@@ -102,19 +101,16 @@ def test_append_maps_columns_by_name(spark, tmp_path_factory, rows, perm_seed):
     perm = list(itertools.permutations(df.columns))[perm_seed % 24]
     permuted = df.select(*perm)
 
-    for leg, load, export, ext in (
-        ("duckdb", bulk_load_duckdb, export_duckdb_table, "duckdb"),
-        ("sqlite", bulk_load_sqlite, export_sqlite_table, "sqlite"),
+    for leg, load, read in (
+        ("duckdb", bulk_load_duckdb, read_duckdb_table),
+        ("sqlite", bulk_load_sqlite, read_sqlite_table),
     ):
-        db = str(tmp / f"p.{ext}")
+        db = str(tmp / f"p.{leg}")
         assert load(df, db, "t") == len(rows)
         n = load(permuted, db, "t", mode="append")
         assert n == 2 * len(rows)
-        out = str(tmp / f"back_{leg}.parquet")
-        export(db, "t", out, df.schema)
-        assert spark.read.parquet(out).schema == df.schema, leg
-        back = sorted(
-            ((r["id"], r["k"], r["s"], r["v"]) for r in spark.read.parquet(out).collect()),
-        )
+        back = read(spark, db, "t", df.schema)
+        assert back.schema == df.schema, leg
+        back = sorted((r["id"], r["k"], r["s"], r["v"]) for r in back.collect())
         src = sorted((r["id"], r["k"], r["s"], r["v"]) for r in df.collect())
         assert back == sorted(src + src)  # both loads landed identically

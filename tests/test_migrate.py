@@ -328,10 +328,11 @@ def test_resume_reverifies_destination_existence(spark, tmp_path):
     assert os.path.exists(tmp_path / "dest" / "nation.parquet")
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "jdbc"])
+@pytest.mark.parametrize("fmt", ["parquet", "jdbc", "duckdb", "sqlite"])
 def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path, fmt):
     """Skipping a LOAD on resume must not silently skip its FK
-    VALIDATION: skipped tables are read back from the destination."""
+    VALIDATION: skipped tables are read back from the destination, on
+    every target."""
     import etlalchemy_spark.migrate as migmod
 
     if fmt == "jdbc":
@@ -339,6 +340,8 @@ def test_resume_still_validates_fks_for_skipped_tables(spark, tmp_path, fmt):
             f"jdbc:derby:memory:{tmp_path.name};create=true", fmt="jdbc", mode="error",
             manifest_path=str(tmp_path / "manifest.json"),
         )
+    elif fmt in ("duckdb", "sqlite"):
+        target = Target(str(tmp_path / f"dest.{fmt}"), fmt=fmt, mode="error")
     else:
         target = Target(str(tmp_path), mode="error")
 
@@ -394,11 +397,15 @@ def test_drop_destination_removes_sqlite_file_and_sidecars(spark, tmp_path):
 @pytest.mark.parametrize("fmt", ["duckdb", "sqlite"])
 def test_bulk_migration_writes_no_stage_files(spark, tmp_path, fmt):
     """DuckDB and SQLite targets take each table as Arrow: a migration
-    leaves the database file and its manifest, and no CSV stage."""
+    leaves the database file and its manifest, and no CSV stage. A
+    ``{db}.csv_stage`` directory that versions before the Arrow handoff
+    left goes with ``drop_destination``."""
     db = str(tmp_path / f"dest.{fmt}")
+    os.makedirs(os.path.join(db + ".csv_stage", "region"))
+    open(os.path.join(db + ".csv_stage", "region", "part-00000.csv"), "w").close()
     reports, _ = Migration(
         source=FileSource(SF_DIR, included_tables=["region", "nation"]),
-        target=Target(db, fmt=fmt),
+        target=Target(db, fmt=fmt, drop_destination=True),
     ).run(spark)
     assert {r.table: r.n_rows for r in reports} == {"nation": 25, "region": 5}
     assert not os.path.exists(db + ".csv_stage")
